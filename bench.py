@@ -202,6 +202,9 @@ def main() -> int:
         "value_normalized": round(sum(normalized(timings, factor).values()), 3),
         "queries_normalized": normalized(timings, factor),
         "sf": sf,
+        # lets previous_sentinels match a committed direct-run artifact
+        # to runs at the same core count
+        "cpus": cpus,
     }))
     return 0
 

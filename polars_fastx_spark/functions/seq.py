@@ -23,6 +23,9 @@ Exact semantics preserved (SURVEY.md §2.8):
 - ``kmer_frequencies``: overlapping k-mers (fastx_parsers.py:58),
   uppercased, 'N'-containing skipped, relative frequencies, empty map
   when ``len < k``.
+- Both maps take their tokens from one regex pass per row (O(len)),
+  each token uppercased on its own like the reference's
+  ``seq[i:i+k].upper()``; positions are code points, as in Python.
 - ``generate_hash``: md5 hexdigest of UTF-8 bytes truncated to the first
   ``length`` hex chars (fastx_parsers.py:47-48).
 
@@ -96,14 +99,17 @@ def _freq_map(tokens: Column) -> Column:
     """tokens array<string> → map<token, relative_frequency>.
 
     Run-length counting over a sorted copy: O(n log n) per row and ~4n
-    lambda evaluations (higher-order functions are interpreted, not
-    codegen'd, so per-element cost matters — a naive
-    count-each-distinct scheme is O(n·d) and collapses on
-    high-cardinality token sets like text k-mers). Row-local and
+    lambda evaluations, n = number of tokens (higher-order functions
+    are interpreted, not codegen'd, so per-element cost matters — a
+    naive count-each-distinct scheme is O(n·d) and collapses on
+    high-cardinality token sets like text k-mers). The sort is
+    ``sort_array`` (a native comparator), not ``array_sort``, whose
+    comparator is an interpreted lambda; the tokens are null-free after
+    the 'N' filter, so both give the same order. Row-local and
     shuffle-free, so it parallelizes embarrassingly at any scale; keys
     come out sorted, giving deterministic to_json renderings.
     """
-    srt_expr = F.array_sort(F.filter(tokens, lambda x: ~x.contains("N")))
+    srt_expr = F.sort_array(F.filter(tokens, lambda x: ~x.contains("N")))
 
     # Run-length over the sorted array in O(n): boundary positions →
     # zip starts with ends → one struct per distinct token.
@@ -162,33 +168,53 @@ def _freq_map(tokens: Column) -> Column:
     return F.element_at(F.transform(F.array(srt_expr), _build), 1)
 
 
+def _tokens(c: Column | str, pattern: str) -> Column:
+    """Every group-1 capture of ``pattern`` in one left-to-right regex
+    pass, each token uppercased on its own.
+
+    One pass is O(len) per row. The per-position alternative,
+    ``substring(col, i, k)`` for every start ``i``, is O(len²): Spark
+    strings are UTF-8, so each substring walks the bytes from the start
+    of the string to reach code point ``i``. Uppercasing per token, not
+    the whole string first, matches the reference's
+    ``seq[i:i+k].upper()``: a character that grows when uppercased
+    (``ß`` → ``SS``) would otherwise shift every later token.
+    """
+    return F.transform(
+        F.regexp_extract_all(_col(c), F.lit(pattern), 1), lambda t: F.upper(t)
+    )
+
+
 def codon_usage(c: Column | str) -> Column:
     """Relative frequencies of non-overlapping frame-0 codons (K5).
 
     map<string,double>; uppercased; codons containing 'N' skipped; empty
-    map when the sequence holds no complete codon.
+    map when the sequence holds no complete codon (null input included).
+    The codons are the ``floor(len/3)`` matches of ``(?s)(.{3})`` — one
+    regex pass, O(len) per row; see :func:`_tokens` for why one
+    substring per codon was O(len²).
     """
-    col = _col(c)
-    n = F.floor(F.length(col) / 3).cast("int")
-    idx = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    codons = F.transform(idx, lambda i: F.upper(F.substring(col, i * 3 + 1, 3)))
-    return _freq_map(codons)
+    return _freq_map(_tokens(c, "(?s)(.{3})"))
 
 
 def kmer_frequencies(c: Column | str, k: int = 3) -> Column:
     """Relative frequencies of overlapping k-mers (K6).
 
-    map<string,double>; empty map when ``len(seq) < k``.
+    map<string,double>; uppercased; k-mers containing 'N' skipped; empty
+    map when ``len(seq) < k`` (null input included). Each match of
+    ``(?s)(?=(.{k})).`` captures the k-mer at one start in a lookahead
+    and then consumes exactly one code point, so one regex pass yields
+    all ``len - k + 1`` k-mers in O(len) per row (len·k character steps
+    for the fixed k); see :func:`_tokens` for why one substring per
+    start was O(len²). The consumed ``.`` keeps starts on code points: a
+    bare zero-width ``(?=(.{k}))`` makes the matcher step one UTF-16
+    unit after each match, which lands inside the surrogate pair of a
+    non-BMP character (e.g. an emoji) and emits extra k-mers beginning
+    with a lone surrogate.
     """
-    col = _col(c)
-    last = F.length(col) - F.lit(k) + 1  # 1-based start of last kmer
-    idx = F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
-        F.array().cast("array<int>")
-    )
-    kmers = F.transform(idx, lambda i: F.upper(F.substring(col, i, k)))
-    return _freq_map(kmers)
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    return _freq_map(_tokens(c, f"(?s)(?=(.{{{int(k)}}}))."))
 
 
 def reverse_complement(c: Column | str) -> Column:
@@ -235,7 +261,9 @@ def translate_protein(c: Column | str) -> Column:
     # a 64-entry MAP literal, and O(1) char access through a split-once
     # char array instead of substring(s, i*3+1, 3) — UTF8 substring
     # walks bytes to the char offset, so per-codon substrings into the
-    # full sequence are O(position) each, O(len²) per row in total.
+    # full sequence are O(position) each, O(len²) per row in total
+    # (the cost codon_usage/kmer_frequencies avoid with one regex pass,
+    # see _tokens).
     aa_by_index = F.array(
         *[
             F.lit(CODON_TABLE[b1 + b2 + b3])

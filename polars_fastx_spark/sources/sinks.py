@@ -95,6 +95,8 @@ def write_fastx(
     storage (this repo's posture); route through a Hadoop codec for
     HDFS/S3 deployments.
     """
+    if wrap is not None and wrap < 0:
+        raise ValueError(f"wrap must be >= 0, got {wrap}")
     # concat_ws SKIPS nulls — a null sequence/quality would emit a
     # 3-line FASTQ record and corrupt the file for every downstream
     # reader (FASTQ is parsed BY LENGTH: quality must have exactly
@@ -132,16 +134,10 @@ def write_fastx(
     else:
         seq = F.col("sequence")
         if wrap:
+            # one regex pass, O(len) per record: one substring per line
+            # walks the UTF-8 bytes from the start each time, O(len²/wrap)
             seq = F.array_join(
-                F.transform(
-                    F.sequence(
-                        F.lit(0),
-                        F.greatest(
-                            (F.length("sequence") - 1) / wrap, F.lit(0)
-                        ).cast("int"),
-                    ),
-                    lambda i: F.substring("sequence", i * wrap + 1, wrap),
-                ),
+                F.regexp_extract_all(seq, F.lit(f"(?s)(.{{1,{int(wrap)}}})"), 1),
                 "\n",
             )
         rec = F.concat_ws(

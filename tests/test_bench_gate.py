@@ -107,6 +107,24 @@ def test_bench_previous_sentinels_picks_latest_with_block(tmp_path):
     assert bench.previous_sentinels(tmp_path) == (None, {})
 
 
+def test_bench_previous_sentinels_skips_other_core_count(tmp_path):
+    """A direct-run artifact (bench.py's own JSON line, with its
+    ``cpus``) is a drift reference only for runs at the same core count."""
+    import json
+
+    import bench
+
+    (tmp_path / "BENCH_r08.json").write_text(
+        json.dumps({"sentinels": {"p_filter_project": 0.5}, "cpus": "4"})
+    )
+    (tmp_path / "BENCH_r09.json").write_text(
+        json.dumps({"sentinels": {"p_filter_project": 0.9}, "cpus": "8"})
+    )
+    assert bench.previous_sentinels(tmp_path, cpus="4")[0] == "BENCH_r08"
+    assert bench.previous_sentinels(tmp_path, cpus="8")[0] == "BENCH_r09"
+    assert bench.previous_sentinels(tmp_path, cpus="32") == (None, {})
+
+
 def test_bench_suite_and_sentinels_disjoint():
     """The drift estimate must come from queries the headline suite
     does not itself time (a suite regression would otherwise shift

@@ -221,6 +221,53 @@ def test_write_fastx_roundtrip_fasta(spark, tmp_path):
         assert sorted(map(tuple, back.collect())) == want
 
 
+def test_write_fastx_wrap_matches_substring_per_line(spark, tmp_path):
+    """The one-pass line wrap writes the same bytes as the former
+    substring-per-line expression, kept here as the reference, on the
+    edge records: empty, null, exactly ``wrap``, ``wrap + 1``, one
+    record over 100 kb, and a non-BMP character straddling a line end."""
+    from pyspark.sql import functions as F
+
+    from polars_fastx_spark.sources.sinks import write_fastx
+
+    wrap = 60
+    seqs = ["", None, "A" * wrap, "C" * (wrap + 1),
+            "ACGTN" * 20_001, "G" * (wrap - 1) + "😀T" + "😀" * wrap]
+    df = spark.createDataFrame(
+        [(f"r{i}", s) for i, s in enumerate(seqs)],
+        "header string, sequence string",
+    ).coalesce(1)
+
+    seq = F.coalesce(F.col("sequence"), F.lit(""))
+    legacy = F.array_join(
+        F.transform(
+            F.sequence(
+                F.lit(0),
+                F.greatest((F.length(seq) - 1) / wrap, F.lit(0)).cast("int"),
+            ),
+            lambda i: F.substring(seq, i * wrap + 1, wrap),
+        ),
+        "\n",
+    )
+    want = "".join(
+        r["v"] + "\n"
+        for r in df.select(
+            F.concat_ws("\n", F.concat(F.lit(">"), "header"), legacy).alias("v")
+        ).collect()
+    )
+
+    out = tmp_path / "wrapped"
+    write_fastx(df, str(out), wrap=wrap)
+    (part,) = out.glob("part-*.txt")
+    assert part.read_bytes() == want.encode("utf-8")
+    # sanity on the reference itself: 60 code points per full line
+    lines = want.split("\n")
+    assert lines[lines.index(">r5") + 1] == "G" * (wrap - 1) + "😀"
+    # a negative width used to drop every sequence silently
+    with pytest.raises(ValueError, match="wrap must be >= 0"):
+        write_fastx(df, str(tmp_path / "bad"), wrap=-1)
+
+
 def test_write_fastx_roundtrip_fastq_gzip(spark, tmp_path):
     from polars_fastx_spark.sources.fastx import scan_fastx
     from polars_fastx_spark.sources.sinks import write_fastx

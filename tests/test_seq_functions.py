@@ -309,3 +309,42 @@ def test_translate_and_orf_propagate_null(spark):
     assert got[0] == (None, None)
     assert got[1] == ("M*", 6)
     assert got[2] == ("", 0)
+
+
+#: rows whose code points and case mapping trip position arithmetic:
+#: null, shorter than k, lowercase with N, embedded newline, characters
+#: that grow when uppercased (ß -> SS, ﬁ -> FI) and non-BMP emoji
+#: (two UTF-16 units, one code point)
+CODE_POINT_ROWS = [None, "", "A", "AC", "acgtnNACGTacgn", "AC\nGT\nNAC",
+                   "straße straße", "ßßßß", "ﬁﬁﬁacg", "😀ACG😀T"]
+
+
+def test_codon_kmer_code_point_parity(spark):
+    """codon_usage and kmer_frequencies (k = 1, 3, 4) equal the Python
+    reference exactly, code point for code point; null gives the empty
+    map. The k-mer regex must consume one code point per match: the
+    bare zero-width lookahead steps into the emoji's surrogate pair and
+    emits extra k-mers, which the last assertion pins."""
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(CODE_POINT_ROWS)], "i int, s string"
+    )
+    ks = (1, 3, 4)
+    bare = sq._freq_map(sq._tokens("s", "(?s)(?=(.{3}))"))
+    rows = df.select(
+        "i",
+        sq.codon_usage("s").alias("codons"),
+        *[sq.kmer_frequencies("s", k).alias(f"k{k}") for k in ks],
+        bare.alias("bare3"),
+    ).orderBy("i").collect()
+    for s, r in zip(CODE_POINT_ROWS, rows):
+        assert r["codons"] == (ref._codons_dict(s) or {}), repr(s)
+        for k in ks:
+            assert r[f"k{k}"] == (ref._kmers_dict(s, k) or {}), (repr(s), k)
+    emoji = rows[CODE_POINT_ROWS.index("😀ACG😀T")]
+    assert emoji["bare3"] != ref._kmers_dict("😀ACG😀T", 3)
+    assert any(key.startswith("?") for key in emoji["bare3"])
+
+
+def test_kmer_frequencies_rejects_k_below_one():
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        sq.kmer_frequencies("s", 0)
