@@ -21,6 +21,9 @@ those capabilities Spark-first:
   pipeline (reference: src/polars_fastx/fastx_parsers.py:137-223).
 """
 
+# first: in a Spark Python worker this stops every later call re-reading
+# pyspark.zip and the spark-core jar (see _zipcache)
+import polars_fastx_spark._zipcache  # noqa: F401
 from polars_fastx_spark.session import get_spark, stop_spark
 from polars_fastx_spark.functions import seq
 from polars_fastx_spark.sources.fastx import scan_fastx, read_fastx

@@ -1,0 +1,82 @@
+"""Skip re-reading unchanged zip archives when a Spark Python worker
+invalidates its import caches.
+
+Cause. Before every call a Spark Python worker runs
+``importlib.invalidate_caches()`` (``pyspark.worker_util.setup_spark_files``),
+so that files added with ``addPyFile`` become importable. On Python
+3.10-3.12 ``zipimport.zipimporter.invalidate_caches`` then re-reads the
+whole central directory of its archive. A worker's path starts with
+``pyspark.zip`` (~1.3k entries) and the spark-core jar (~5.4k entries), and
+every subpackage imported from them has its own importer, so one call re-reads
+about 16 directories, ~27k records. Inside a reused worker on a 4-vCPU VM
+that costs 0.1-0.2 s per call, and every Python round trip pays it:
+executor tasks (``mapInPandas``, pandas UDFs, a data source's ``read``)
+and the data source's planning calls (``schema``, ``partitions``,
+``pushFilters``) alike. One ``fasta_stats`` pass makes about four of them.
+
+Fix. This module wraps the method so that an importer re-reads its
+archive only when the archive's ``(st_mtime_ns, st_size, st_ino)``
+signature differs from the one recorded when zipimport's cached directory
+for that archive was last read, or when that cached directory is no
+longer the one recorded. Otherwise the importer takes the cached
+directory, which is what a re-read would have produced. All importers of
+one archive share that directory, so a changed archive is read once, not
+once per importer, and an unchanged call takes ~0.2 ms.
+
+Why the stat key is safe. Rewriting an archive, whether in place or by
+renaming a new file over it, changes its size, its mtime or its inode; an
+archive that cannot be stat'ed, or that fails to read, falls through to
+the original method, which drops it from the cache as before. The
+signature is taken before the read, so a write that races the read leaves
+a recorded signature older than the file, and the next call reads again.
+Only an in-place rewrite to the same size within one mtime tick goes
+unnoticed; nothing rewrites ``pyspark.zip`` or a jar under a running
+worker.
+
+Where it applies. The wrapper is installed when this package is imported
+inside a Spark Python worker, recognised by ``PYTHON_WORKER_FACTORY_SECRET``
+in the environment (Spark sets it for the daemon and every worker it
+starts, executor and planner workers alike); the driver keeps the
+original method. A worker imports this package when it unpickles code
+from it, and keeps the wrapper for the rest of its reused life. The saving
+therefore does not apply to a worker's first call, whose invalidation runs
+before it unpickles anything, nor to workers that never import the
+package. On Python 3.13+, where ``invalidate_caches`` only drops the
+cached directory and later imports read it lazily, the wrapper records
+nothing and always calls the original.
+"""
+
+from __future__ import annotations
+
+import os
+import zipimport
+
+_original = zipimport.zipimporter.invalidate_caches
+
+#: archive path -> (stat signature, the directory dict read at it)
+_read_at: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+
+def _invalidate_caches(self: zipimport.zipimporter) -> None:
+    archive = self.archive
+    cache = zipimport._zip_directory_cache
+    seen = _read_at.pop(archive, None)
+    try:
+        st = os.stat(archive)
+    except OSError:
+        _original(self)
+        return
+    sig = (st.st_mtime_ns, st.st_size, st.st_ino)
+    if seen is not None and seen[0] == sig and seen[1] is cache.get(archive):
+        _read_at[archive] = seen
+        self._files = seen[1]
+        return
+    _original(self)
+    files = cache.get(archive)
+    # the read succeeded (3.10-3.12: the importer holds the cached dict)
+    if files is not None and getattr(self, "_files", None) is files:
+        _read_at[archive] = (sig, files)
+
+
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    zipimport.zipimporter.invalidate_caches = _invalidate_caches

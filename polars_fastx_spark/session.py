@@ -23,6 +23,7 @@ Defaults are chosen for oracle parity (SURVEY.md §4.4) and 100 TB posture
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -126,6 +127,22 @@ def get_spark(app_name: str = "polars_fastx_spark",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Get or create the engine's SparkSession."""
     return builder(app_name, extra_conf=extra_conf).getOrCreate()
+
+
+#: session -> names of the Python data sources registered on it. Weak
+#: keys, so a new session that reuses a collected session's ``id()`` is
+#: not mistaken for it.
+_DATA_SOURCES: weakref.WeakKeyDictionary[SparkSession, set[str]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def register_data_source(spark: SparkSession, source: type) -> None:
+    """Register a Python data source class on ``spark`` once."""
+    names = _DATA_SOURCES.setdefault(spark, set())
+    if source.name() not in names:
+        spark.dataSource.register(source)
+        names.add(source.name())
 
 
 def stop_spark() -> None:

@@ -50,6 +50,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from polars_fastx_spark.session import register_data_source
 from polars_fastx_spark.sources import parser
 
 FASTX_EXTENSIONS = (
@@ -247,15 +248,9 @@ class FastxDataSource(DataSource):
         return FastxReader(paths, "quality" in schema.fieldNames(), split)
 
 
-_REGISTERED: set[int] = set()
-
-
 def register(spark: SparkSession) -> None:
     """Idempotently register the fastx data source on this session."""
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.dataSource.register(FastxDataSource)
-        _REGISTERED.add(key)
+    register_data_source(spark, FastxDataSource)
 
 
 def scan_fastx(

@@ -57,6 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from polars_fastx_spark.session import register_data_source
+
 DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
 _GZ_MAGIC = b"\x1f\x8b\x08"
 
@@ -527,15 +529,9 @@ class WarcDataSource(DataSource):
         return WarcReader(_expand_paths(path), split)
 
 
-_REGISTERED: set[int] = set()
-
-
 def register(spark: SparkSession) -> None:
     """Idempotently register the warc data source on this session."""
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.dataSource.register(WarcDataSource)
-        _REGISTERED.add(key)
+    register_data_source(spark, WarcDataSource)
 
 
 def scan_warc(

@@ -30,6 +30,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from polars_fastx_spark.session import register_data_source
 from polars_fastx_spark.sources import warc as warc_batch
 
 
@@ -96,14 +97,8 @@ class WarcStreamDataSource(DataSource):
         return WarcStreamReader(path)
 
 
-_REGISTERED: set[int] = set()
-
-
 def register(spark: SparkSession) -> None:
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.dataSource.register(WarcStreamDataSource)
-        _REGISTERED.add(key)
+    register_data_source(spark, WarcStreamDataSource)
 
 
 def stream_warc(spark: SparkSession, path: str):

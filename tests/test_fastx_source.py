@@ -10,8 +10,10 @@ from tests.conftest import FIXTURES
 
 from polars_fastx_spark.sources import parser
 from polars_fastx_spark.sources.fastx import (
+    FastxDataSource,
     parse_fasta_relational,
     read_fastx,
+    register,
     scan_fastx,
 )
 
@@ -108,6 +110,33 @@ def test_eager_read(spark, golden):
     assert df.is_cached
     assert df.count() == len(golden)
     df.unpersist()
+
+
+class _Registry:
+    def __init__(self, calls):
+        self.calls = calls
+
+    def register(self, source):
+        self.calls.append(source)
+
+
+class _FakeSession:
+    def __init__(self, calls):
+        self.dataSource = _Registry(calls)
+
+
+def test_register_once_per_session_even_when_id_is_reused():
+    """A session created after another one was collected may get its
+    ``id()``; it must still be registered, and only once."""
+    calls, ids = [], set()
+    for _ in range(50):
+        s = _FakeSession(calls)
+        register(s)
+        register(s)
+        ids.add(id(s))
+        del s
+    assert len(ids) < 50  # ids were reused, so the case was exercised
+    assert calls == [FastxDataSource] * 50
 
 
 def test_relational_parser_matches_source(spark, golden):
