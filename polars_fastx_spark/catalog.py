@@ -12252,8 +12252,7 @@ def _prep_manifest_merge(spark, sf_dir):
     "lifecycle. Untouched partitions keep their original dirs "
     "(manifest repointing, no rewrite), and racing readers see "
     "old-or-new, never mixed — the table-format guarantee "
-    "dynamic-partition-overwrite cannot give (upsert.py's stated "
-    "caveat, closed)",
+    "dynamic-partition-overwrite cannot give",
     prepare=_prep_manifest_merge
 )
 def l_manifest_merge(spark, sf_dir):

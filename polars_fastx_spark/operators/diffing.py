@@ -161,8 +161,8 @@ def apply_diff(
     so we do NOT force-broadcast it — AQE broadcasts when it actually
     fits (repo no-force-broadcast discipline). Columns: keys +
     compared columns (project ``old`` accordingly; for stored tables
-    route the same split through ``upsert.upsert_partitioned`` /
-    ``delete_keys_partitioned`` instead)."""
+    route the same split through ``manifest.upsert_table`` /
+    ``manifest.delete_keys_table`` instead)."""
     if compare_cols is None:
         compare_cols = _diff_compare_cols(diff)
     dead = diff.filter(

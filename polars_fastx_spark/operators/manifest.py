@@ -1,16 +1,16 @@
-"""Snapshot-isolated partitioned tables via a manifest-pointer commit.
+"""Snapshot-isolated partitioned tables via a manifest-pointer commit
+— the package's one keyed MERGE/delete path.
 
-``operators/upsert.py`` documents the one honesty caveat of plain
-dynamic-partition-overwrite MERGE: readers racing the overwrite can
-see a partition mid-swap. This module closes it with the discipline
-the repo already owns (the ANN index's staged swaps, the sinks'
-``_COMMIT`` markers), applied at the whole-table level — a tiny
+A plain dynamic-partition-overwrite MERGE lets a reader racing the
+overwrite see a partition mid-swap. This module closes that with the
+discipline the repo already owns (the ANN index's staged swaps, the
+sinks' ``_COMMIT`` markers), applied at the whole-table level — a tiny
 MANIFEST file is the single source of truth and a one-file atomic
 rename is the only commit point:
 
 ```
 <table>/
-  _manifest/v<N>.json   # immutable: {version, partition dir -> path}
+  _manifest/v<N>.json   # immutable: {version, partition dir -> path, schema}
   _manifest/_CURRENT    # tiny pointer: the committed version number
   data/v<N>/<pcol>=<val>/part-*.parquet   # immutable once referenced
 ```
@@ -32,10 +32,10 @@ rename is the only commit point:
   version dirs are garbage; :func:`vacuum` removes the unreferenced
   ones.
 
-Single-writer assumption (as upsert.py): concurrent WRITERS would race
-the version counter — serialize them upstream (one maintainer per
-table, the package-wide convention). Keys must not MOVE between
-partitions (same contract as the overwrite path).
+Single-writer assumption: concurrent WRITERS would race the version
+counter — serialize them upstream (one maintainer per table, the
+package-wide convention). Keys must not MOVE between partitions: a
+commit repoints only the partitions its batch names.
 
 Reference parity: no write surface in the reference (TSV sink only,
 /root/reference/src/polars_fastx/fastx_parsers.py:222); north-star
@@ -45,16 +45,47 @@ extension per /root/repo/BASELINE.json:6.
 from __future__ import annotations
 
 import json
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from polars_fastx_spark.sources.sinks import hadoop_fs
 from polars_fastx_spark.streaming.epochs import (
     _read_small,
     _write_small_atomic,
 )
-from polars_fastx_spark.operators.upsert import _unescape_path_name
+
+
+def _value_key(value) -> str:
+    """A partition value as the manifest keys it (stats, selection):
+    its string form, Hive's default sentinel for NULL."""
+    return "__HIVE_DEFAULT_PARTITION__" if value is None else str(value)
+
+
+def _dir_key(dir_name: str) -> str:
+    """The :func:`_value_key` of a ``<pcol>=<escaped val>`` dir name.
+    Spark escapes a partition value as ``%XX`` per special ASCII char,
+    so percent-decoding inverts it."""
+    return unquote(dir_name.split("=", 1)[1])
+
+
+def latest_per_key(
+    df: DataFrame, key_cols: list[str], order_col: str | list[str]
+) -> DataFrame:
+    """Keep the last writer per key: the row with the greatest
+    ``order_col``. A list orders by each column in turn, all
+    descending, so later columns break ties of earlier ones."""
+    order = [order_col] if isinstance(order_col, str) else order_col
+    w = Window.partitionBy(*key_cols).orderBy(
+        *[F.col(c).desc() for c in order]
+    )
+    return (
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .drop("_rk")
+    )
 
 
 def _manifest_dir(path: str) -> str:
@@ -73,8 +104,9 @@ def read_manifest(
     spark: SparkSession, path: str, version: int | None = None
 ) -> dict:
     """The committed manifest: ``{"version": N, "partition_col": c,
-    "partitions": {dir_name: rel_path}}`` (dir_name is the hive-style
-    ``<pcol>=<escaped val>`` name; rel_path points under the table).
+    "partitions": {dir_name: rel_path}, "schema": <StructType JSON>}``
+    (dir_name is the hive-style ``<pcol>=<escaped val>`` name;
+    rel_path points under the table; schema is what a read returns).
     ``version`` resolves a HISTORICAL manifest directly (time travel —
     every ``v<N>.json`` is immutable once committed), default the
     ``_CURRENT`` pointer."""
@@ -162,11 +194,7 @@ def _partition_stats(
     for r in df.groupBy(
         F.col(partition_col).alias("__pv")
     ).agg(*aggs).collect():
-        key = (
-            "__HIVE_DEFAULT_PARTITION__" if r["__pv"] is None
-            else str(r["__pv"])
-        )
-        out[key] = {
+        out[_value_key(r["__pv"])] = {
             c: [_json_bound(r[f"__mn_{c}"]), _json_bound(r[f"__mx_{c}"])]
             for c in present
         }
@@ -220,11 +248,18 @@ def create_table(
     range cannot contain a match BEFORE any file is opened — the
     Iceberg/Delta data-skipping idea at manifest granularity. The
     column set is a table property: upsert/delete/compaction maintain
-    the stats for every touched partition automatically."""
+    the stats for every touched partition automatically.
+
+    The manifest also records the table schema, so a read that selects
+    no partition still returns a typed 0-row frame (a table created
+    from an empty frame records that frame's own schema)."""
+    parts = _stage_version(spark, path, df, partition_col, 1)
     man: dict = {
         "version": 1,
         "partition_col": partition_col,
-        "partitions": _stage_version(spark, path, df, partition_col, 1),
+        "partitions": parts,
+        "schema": _snapshot_schema(spark, path, parts, None)
+        or df.schema.jsonValue(),
     }
     if stats_cols:
         man["stats_cols"] = list(stats_cols)
@@ -244,14 +279,11 @@ def _select_partitions(
     decision is directly testable without touching storage)."""
     wanted = None
     if partition_values is not None:
-        wanted = {
-            "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-            for v in partition_values
-        }
+        wanted = {_value_key(v) for v in partition_values}
     stats = man.get("stats", {})
     out: dict[str, str] = {}
     for dir_name, rel in man["partitions"].items():
-        val = _unescape_path_name(dir_name.split("=", 1)[1])
+        val = _dir_key(dir_name)
         if wanted is not None and val not in wanted:
             continue
         if range_filter:
@@ -263,6 +295,51 @@ def _select_partitions(
                 continue
         out[dir_name] = rel
     return out
+
+
+def _read_parts(
+    spark: SparkSession, path: str, parts: dict[str, str]
+) -> DataFrame | None:
+    """One frame over the ``{dir_name: rel}`` partition dirs, None
+    when there are none. Dirs group by version dir (one ``basePath``
+    each, so partition discovery sees ``<pcol>=<val>``); the groups
+    union by name with missing-column tolerance — after a
+    schema-evolved MERGE, version dirs legitimately differ, and old
+    files read the new column as NULL (and vice versa)."""
+    by_version: dict[str, list[str]] = {}
+    for rel in parts.values():
+        base = rel.rsplit("/", 1)[0]  # data/v<K>
+        by_version.setdefault(base, []).append(f"{path}/{rel}")
+    out = None
+    for base, dirs in sorted(by_version.items()):
+        f = spark.read.option("basePath", f"{path}/{base}").parquet(*dirs)
+        out = f if out is None else out.unionByName(
+            f, allowMissingColumns=True
+        )
+    return out
+
+
+def _snapshot_schema(
+    spark: SparkSession,
+    path: str,
+    staged: dict[str, str],
+    prev: dict | None,
+) -> dict | None:
+    """The schema (JSON form) a commit records: the previous
+    snapshot's ``prev`` widened by the ``staged`` dirs' the way
+    :func:`_read_parts` unions them, so the partition column carries
+    the type partition discovery infers. Lists only the staged dirs
+    (plus one footer read). Nothing staged keeps ``prev`` — so a
+    table whose every partition was deleted still reads (0 rows) and
+    takes the next MERGE."""
+    fresh = _read_parts(spark, path, staged)
+    if fresh is None:
+        return prev
+    if prev is not None:
+        fresh = spark.createDataFrame(
+            [], StructType.fromJson(prev)
+        ).unionByName(fresh, allowMissingColumns=True)
+    return fresh.schema.jsonValue()
 
 
 def read_table(
@@ -290,42 +367,19 @@ def read_table(
     or not stats exist — stats only decide how much is read, never
     what is true."""
     man = read_manifest(spark, path, version=version)
-    selected = _select_partitions(man, partition_values, range_filter)
-
-    def _with_range(df: DataFrame) -> DataFrame:
-        for c, (lo, hi) in (range_filter or {}).items():
-            if lo is not None:
-                df = df.filter(F.col(c) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(c) <= F.lit(hi))
-        return df
-
-    by_version: dict[str, list[str]] = {}
-    for dir_name, rel in selected.items():
-        base = rel.rsplit("/", 1)[0]  # data/v<K>
-        by_version.setdefault(base, []).append(f"{path}/{rel}")
-    frames = [
-        spark.read.option("basePath", f"{path}/{base}").parquet(*dirs)
-        for base, dirs in sorted(by_version.items())
-    ]
-    if not frames:
-        # prune matched nothing: empty frame with the table schema —
-        # resolve it from any one partition dir (cheap footer read)
-        any_rel = next(iter(man["partitions"].values()), None)
-        if any_rel is None:
-            raise ValueError(f"manifest table {path} has no partitions")
-        base = any_rel.rsplit("/", 1)[0]
-        schema_frame = spark.read.option(
-            "basePath", f"{path}/{base}"
-        ).parquet(f"{path}/{any_rel}")
-        return _with_range(schema_frame.limit(0))
-    out = frames[0]
-    for f in frames[1:]:
-        # by-name with missing-column tolerance: after a
-        # schema-evolved MERGE, version dirs legitimately differ —
-        # old files read the new column as NULL (and vice versa)
-        out = out.unionByName(f, allowMissingColumns=True)
-    return _with_range(out)
+    out = _read_parts(
+        spark, path, _select_partitions(man, partition_values, range_filter)
+    )
+    if out is None:
+        # nothing selected (pruned away, or every partition deleted):
+        # a 0-row frame with the schema the snapshot recorded
+        out = spark.createDataFrame([], StructType.fromJson(man["schema"]))
+    for c, (lo, hi) in (range_filter or {}).items():
+        if lo is not None:
+            out = out.filter(F.col(c) >= F.lit(lo))
+        if hi is not None:
+            out = out.filter(F.col(c) <= F.lit(hi))
+    return out
 
 
 def upsert_table(
@@ -337,8 +391,9 @@ def upsert_table(
     evolve_schema: bool = False,
 ) -> int:
     """MERGE ``updates`` into the manifest table (last-writer-wins on
-    ``order_col``, updates outrank existing rows at equal order —
-    identical semantics to ``upsert.upsert_partitioned``). Reads ONLY
+    ``order_col`` via :func:`latest_per_key`; updates outrank existing
+    rows at equal order). ``updates`` must carry the partition
+    column. Reads ONLY
     the touched partitions (manifest pruning), stages them as the
     next version, commits with one pointer swap. Returns the new
     version. Replaying the same batch converges to the same state.
@@ -357,20 +412,12 @@ def upsert_table(
     pcol = man["partition_col"]
     touched = [r[0] for r in updates.select(pcol).distinct().collect()]
     current = read_table(spark, path, partition_values=touched)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(order_col).desc(), F.col("_src").desc()
+    tagged = current.withColumn("_src", F.lit(0)).unionByName(
+        updates.withColumn("_src", F.lit(1)),
+        allowMissingColumns=evolve_schema,
     )
-    merged = (
-        current.withColumn("_src", F.lit(0))
-        .unionByName(
-            updates.withColumn("_src", F.lit(1)),
-            allowMissingColumns=evolve_schema,
-        )
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk", "_src")
-    )
-    return _commit_delta(spark, path, man, merged, touched)
+    merged = latest_per_key(tagged, key_cols, [order_col, "_src"])
+    return _commit_delta(spark, path, man, merged.drop("_src"), touched)
 
 
 def delete_keys_table(
@@ -402,11 +449,7 @@ def compact_table(spark: SparkSession, path: str) -> int:
     small-files fold for a table that accreted many versions); one
     commit, readers never see a mix. Returns the new version."""
     man = read_manifest(spark, path)
-    pcol = man["partition_col"]
-    touched = [
-        _unescape_path_name(d.split("=", 1)[1])
-        for d in man["partitions"]
-    ]
+    touched = [_dir_key(d) for d in man["partitions"]]
     return _commit_delta(
         spark, path, man, read_table(spark, path), touched
     )
@@ -426,27 +469,28 @@ def _commit_delta(
     pcol = man["partition_col"]
     version = man["version"] + 1
     staged = _stage_version(spark, path, new_rows, pcol, version)
-    touched_names = {
-        "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-        for v in touched
-    }
+    touched_names = {_value_key(v) for v in touched}
     # untouched partitions keep their old dirs; touched ones repoint
     # to the stage (or drop, when fully deleted). A staged partition
     # OUTSIDE the touched set would be a key-movement bug — it is
-    # ignored rather than silently repointed (same contract as the
-    # overwrite path: keys must not move between partitions).
+    # ignored rather than silently repointed (keys must not move
+    # between partitions).
+    repointed = {
+        d: rel for d, rel in staged.items() if _dir_key(d) in touched_names
+    }
     parts = {
         d: rel
         for d, rel in man["partitions"].items()
-        if _unescape_path_name(d.split("=", 1)[1]) not in touched_names
+        if _dir_key(d) not in touched_names
     }
-    for d, rel in staged.items():
-        if _unescape_path_name(d.split("=", 1)[1]) in touched_names:
-            parts[d] = rel
+    parts.update(repointed)
     next_man = {
         "version": version,
         "partition_col": pcol,
         "partitions": parts,
+        "schema": _snapshot_schema(
+            spark, path, repointed, man.get("schema")
+        ),
     }
     stats_cols = man.get("stats_cols")
     if stats_cols:
@@ -454,9 +498,7 @@ def _commit_delta(
         # their recorded ranges, touched ones re-aggregate from the
         # staged content (dropped partitions drop their stats with
         # their dir)
-        live_vals = {
-            _unescape_path_name(d.split("=", 1)[1]) for d in parts
-        }
+        live_vals = {_dir_key(d) for d in parts}
         stats = {
             v: s for v, s in man.get("stats", {}).items()
             if v not in touched_names and v in live_vals
@@ -501,19 +543,12 @@ def rollback(spark: SparkSession, path: str, version: int) -> int:
     never reuses a number (re-staging over a live historical dir
     would mutate what time travel promises is immutable). Returns
     the new version number."""
-    man = read_manifest(spark, path)  # current — for the next number
+    new_version = read_manifest(spark, path)["version"] + 1
     target = read_manifest(spark, path, version=version)
-    new_version = man["version"] + 1
-    next_man = {
-        "version": new_version,
-        "partition_col": target["partition_col"],
-        "partitions": dict(target["partitions"]),
-        "rollback_of": int(version),
-    }
-    if "stats_cols" in target:  # zone maps travel with the snapshot
-        next_man["stats_cols"] = target["stats_cols"]
-        next_man["stats"] = dict(target.get("stats", {}))
-    _commit(spark, path, next_man)
+    # the partition map, schema and zone maps travel with the snapshot
+    _commit(spark, path, {
+        **target, "version": new_version, "rollback_of": int(version),
+    })
     return new_version
 
 

@@ -298,7 +298,7 @@ def stream_upsert_manifest(
     (``operators/manifest.py`` — immutable version dirs, one atomic
     ``_CURRENT`` pointer rename per commit). Readers concurrent with
     the stream always see one complete committed version, never a
-    partition mid-swap — the guarantee the plain
+    partition mid-swap — the guarantee a plain
     dynamic-partition-overwrite streaming upsert cannot give.
 
     Retry semantics: foreachBatch may redeliver a batch; replaying the
@@ -311,11 +311,10 @@ def stream_upsert_manifest(
     evolution semantics — a mid-stream schema widening merges instead
     of failing the query); default strict."""
     from polars_fastx_spark.operators import manifest as mf
-    from polars_fastx_spark.operators.upsert import latest_per_key
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        b = latest_per_key(batch_df, key_cols, order_col)
+        b = mf.latest_per_key(batch_df, key_cols, order_col)
         if b.isEmpty():
             return
         if mf.current_version(spark, path) is None:

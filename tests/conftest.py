@@ -156,6 +156,8 @@ SLOW_TESTS = {
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        key = f"{item.fspath.basename}::{item.name}"
+        # originalname drops a "[param]" suffix, so a listed test that
+        # gains parametrization stays in the slow tier
+        key = f"{item.fspath.basename}::{item.originalname}"
         if key in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

@@ -74,6 +74,29 @@ def test_upsert_merges_and_leaves_untouched_dirs_alone(spark, tmp_path):
     assert man2["partitions"]["part=b"] == man1["partitions"]["part=b"]
     assert man2["partitions"]["part=c"] == man1["partitions"]["part=c"]
     assert man2["partitions"]["part=a"].startswith("data/v2/")
+    # an update with an EQUAL order_col beats the stored row, and
+    # replaying it leaves the same state
+    tie = spark.createDataFrame(
+        [(1, "a", 11, 100)], "id long, part string, val long, ver long"
+    )
+    want = {
+        (1, "a", 11, 100), (2, "a", 21, 200), (5, "a", 50, 200),
+        (3, "b", 30, 100), (4, "c", 40, 100),
+    }
+    for _ in range(2):
+        M.upsert_table(spark, path, tie, ["id"], "ver")
+        assert _state(spark, path) == want
+
+
+def test_latest_per_key_picks_max_order(spark):
+    df = spark.createDataFrame(
+        [(1, 1, "old"), (1, 3, "new"), (2, 5, "only"), (1, 2, "mid")],
+        "k long, v long, payload string",
+    )
+    from polars_fastx_spark.operators.manifest import latest_per_key
+
+    got = {(r.k, r.v, r.payload) for r in latest_per_key(df, ["k"], "v").collect()}
+    assert got == {(1, 3, "new"), (2, 5, "only")}
 
 
 def test_reader_sees_one_version_never_mixed(spark, tmp_path):
@@ -145,14 +168,39 @@ def test_delete_and_emptied_partition_drops(spark, tmp_path):
     keys = spark.createDataFrame(
         [(3, "b"), (4, "c")], "id long, part string"
     )
-    M.delete_keys_table(spark, path, keys, ["id"])
-    assert _state(spark, path) == {
-        (1, "a", 10, 100), (2, "a", 20, 100),
-    }
-    man = M.read_manifest(spark, path)
-    # the fully-deleted partitions vanish from the manifest (no dir
-    # deletion racing a reader — vacuum reclaims bytes later)
-    assert set(man["partitions"]) == {"part=a"}
+    # replaying the same delete batch leaves the same state
+    for _ in range(2):
+        M.delete_keys_table(spark, path, keys, ["id"])
+        assert _state(spark, path) == {
+            (1, "a", 10, 100), (2, "a", 20, 100),
+        }
+        man = M.read_manifest(spark, path)
+        # the fully-deleted partitions vanish from the manifest (no dir
+        # deletion racing a reader — vacuum reclaims bytes later)
+        assert set(man["partitions"]) == {"part=a"}
+
+
+def test_emptied_table_reads_empty_and_takes_the_next_merge(
+    spark, tmp_path
+):
+    """Deleting every key leaves a manifest with no partitions; the
+    recorded schema keeps it readable (0 rows, the schema a non-empty
+    read had, partition column type included) and writable."""
+    path = str(tmp_path / "t")
+    M.create_table(spark, path, _base(spark), "part")
+    schema = M.read_table(spark, path).schema
+    M.delete_keys_table(
+        spark, path, _base(spark).select("id", "part"), ["id"]
+    )
+    assert M.read_manifest(spark, path)["partitions"] == {}
+    empty = M.read_table(spark, path)
+    assert empty.count() == 0 and empty.schema == schema
+    updates = spark.createDataFrame(
+        [(7, "b", 70, 300)], "id long, part string, val long, ver long"
+    )
+    M.upsert_table(spark, path, updates, ["id"], "ver")
+    assert _state(spark, path) == {(7, "b", 70, 300)}
+    assert M.read_table(spark, path).schema == schema
 
 
 def test_compaction_and_vacuum(spark, tmp_path):
@@ -179,17 +227,21 @@ def test_compaction_and_vacuum(spark, tmp_path):
 
 def test_null_partition_value_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t")
+    # escaped dir names (/ = % :) and a raw non-ASCII one decode back
+    odd = "x/y=z%:é"
     df = spark.createDataFrame(
-        [(1, None, 10, 1), (2, "a", 20, 1)],
+        [(1, None, 10, 1), (2, "a", 20, 1), (3, odd, 30, 1)],
         "id long, part string, val long, ver long",
     )
     M.create_table(spark, path, df, "part")
     got = {
         (r["id"], r["part"]) for r in M.read_table(spark, path).collect()
     }
-    assert got == {(1, None), (2, "a")}
+    assert got == {(1, None), (2, "a"), (3, odd)}
     only_null = M.read_table(spark, path, partition_values=[None])
     assert {r["id"] for r in only_null.collect()} == {1}
+    only_odd = M.read_table(spark, path, partition_values=[odd])
+    assert {r["id"] for r in only_odd.collect()} == {3}
 
 
 def test_streaming_upsert_manifest(spark, tmp_path):

@@ -18,7 +18,8 @@ fails CI instead of regressing a query.
    (the r10 ivfpq_topk/index_build path).
 4. tests/conftest.py SLOW_TESTS hygiene: every listed nodeid resolves
    to a real test (the runtime marker deliberately fails open; this
-   keeps the list from rotting).
+   keeps the list from rotting), and a listed test keeps its marker
+   once parametrized.
 """
 
 from __future__ import annotations
@@ -127,3 +128,22 @@ def test_slow_tests_list_resolves_to_real_tests():
         if not p.exists() or f"def {test}(" not in p.read_text():
             stale.append(entry)
     assert not stale, f"SLOW_TESTS entries no longer resolve: {stale}"
+
+
+def test_slow_marker_survives_parametrization():
+    from types import SimpleNamespace
+
+    from tests.conftest import SLOW_TESTS, pytest_collection_modifyitems
+
+    fname, test = sorted(SLOW_TESTS)[0].split("::", 1)
+    marked = []
+
+    def item(originalname):
+        return SimpleNamespace(
+            fspath=SimpleNamespace(basename=fname),
+            name=f"{originalname}[p0]", originalname=originalname,
+            add_marker=lambda m: marked.append((originalname, m.name)),
+        )
+
+    pytest_collection_modifyitems(None, [item(test), item("test_not_listed")])
+    assert marked == [(test, "slow")]

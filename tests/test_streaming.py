@@ -332,54 +332,6 @@ def test_stream_static_enrich_sees_dim_updates(spark, srcdir, tmp_path):
     assert cats[3] == "acquire" and cats[1] == "engage"
 
 
-def test_foreachbatch_upsert_sink(spark, srcdir, tmp_path):
-    """Effectively-once streaming MERGE: each micro-batch upserts into a
-    partitioned parquet table keyed by event_id, latest ts wins."""
-    import os
-    from polars_fastx_spark.operators import upsert as up
-
-    tgt = str(tmp_path / "tbl")
-
-    def sink(batch, _bid):
-        b = batch.withColumn("day", F.dayofmonth("ts"))
-        if not os.path.exists(tgt):
-            b.write.partitionBy("day").parquet(tgt)
-        else:
-            up.upsert_partitioned(
-                spark, tgt, b, ["event_id"], "day", "ts"
-            )
-
-    from pyspark.sql import functions as F  # noqa: F811 (local alias)
-
-    def run_once(ck):
-        q = (
-            sp.stream_events(spark, str(srcdir))
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    _write_batch(srcdir, "b1.json", [
-        _rows("2024-01-01 10:00:00", 1, etype="click", value=1.0),
-        _rows("2024-01-01 10:01:00", 2, etype="view", value=2.0),
-    ])
-    run_once(tmp_path / "ck")
-    got = {r.event_id: (r.event_type, r.value)
-           for r in spark.read.parquet(tgt).collect()}
-    assert got == {1: ("click", 1.0), 2: ("view", 2.0)}
-
-    _write_batch(srcdir, "b2.json", [
-        _rows("2024-01-01 11:00:00", 1, etype="click", value=9.0),  # update
-        _rows("2024-01-01 10:05:00", 3, etype="buy", value=3.0),    # insert
-    ])
-    run_once(tmp_path / "ck")
-    got = {r.event_id: (r.event_type, r.value)
-           for r in spark.read.parquet(tgt).collect()}
-    assert got == {1: ("click", 9.0), 2: ("view", 2.0), 3: ("buy", 3.0)}
-
-
 def test_streaming_ewma_matches_batch_operator(spark, srcdir, tmp_path):
     """Cross-batch state: the streamed EWMA series equals the batch
     applyInPandas result over the same (in-order) events."""
