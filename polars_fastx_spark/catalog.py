@@ -85,42 +85,44 @@ def _q(name: str, oracle: str | None, doc: str = "", prepare=None):
 _FP = 1_000_000
 
 
-def _fp(c):
-    """Exact 6-decimal fixed-point LONG for a ≤6-decimal double: the
-    scaled value sits within 2e-5 of its integer, so a sign-aware
-    half offset + truncating cast recovers it exactly — pure codegen
-    arithmetic, no per-row BigDecimal."""
-    half = F.when(c < 0, F.lit(-0.5)).otherwise(F.lit(0.5))
-    return (c * _FP + half).cast("long")
-
-
-def _dsum(col, scale: int = 2):
-    """Order-independent money sum (§4.4): summands become exact
-    fixed-point longs (6 implied decimals — exact for the testdata's
-    ≤6-decimal money values), so the group total is integer arithmetic
-    — associative, identical in any engine and any partitioning. A
-    double sum's last-ulp noise DECIDES the cent whenever the true
-    total ends at an exact half (.xx5 — common for money), which is
-    how q_tpch9 went red at sf0.001. The total rescales via an exact
-    DECIMAL multiply (never division — DuckDB promotes decimal
-    division to double) and half-up rounds in decimal space; equals
-    the oracle's `round(sum(x::DECIMAL(18,6)), s)` by construction,
-    at long-sum speed (decimal accumulation measured 3x slower on the
-    Q1 flagship)."""
-    c = F.col(col) if isinstance(col, str) else col
-    exact = F.sum(_fp(c)).cast("decimal(38,0)") * F.lit("0.000001").cast(
-        "decimal(7,6)"
+def _fp(x: str) -> str:
+    """SQL text: exact 6-decimal fixed-point LONG for a ≤6-decimal
+    double ``x`` (SQL text over the frame's columns): the scaled value
+    sits within 2e-5 of its integer, so a sign-aware half offset +
+    truncating cast recovers it exactly — pure codegen arithmetic, no
+    per-row BigDecimal. The money helpers are SQL text because a
+    Python-built tree cost a py4j round trip per node (~60 per ``_fp``,
+    a third of q_agg_tpch1's build)."""
+    return (
+        f"CAST(({x}) * {_FP} + CASE WHEN ({x}) < 0 THEN -0.5D ELSE 0.5D END "
+        f"AS BIGINT)"
     )
-    return F.round(exact, scale).cast("double")
 
 
-def _davg(col, scale: int = 4):
-    """Order-independent mean: exact fixed-point sum ÷ count, rounded
-    on a double that is bit-identical across engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(
-        F.sum(_fp(c)).cast("double") / _FP / F.count(F.lit(1)),
-        scale,
+def _dsum(x: str, scale: int = 2):
+    """Order-independent money sum (§4.4) of SQL text ``x``: summands
+    become exact fixed-point longs (6 implied decimals — exact for the
+    testdata's ≤6-decimal money values), so the group total is integer
+    arithmetic — associative, identical in any engine and any
+    partitioning. A double sum's last-ulp noise DECIDES the cent
+    whenever the true total ends at an exact half (.xx5 — common for
+    money), which is how q_tpch9 went red at sf0.001. The total
+    rescales via an exact DECIMAL multiply (never division — DuckDB
+    promotes decimal division to double) and half-up rounds in decimal
+    space; equals the oracle's `round(sum(x::DECIMAL(18,6)), s)` by
+    construction, at long-sum speed (decimal accumulation measured 3x
+    slower on the Q1 flagship)."""
+    return F.expr(
+        f"CAST(round(CAST(sum({_fp(x)}) AS DECIMAL(38,0)) "
+        f"* CAST('0.000001' AS DECIMAL(7,6)), {int(scale)}) AS DOUBLE)"
+    )
+
+
+def _davg(x: str, scale: int = 4):
+    """Order-independent mean of SQL text ``x``: exact fixed-point sum ÷
+    count, rounded on a double that is bit-identical across engines."""
+    return F.expr(
+        f"round(CAST(sum({_fp(x)}) AS DOUBLE) / {_FP} / count(1), {int(scale)})"
     )
 
 
@@ -658,27 +660,22 @@ def j_interval_overlap(spark, sf_dir):
 )
 def q_agg_tpch1(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp"))
+    out = (
+        li.filter("l_shipdate <= CAST('2001-09-01' AS TIMESTAMP)")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             _dsum("l_quantity").alias("sum_qty"),
             _dsum("l_extendedprice").alias("sum_base_price"),
-            _dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("sum_disc_price"),
+            _dsum("l_extendedprice * (1 - l_discount)").alias("sum_disc_price"),
             _davg("l_quantity").alias("avg_qty"),
             _davg("l_extendedprice").alias("avg_price"),
             F.count("*").alias("count_order"),
         )
-        # ≤ 9 groups (returnflag × linestatus) at any scale: _sort1
-        # drops the range exchange + its sampling job
-        .transform(lambda out: _sort1(
-            out,
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        ))
     )
+    # ≤ 9 groups (returnflag × linestatus) at any scale: _sort1 drops
+    # the range exchange + its sampling job; ascending sorts put nulls
+    # first
+    return _sort1(out, "l_returnflag", "l_linestatus")
 
 
 @_q(
@@ -5917,8 +5914,9 @@ def s_scan_counts(spark, sf_dir):
 def sq_scalar_avg(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
     avg_df = p.agg(
-        (F.sum(_fp(F.col("p_retailprice"))).cast("double") / _FP / F.count(F.lit(1)))
-        .alias("_avg_price")
+        F.expr(
+            f"CAST(sum({_fp('p_retailprice')}) AS DOUBLE) / {_FP} / count(1)"
+        ).alias("_avg_price")
     )
     return (
         p.join(F.broadcast(avg_df))
@@ -6088,9 +6086,7 @@ def q_tpch3(spark, sf_dir):
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            _dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            _dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
         .select(
             "l_orderkey",
@@ -6144,9 +6140,7 @@ def q_tpch5(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            _dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            _dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), F.col("n_name").asc_nulls_first())
     )
@@ -6265,9 +6259,7 @@ def q_tpch6(spark, sf_dir):
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            _dsum(F.col("l_extendedprice") * F.col("l_discount")).alias(
-                "revenue"
-            )
+            _dsum("l_extendedprice * l_discount").alias("revenue")
         )
     )
 
@@ -6307,9 +6299,7 @@ def q_tpch10(spark, sf_dir):
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
-            _dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            _dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
         .select(
             "c_custkey",
@@ -6407,9 +6397,7 @@ def q_tpch15(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     rev = li.groupBy("l_suppkey").agg(
-        F.sum(
-            _fp(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        ).alias("__fp")
+        F.expr(f"sum({_fp('l_extendedprice * (1 - l_discount)')})").alias("__fp")
     )
     winners = (
         rev.withColumn("__mx", F.max("__fp").over(Window.partitionBy()))
@@ -7998,9 +7986,7 @@ def q_tpch19(spark, sf_dir):
         li.join(p, li.l_partkey == p.p_partkey)
         .filter(cond1 | cond2)
         .agg(
-            _dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            _dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
     )
 
@@ -8556,9 +8542,7 @@ def q_tpch7(spark, sf_dir):
         .withColumn("l_year", F.year("l_shipdate"))
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(
-            _dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            _dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
     )
 

@@ -1,13 +1,25 @@
 """The ``seq`` namespace — sequence-analysis functions, Spark-first.
 
 Mirrors the reference's Polars expression namespace
-(reference: src/polars_fastx/fastx_parsers.py:11-67) with **pure Column
-expressions** — everything runs JVM-side inside whole-stage codegen;
-no Python UDF is on the hot path. The reference implements codon_usage,
-generate_hash and kmer frequencies as per-row Python callbacks
-(``map_elements`` at fastx_parsers.py:41,50,65-67), which re-enter Python
-per record; here the same semantics compile to Catalyst higher-order
-functions over arrays/maps, so they scale with executor parallelism.
+(reference: src/polars_fastx/fastx_parsers.py:11-67). Everything runs
+JVM-side; no Python UDF is on the hot path. The reference implements
+codon_usage, generate_hash and kmer frequencies as per-row Python
+callbacks (``map_elements`` at fastx_parsers.py:41,50,65-67), which
+re-enter Python per record; here the same semantics compile to Catalyst
+higher-order functions over arrays/maps, so they scale with executor
+parallelism.
+
+The stats expressions (length, gc_content, n_count, generate_hash,
+codon_usage, kmer_frequencies) are each ONE Spark SQL text template
+(the ``*_sql`` functions), handed to the JVM in one parse through
+:func:`~polars_fastx_spark.functions.exprs.let_sql`. Polars builds its
+expressions in-process for free; here every ``Column`` node built
+through the Python API is 5-7 py4j round trips, and the node-by-node
+trees cost ~1,500 round trips and 0.22 s per ``fasta_stats_frame`` build
+(finalizer deletes included) — more driver time than the executor spent
+on the warm pass. From the templates it is 15 round trips and 0.06 s.
+``pipeline.fasta_stats_frame`` renders the same templates straight into
+one ``filter`` and one ``selectExpr``.
 
 Exact semantics preserved (SURVEY.md §2.8):
 
@@ -35,23 +47,32 @@ Spark structs need fixed fields, maps are the faithful representation
 (SURVEY.md §1.2).
 
 A ``pandas_udf`` transliteration of the reference's Python lives in
-:mod:`polars_fastx_spark.functions.seq_udf_ref` purely as a cross-check
-twin for tests (SURVEY.md §5.3); never use it in pipelines.
+``tests/seq_udf_ref.py`` purely as a cross-check twin for tests
+(SURVEY.md §5.3).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from polars_fastx_spark.functions.exprs import let_sql, sql_str
 
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def length_sql(s: str) -> str:
+    """SQL text of :func:`length` over the SQL text ``s``."""
+    return f"CAST(length({s}) AS BIGINT)"
+
+
 def length(c: Column | str) -> Column:
     """Sequence character length (reference fastx_parsers.py:26-28)."""
-    return F.length(_col(c)).cast("bigint")
+    return let_sql(c, length_sql)
 
 
 def count_matches(c: Column | str, literal: str) -> Column:
@@ -69,33 +90,48 @@ def count_matches(c: Column | str, literal: str) -> Column:
     return (F.length(col) - F.length(F.translate(col, literal, ""))).cast("bigint")
 
 
+def gc_content_sql(s: str) -> str:
+    """SQL text of :func:`gc_content` over the SQL text ``s``."""
+    return (
+        f"(length({s}) - length(translate({s}, 'GC', ''))) "
+        f"/ nullif(length({s}), 0)"
+    )
+
+
 def gc_content(c: Column | str) -> Column:
     """(count('G') + count('C')) / char_length, case-sensitive (K2).
 
     Empty sequence → null (guarded division; ANSI mode would otherwise
     raise on 0/0).
     """
-    col = _col(c)
-    gc = F.length(col) - F.length(F.translate(col, "GC", ""))
-    return gc / F.nullif(F.length(col), F.lit(0))
+    return let_sql(c, gc_content_sql)
+
+
+def n_count_sql(s: str) -> str:
+    """SQL text of :func:`n_count` over the SQL text ``s``."""
+    return f"CAST(length({s}) - length(translate({s}, 'N', '')) AS BIGINT)"
 
 
 def n_count(c: Column | str) -> Column:
     """Count of literal uppercase 'N' (K3)."""
-    col = _col(c)
-    return (F.length(col) - F.length(F.translate(col, "N", ""))).cast("bigint")
+    return let_sql(c, n_count_sql)
+
+
+def generate_hash_sql(s: str, hash_length: int = 32) -> str:
+    """SQL text of :func:`generate_hash` over the SQL text ``s``."""
+    return f"substring(md5(encode({s}, 'UTF-8')), 1, {int(hash_length)})"
 
 
 def generate_hash(c: Column | str, hash_length: int = 32) -> Column:
     """md5 hexdigest truncated to ``hash_length`` hex chars (K4).
 
-    Pure built-in (``F.md5`` over UTF-8 bytes) — the reference does this
+    Pure built-in (``md5`` over UTF-8 bytes) — the reference does this
     per-row in Python (fastx_parsers.py:47-50).
     """
-    return F.substring(F.md5(F.encode(_col(c), "UTF-8")), 1, hash_length)
+    return let_sql(c, partial(generate_hash_sql, hash_length=hash_length))
 
 
-def _freq_map(tokens: Column) -> Column:
+def _freq_map_sql(tokens: str) -> str:
     """tokens array<string> → map<token, relative_frequency>.
 
     Run-length counting over a sorted copy: O(n log n) per row and ~4n
@@ -108,67 +144,46 @@ def _freq_map(tokens: Column) -> Column:
     the 'N' filter, so both give the same order. Row-local and
     shuffle-free, so it parallelizes embarrassingly at any scale; keys
     come out sorted, giving deterministic to_json renderings.
+
+    Run-length over the sorted array ``__srt`` in O(n): the run starts
+    ``__st`` (positions whose token differs from the one before), zipped
+    with the next run's start, give one (token, run length / total)
+    entry per distinct token. The boundary test is a CASE, not an OR, so
+    ``element_at(__srt, 0)`` is never evaluated.
+
+    CRITICAL let-bindings: higher-order lambdas re-evaluate their input
+    EXPRESSION per element, so ``element_at`` over the sort expression
+    inside a lambda would re-sort the array n times (O(n² log n),
+    measured ~0.2 s/row). Lambda VARIABLES are bound values, so the
+    sorted array is bound once through a single-element ``transform``
+    and the inner ``element_at`` calls against it are O(1). The run
+    starts are bound the same way: they are read three times (slice,
+    size, zip_with), which inlined would be three O(n) boundary filters
+    per row. (A fold-based alternative avoids the binding but copies its
+    accumulator array per element — O(n·d) — measured 2.4x slower on
+    4-mers at sf0.1.)
     """
-    srt_expr = F.sort_array(F.filter(tokens, lambda x: ~x.contains("N")))
-
-    # Run-length over the sorted array in O(n): boundary positions →
-    # zip starts with ends → one struct per distinct token.
-    #
-    # CRITICAL let-binding: higher-order lambdas re-evaluate their
-    # input EXPRESSION tree per element, so element_at(srt_expr, i)
-    # inside a lambda would re-sort the array n times (O(n² log n),
-    # measured ~0.2 s/row). Lambda VARIABLES are bound values — so the
-    # whole computation is wrapped in a single-element transform whose
-    # lambda receives the sorted array once; inner element_at calls
-    # against that bound variable are O(1). (A fold-based alternative
-    # avoids the binding but copies its accumulator array per element —
-    # O(n·d) — measured 2.4x slower on 4-mers at sf0.1.)
-    def _build(srt: Column) -> Column:
-        total = F.size(srt)
-        idx = F.when(total > 0, F.sequence(F.lit(1), total)).otherwise(
-            F.array().cast("array<int>")
-        )
-        # when() (not boolean or) so element_at(srt, 0) is never evaluated
-        starts_expr = F.filter(
-            idx,
-            lambda i: F.when(i == 1, F.lit(True)).otherwise(
-                F.element_at(srt, i) != F.element_at(srt, i - 1)
-            ),
-        )
-
-        # Second let-binding, same reason as the outer one: ``starts``
-        # is referenced three times below (slice, size, zip_with), and
-        # a lambda EXPRESSION is re-evaluated per reference — three
-        # O(n) boundary filters per row instead of one. Binding it
-        # through a 1-element transform makes the references read a
-        # bound value.
-        def _emit(starts: Column) -> Column:
-            ends = F.concat(
-                F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-                F.array(total + 1),
-            )
-            entries = F.zip_with(
-                starts,
-                ends,
-                lambda s, e: F.struct(
-                    F.element_at(srt, s).alias("key"),
-                    ((e - s) / total).alias("value"),
-                ),
-            )
-            return F.map_from_entries(entries)
-
-        empty = F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<double>")
-        )
-        return F.when(
-            total > 0,
-            F.element_at(F.transform(F.array(starts_expr), _emit), 1),
-        ).otherwise(empty)
-
-    return F.element_at(F.transform(F.array(srt_expr), _build), 1)
+    runs = (
+        "element_at(transform(array(filter(sequence(1, size(__srt)), "
+        "__i -> CASE WHEN __i = 1 THEN true "
+        "ELSE element_at(__srt, __i) != element_at(__srt, __i - 1) END)), "
+        "__st -> map_from_entries(zip_with(__st, "
+        "concat(slice(__st, 2, greatest(size(__st) - 1, 0)), array(size(__srt) + 1)), "
+        "(__s, __e) -> named_struct('key', element_at(__srt, __s), "
+        "'value', (__e - __s) / size(__srt))))), 1)"
+    )
+    empty = (
+        "map_from_arrays(CAST(array() AS ARRAY<STRING>), "
+        "CAST(array() AS ARRAY<DOUBLE>))"
+    )
+    return (
+        f"element_at(transform(array(sort_array(filter({tokens}, "
+        f"__x -> NOT contains(__x, 'N')))), "
+        f"__srt -> CASE WHEN size(__srt) > 0 THEN {runs} ELSE {empty} END), 1)"
+    )
 
 
-def _tokens(c: Column | str, pattern: str) -> Column:
+def _tokens_sql(s: str, pattern: str) -> str:
     """Every group-1 capture of ``pattern`` in one left-to-right regex
     pass, each token uppercased on its own.
 
@@ -180,9 +195,15 @@ def _tokens(c: Column | str, pattern: str) -> Column:
     ``seq[i:i+k].upper()``: a character that grows when uppercased
     (``ß`` → ``SS``) would otherwise shift every later token.
     """
-    return F.transform(
-        F.regexp_extract_all(_col(c), F.lit(pattern), 1), lambda t: F.upper(t)
+    return (
+        f"transform(regexp_extract_all({s}, {sql_str(pattern)}, 1), "
+        f"__u -> upper(__u))"
     )
+
+
+def codon_usage_sql(s: str) -> str:
+    """SQL text of :func:`codon_usage` over the SQL text ``s``."""
+    return _freq_map_sql(_tokens_sql(s, "(?s)(.{3})"))
 
 
 def codon_usage(c: Column | str) -> Column:
@@ -191,10 +212,17 @@ def codon_usage(c: Column | str) -> Column:
     map<string,double>; uppercased; codons containing 'N' skipped; empty
     map when the sequence holds no complete codon (null input included).
     The codons are the ``floor(len/3)`` matches of ``(?s)(.{3})`` — one
-    regex pass, O(len) per row; see :func:`_tokens` for why one
+    regex pass, O(len) per row; see :func:`_tokens_sql` for why one
     substring per codon was O(len²).
     """
-    return _freq_map(_tokens(c, "(?s)(.{3})"))
+    return let_sql(c, codon_usage_sql)
+
+
+def kmer_frequencies_sql(s: str, k: int = 3) -> str:
+    """SQL text of :func:`kmer_frequencies` over the SQL text ``s``."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    return _freq_map_sql(_tokens_sql(s, f"(?s)(?=(.{{{int(k)}}}))."))
 
 
 def kmer_frequencies(c: Column | str, k: int = 3) -> Column:
@@ -205,16 +233,14 @@ def kmer_frequencies(c: Column | str, k: int = 3) -> Column:
     ``(?s)(?=(.{k})).`` captures the k-mer at one start in a lookahead
     and then consumes exactly one code point, so one regex pass yields
     all ``len - k + 1`` k-mers in O(len) per row (len·k character steps
-    for the fixed k); see :func:`_tokens` for why one substring per
+    for the fixed k); see :func:`_tokens_sql` for why one substring per
     start was O(len²). The consumed ``.`` keeps starts on code points: a
     bare zero-width ``(?=(.{k}))`` makes the matcher step one UTF-16
     unit after each match, which lands inside the surrogate pair of a
     non-BMP character (e.g. an emoji) and emits extra k-mers beginning
     with a lone surrogate.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    return _freq_map(_tokens(c, f"(?s)(?=(.{{{int(k)}}}))."))
+    return let_sql(c, partial(kmer_frequencies_sql, k=k))
 
 
 def reverse_complement(c: Column | str) -> Column:
@@ -429,7 +455,7 @@ class SeqAccessor:
     """
 
     def __init__(self, c: Column | str):
-        self._c = _col(c)
+        self._c = c
 
     def length(self) -> Column:
         return length(self._c)

@@ -21,7 +21,11 @@ signatures bit-for-bit (SURVEY.md §5.1).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, functions as F
+
+from polars_fastx_spark.functions.exprs import let_sql, sql_ident, sql_str
 
 
 # ---------------------------------------------------------------- exact (L1)
@@ -49,33 +53,18 @@ def drop_exact_duplicates(df: DataFrame, cols: list[str]) -> DataFrame:
 
 # ------------------------------------------------------- MinHash + LSH (L2)
 
+def _char_shingles_sql(s: str, k: int) -> str:
+    return (
+        f"array_distinct(transform(CASE WHEN length({s}) - {int(k)} + 1 >= 1 "
+        f"THEN sequence(1, length({s}) - {int(k)} + 1) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END, "
+        f"__i -> substring({s}, __i, {int(k)})))"
+    )
+
+
 def char_shingles(col: str | F.Column, k: int = 5) -> F.Column:
     """Distinct character k-shingles of a string column (array<string>)."""
-    c = F.col(col) if isinstance(col, str) else col
-    last = F.length(c) - F.lit(k) + 1
-    idx = F.when(last >= 1, F.sequence(F.lit(1), last)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(c, i, k)))
-
-
-def _minhash_one(shingles: F.Column, seed: int, family: str) -> F.Column:
-    # NB: the seed must be captured via this factory, not a default-arg
-    # lambda — Spark binds extra lambda params to the array index,
-    # silently corrupting the closure.
-    if family == "md5":
-        prefix = F.lit(f"{seed}:")
-        return F.array_min(
-            F.transform(
-                shingles, lambda x: F.md5(F.encode(F.concat(prefix, x), "UTF-8"))
-            )
-        )
-    if family == "xxhash64":
-        seed_col = F.lit(seed)
-        return F.array_min(
-            F.transform(shingles, lambda x: F.xxhash64(seed_col, x))
-        )
-    raise ValueError(f"unknown minhash family: {family!r}")
+    return let_sql(col, partial(_char_shingles_sql, k=k))
 
 
 #: Mersenne prime 2^31-1 for the permutation family — products a·h stay
@@ -100,8 +89,48 @@ def _perm_constants(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
+def _minhash_sql(sh: str, num_hashes: int, family: str) -> str:
+    """SQL text of :func:`minhash_signature` over the shingle array
+    ``sh``. Every family is one template: a Python-built tree costs
+    py4j round trips per node, and l_minhash_lsh's build took 2,032 of
+    them before (346 after)."""
+    p = _PERM_P
+    if family in ("perm", "perm_md5"):
+        consts = _perm_constants(num_hashes)
+        a_arr = ", ".join(str(a) for a, _ in consts)
+        b_arr = ", ".join(str(b) for _, b in consts)
+        if family == "perm":
+            base = f"pmod(xxhash64(__x), {p})"
+        else:
+            # 15 hex chars = 60 bits < 2^63: conv()'s string→bigint stays
+            # exact and ANSI-overflow-safe
+            base = (
+                f"pmod(CAST(conv(substring(md5(encode(__x, 'UTF-8')), 1, 15), "
+                f"16, 10) AS BIGINT), {p})"
+            )
+        folded = (
+            f"aggregate(transform({sh}, __x -> {base}), "
+            f"array_repeat(CAST({p} AS BIGINT), {int(num_hashes)}), "
+            f"(__acc, __hv) -> zip_with(__acc, "
+            f"zip_with(array({a_arr}), array({b_arr}), "
+            f"(__a, __b) -> pmod(__a * __hv + __b, {p})), "
+            f"(__mn, __val) -> least(__mn, __val)))"
+        )
+        # empty shingle set -> null signature entries (min of nothing)
+        return f"transform({folded}, __val -> nullif(__val, CAST({p} AS BIGINT)))"
+    if family == "md5":
+        one = "array_min(transform({sh}, __x -> md5(encode(concat('{seed}:', __x), 'UTF-8'))))"
+    elif family == "xxhash64":
+        one = "array_min(transform({sh}, __x -> xxhash64({seed}, __x)))"
+    else:
+        raise ValueError(f"unknown minhash family: {family!r}")
+    return "array(" + ", ".join(
+        one.format(sh=sh, seed=seed) for seed in range(num_hashes)
+    ) + ")"
+
+
 def minhash_signature(
-    shingles: F.Column, num_hashes: int = 16, family: str = "md5"
+    shingles: F.Column | str, num_hashes: int = 16, family: str = "md5"
 ) -> F.Column:
     """Array of ``num_hashes`` minimum hash values over the shingle set
     — the classic MinHash estimator (Broder '97). Row-local, no shuffle.
@@ -126,41 +155,9 @@ def minhash_signature(
       fold structure carries a value-level CORRECTNESS row
       (l_minhash_perm) while ``perm`` keeps the faster JVM hash.
     """
-    if family in ("perm", "perm_md5"):
-        consts = _perm_constants(num_hashes)
-        a_arr = F.array(*[F.lit(a) for a, _ in consts])
-        b_arr = F.array(*[F.lit(b) for _, b in consts])
-        if family == "perm":
-            base = F.transform(
-                shingles, lambda x: F.pmod(F.xxhash64(x), F.lit(_PERM_P))
-            )
-        else:
-            # 15 hex chars = 60 bits < 2^63: conv()'s string→bigint stays
-            # exact and ANSI-overflow-safe
-            base = F.transform(
-                shingles,
-                lambda x: F.pmod(
-                    F.conv(
-                        F.substring(F.md5(F.encode(x, "UTF-8")), 1, 15), 16, 10
-                    ).cast("bigint"),
-                    F.lit(_PERM_P),
-                ),
-            )
-        init = F.array_repeat(F.lit(_PERM_P).cast("bigint"), num_hashes)
-        folded = F.aggregate(
-            base,
-            init,
-            lambda acc, h: F.zip_with(
-                acc,
-                F.zip_with(a_arr, b_arr, lambda a, b: F.pmod(a * h + b, F.lit(_PERM_P))),
-                lambda m, v: F.least(m, v),
-            ),
-        )
-        # empty shingle set -> null signature entries (min of nothing)
-        return F.transform(
-            folded, lambda v: F.nullif(v, F.lit(_PERM_P).cast("bigint"))
-        )
-    return F.array(*[_minhash_one(shingles, s, family) for s in range(num_hashes)])
+    return let_sql(
+        shingles, partial(_minhash_sql, num_hashes=num_hashes, family=family)
+    )
 
 
 def minhash_band_table(
@@ -188,13 +185,14 @@ def minhash_band_table(
 
     assert num_hashes % bands == 0
     r = num_hashes // bands
+    text = sql_ident(text_col)
     df = ensure_min_parallelism(df)  # signature fan-out must not fuse to a 1-task scan
     # Shingle-less docs (NULL text or shorter than one shingle) carry
     # no LSH evidence and must NOT be banded: their all-null signatures
     # would collapse to a shared md5('') band key, spuriously pairing
     # every short doc with every other. The SQL oracles express the
     # same rule as WHERE length(text) >= k.
-    df = df.filter(F.length(F.col(text_col)) >= shingle_k)
+    df = df.filter(f"length({text}) >= {int(shingle_k)}")
     # Project the shingle array into its own named column BEFORE the
     # signature expression consumes it. The md5/xxhash64 families
     # reference the shingle set once per hash (16 `array_min(
@@ -205,36 +203,19 @@ def minhash_band_table(
     # per row and the 16 passes read the local value (measured 4.15 s
     # → 2.64 s noop on the sf0.1 band build; byte-identical output —
     # same expressions over the same input).
-    shingled = df.select(
-        F.col(id_col).alias("__id"),
-        char_shingles(text_col, shingle_k).alias("__sh"),
+    shingled = df.selectExpr(
+        f"{sql_ident(id_col)} AS __id",
+        f"{_char_shingles_sql(text, shingle_k)} AS __sh",
     )
-    sig = minhash_signature(F.col("__sh"), num_hashes, family)
-    return shingled.select("__id", sig.alias("__sig")).select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.encode(
-                                F.concat_ws(
-                                    "|",
-                                    F.transform(
-                                        F.slice("__sig", b * r + 1, r),
-                                        lambda v: v.cast("string"),
-                                    ),
-                                ),
-                                "UTF-8",
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("__id", "bk.band", "bk.band_key")
+    band_keys = ", ".join(
+        f"named_struct('band', {b}, 'band_key', md5(encode(concat_ws('|', "
+        f"transform(slice(__sig, {b * r + 1}, {r}), __val -> CAST(__val AS STRING))), "
+        f"'UTF-8')))"
+        for b in range(bands)
+    )
+    return shingled.selectExpr(
+        "__id", f"{_minhash_sql('__sh', num_hashes, family)} AS __sig"
+    ).selectExpr("__id", f"inline(array({band_keys}))")
 
 
 def minhash_lsh_candidates_between(
@@ -1378,28 +1359,69 @@ def _compact_containment_with_tombstones(
 
 # ------------------------------------------------------------- SimHash (L2)
 
-def _md5_words64(token: F.Column) -> F.Column:
+def _md5_words64_sql(token: str) -> str:
     """First 64 bits of ``md5(token)`` as a struct of two 32-bit words
     (hi = hex chars 1–8, lo = chars 9–16, each ``conv``'d in one call),
     so signature bit i reads as ``getbit(hi, 31-i)`` / ``getbit(lo,
     63-i)`` — bit-identical to the old nibble expansion (hex char j is
     nibble j, MSB-first within the word). ``token`` must be a bound
     lambda variable and the digest is let-bound, so each token hashes
-    once (inlined, outer computed expressions re-evaluate per
-    reference — see minhash's seed-factory note above). Two ``conv``
-    calls replace the previous 16 per-nibble substring+conv pairs and
-    the nested 4-bit array expansion — a much smaller interpreted
-    expression tree per token and zero intermediate array
-    allocations."""
-    from polars_fastx_spark.functions.exprs import let
-
-    return let(
-        F.md5(F.encode(token, "UTF-8")),
-        lambda h: F.struct(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("hi"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("lo"),
-        ),
+    once (an outer computed expression would re-evaluate per
+    reference). Two ``conv`` calls replace the previous 16 per-nibble
+    substring+conv pairs and the nested 4-bit array expansion — a much
+    smaller interpreted expression tree per token and zero intermediate
+    array allocations."""
+    return (
+        f"element_at(transform(array(md5(encode({token}, 'UTF-8'))), "
+        f"__dig -> named_struct("
+        f"'hi', CAST(conv(substring(__dig, 1, 8), 16, 10) AS BIGINT), "
+        f"'lo', CAST(conv(substring(__dig, 9, 8), 16, 10) AS BIGINT))), 1)"
     )
+
+
+def _simhash_sql(c: str, bits: int, family: str) -> str:
+    """SQL text of :func:`simhash` over the string ``c``."""
+    whitespace = sql_str(r"\s+")
+    tokens = f"split(trim({c}), {whitespace})"
+    # The bit-count fold runs as 64 SCALAR folds over the let-bound
+    # per-token hash array instead of one fold that zip_with's a fresh
+    # 64-int array per token: the old shape allocated two 64-element
+    # arrays per token per row (token bits + the zip_with accumulator),
+    # churning the heap and destabilizing JIT on long documents; the
+    # scalar folds allocate nothing per step. Integer addition is
+    # order-independent, so the counts — and the signature — are
+    # bit-identical. The hash array is let-bound so each token hashes
+    # ONCE, not once per bit position.
+    if family == "md5":
+        if bits != 64:
+            raise ValueError("md5 simhash family is fixed at 64 bits")
+        # hi covers signature bits 0..31 (MSB-first), lo 32..63
+        halves = ", ".join(
+            f"transform(sequence(31, 0, -1), __p -> aggregate(__words, 0, "
+            f"(__acc, __w) -> __acc + CASE WHEN getbit(__w.{word}, __p) = 1 "
+            f"THEN 1 ELSE -1 END))"
+            for word in ("hi", "lo")
+        )
+        counts = (
+            f"element_at(transform(array(transform({tokens}, "
+            f"__tk -> {_md5_words64_sql('__tk')})), "
+            f"__words -> concat({halves})), 1)"
+        )
+    elif family == "xxhash64":
+        counts = (
+            f"element_at(transform(array(transform({tokens}, __tk -> xxhash64(__tk))), "
+            f"__hashes -> transform(sequence(0, {int(bits) - 1}), "
+            f"__i -> aggregate(__hashes, 0, (__acc, __hv) -> __acc + "
+            f"CASE WHEN getbit(__hv, __i) = 1 THEN 1 ELSE -1 END))), 1)"
+        )
+    else:
+        raise ValueError(f"unknown simhash family: {family!r}")
+    sig = f"transform({counts}, __cnt -> CASE WHEN __cnt > 0 THEN 1 ELSE 0 END)"
+    # null text must stay a null SIGNATURE (the banding join then drops
+    # the doc, matching the oracle's unnest semantics); without the
+    # guard the scalar folds would each return null and the sign map
+    # would turn the null ELEMENTS into an all-zero signature
+    return f"CASE WHEN {c} IS NULL THEN CAST(NULL AS ARRAY<INT>) ELSE {sig} END"
 
 
 def simhash(col: str | F.Column, bits: int = 64, family: str = "xxhash64") -> F.Column:
@@ -1419,66 +1441,7 @@ def simhash(col: str | F.Column, bits: int = 64, family: str = "xxhash64") -> F.
       can brute-force the identical signatures (SURVEY.md §5.1).
       Requires ``bits == 64``.
     """
-    from polars_fastx_spark.functions.exprs import let
-
-    c = F.col(col) if isinstance(col, str) else col
-    tokens = F.split(F.trim(c), r"\s+")
-    # The bit-count fold runs as 64 SCALAR folds over the let-bound
-    # per-token hash array instead of one fold that zip_with's a fresh
-    # 64-int array per token: the old shape allocated two 64-element
-    # arrays per token per row (token bits + the zip_with accumulator),
-    # churning the heap and destabilizing JIT on long documents; the
-    # scalar folds allocate nothing per step. Integer addition is
-    # order-independent, so the counts — and the signature — are
-    # bit-identical. The hash array is let-bound so each token hashes
-    # ONCE, not once per bit position.
-    if family == "md5":
-        if bits != 64:
-            raise ValueError("md5 simhash family is fixed at 64 bits")
-
-        def fold_bit(words: F.Column, word: str, p: F.Column) -> F.Column:
-            return F.aggregate(
-                words,
-                F.lit(0),
-                lambda acc, w: acc
-                + F.when(F.getbit(w[word], p) == 1, 1).otherwise(-1),
-            )
-
-        counts = let(
-            F.transform(tokens, _md5_words64),
-            lambda words: F.concat(
-                # hi covers signature bits 0..31 (MSB-first), lo 32..63
-                F.transform(
-                    F.sequence(F.lit(31), F.lit(0), F.lit(-1)),
-                    lambda p: fold_bit(words, "hi", p),
-                ),
-                F.transform(
-                    F.sequence(F.lit(31), F.lit(0), F.lit(-1)),
-                    lambda p: fold_bit(words, "lo", p),
-                ),
-            ),
-        )
-    elif family == "xxhash64":
-        counts = let(
-            F.transform(tokens, lambda t: F.xxhash64(t)),
-            lambda hashes: F.transform(
-                F.sequence(F.lit(0), F.lit(bits - 1)),
-                lambda i: F.aggregate(
-                    hashes,
-                    F.lit(0),
-                    lambda acc, h: acc
-                    + F.when(F.getbit(h, i) == 1, 1).otherwise(-1),
-                ),
-            ),
-        )
-    else:
-        raise ValueError(f"unknown simhash family: {family!r}")
-    sig = F.transform(counts, lambda cnt: F.when(cnt > 0, 1).otherwise(0))
-    # null text must stay a null SIGNATURE (the banding join then drops
-    # the doc, matching the oracle's unnest semantics); without the
-    # guard the scalar folds would each return null and the sign map
-    # would turn the null ELEMENTS into an all-zero signature
-    return F.when(c.isNull(), F.lit(None).cast("array<int>")).otherwise(sig)
+    return let_sql(col, partial(_simhash_sql, bits=bits, family=family))
 
 
 def hamming_distance(a: F.Column, b: F.Column) -> F.Column:
@@ -1528,26 +1491,12 @@ def hamming_band_table(
     decisions can verify EXACT hamming, not just band collision."""
     chunks = max_distance + 1
     width = 64 // chunks
-    return sig.select(
-        "__id", "__sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.array_join(
-                            F.transform(
-                                F.slice("__sig", i * width + 1, width),
-                                lambda x: x.cast("string"),
-                            ),
-                            "",
-                        ).alias("chunk_val"),
-                    )
-                    for i in range(chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("__id", "__sig", "c.chunk", "c.chunk_val")
+    chunk_vals = ", ".join(
+        f"named_struct('chunk', {i}, 'chunk_val', array_join(transform("
+        f"slice(__sig, {i * width + 1}, {width}), __val -> CAST(__val AS STRING)), ''))"
+        for i in range(chunks)
+    )
+    return sig.selectExpr("__id", "__sig", f"inline(array({chunk_vals}))")
 
 
 def hamming_near_duplicates(

@@ -10,14 +10,16 @@ parallelizes across the scan's input partitions untouched.
 from __future__ import annotations
 
 import warnings
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
 from polars_fastx_spark.functions import seq as sq
+from polars_fastx_spark.functions.exprs import sql_ident
 from polars_fastx_spark.sources.fastx import scan_fastx
 from polars_fastx_spark.sources.sinks import write_tsv
 
-#: field name → builder(sequence_col) (reference fastx_parsers.py:168-177)
+#: the selectable fields (reference fastx_parsers.py:168-177)
 FIELD_OPTIONS = (
     "header", "sequence", "length", "gc_content", "n_count", "hash",
     "codon_usage", "kmer_freq",
@@ -35,12 +37,18 @@ def fasta_stats_frame(
 
     Field list semantics match the reference (fastx_parsers.py:179-189):
     unknown fields warn and are dropped; stats compute on the
-    length-filtered frame (fastx_parsers.py:161-164).
+    length-filtered frame (fastx_parsers.py:161-164). The length filters
+    and the projection are each one SQL string rendered from the ``seq``
+    templates, so the build is a handful of py4j calls.
     """
+    seq = sql_ident("sequence")
+    bounds = []
     if min_length:
-        df = df.filter(sq.length("sequence") >= min_length)
+        bounds.append(f"{sq.length_sql(seq)} >= {int(min_length)}")
     if max_length:
-        df = df.filter(sq.length("sequence") <= max_length)
+        bounds.append(f"{sq.length_sql(seq)} <= {int(max_length)}")
+    if bounds:
+        df = df.filter(" AND ".join(bounds))
 
     selected = [f.strip().lower() for f in fields.split(",")] if fields else ["header"]
     invalid = [f for f in selected if f not in FIELD_OPTIONS]
@@ -51,22 +59,18 @@ def fasta_stats_frame(
         )
     selected = [f for f in selected if f in FIELD_OPTIONS]
 
-    exprs = {}
-    if "length" in selected:
-        exprs["length"] = sq.length("sequence")
-    if "gc_content" in selected:
-        exprs["gc_content"] = sq.gc_content("sequence")
-    if "n_count" in selected:
-        exprs["n_count"] = sq.n_count("sequence")
-    if "hash" in selected:
-        exprs["hash"] = sq.generate_hash("sequence")
-    if "codon_usage" in selected:
-        exprs["codon_usage"] = sq.codon_usage("sequence")
-    if "kmer_freq" in selected:
-        exprs["kmer_freq"] = sq.kmer_frequencies("sequence", kmer_length)
-    if exprs:
-        df = df.withColumns(exprs)
-    return df.select(*selected)
+    stats = {
+        "length": sq.length_sql,
+        "gc_content": sq.gc_content_sql,
+        "n_count": sq.n_count_sql,
+        "hash": sq.generate_hash_sql,
+        "codon_usage": sq.codon_usage_sql,
+        "kmer_freq": partial(sq.kmer_frequencies_sql, k=kmer_length),
+    }
+    return df.selectExpr(*[
+        f"{stats[f](seq)} AS {sql_ident(f)}" if f in stats else sql_ident(f)
+        for f in selected
+    ])
 
 
 def fasta_stats(

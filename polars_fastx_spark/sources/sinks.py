@@ -23,12 +23,16 @@ def stringify_nested(df: DataFrame) -> DataFrame:
 
     Mirror of the reference's pre-CSV nested→Utf8 cast pass
     (reference: src/polars_fastx/fastx_parsers.py:214-220).
+
+    One ``withColumns`` call: a ``withColumn`` per field re-analyzes the
+    whole plan each time. Columns keep their positions.
     """
-    out = df
-    for field in df.schema.fields:
-        if isinstance(field.dataType, (ArrayType, MapType, StructType)):
-            out = out.withColumn(field.name, F.to_json(F.col(field.name)))
-    return out
+    nested = {
+        field.name: F.to_json(F.col(field.name))
+        for field in df.schema.fields
+        if isinstance(field.dataType, (ArrayType, MapType, StructType))
+    }
+    return df.withColumns(nested) if nested else df
 
 
 def write_tsv(df: DataFrame, path: str | None = None, sep: str = "\t") -> None:

@@ -3,9 +3,9 @@
 These are **test oracles only** (SURVEY.md §5.3): independent
 implementations of K2-K6 lifted from the reference's pure-Python bodies
 (reference: src/polars_fastx/fastx_parsers.py:16-67) and wrapped as
-Arrow-batched pandas UDFs. Pipelines must use
-:mod:`polars_fastx_spark.functions.seq` (pure-Column) instead — these
-exist so tests can assert the pure-SQL path computes byte-identical
+Arrow-batched pandas UDFs. Pipelines use
+:mod:`polars_fastx_spark.functions.seq` (JVM-side SQL expressions);
+these exist so tests can assert the SQL path computes byte-identical
 results to the reference semantics.
 """
 

@@ -54,7 +54,8 @@ def _texts():
         "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40)))
         for _ in range(50)
     ]
-    out += ["", "abc", "abcd", "abcde", "aaaaaaaaaa"]
+    out += ["", "abc", "abcd", "abcde", "aaaaaaaaaa",
+            "tab\tseparated \t\t runs\nand  lines"]
     return out
 
 

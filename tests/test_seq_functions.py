@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from tests.conftest import FIXTURES
 
 from polars_fastx_spark.functions import seq as sq
-from polars_fastx_spark.functions import seq_udf_ref as ref
+from tests import seq_udf_ref as ref
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +62,7 @@ def test_against_golden(seq_df, golden):
 
 
 def test_pure_sql_matches_reference_udf(seq_df):
-    """The pure-Column path must equal the reference-transliterated pandas UDF."""
+    """The JVM-side path must equal the reference-transliterated pandas UDF."""
     df = seq_df.select(
         "seq_id",
         sq.gc_content("sequence").alias("gc_sql"),
@@ -213,7 +213,7 @@ def test_reverse_complement_involution(spark):
 
 def test_reverse_complement_matches_udf_twin(spark):
     from pyspark.sql import functions as F
-    from polars_fastx_spark.functions import seq_udf_ref as ref
+    from tests import seq_udf_ref as ref
     from polars_fastx_spark.functions.seq import reverse_complement
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -329,7 +329,7 @@ def test_codon_kmer_code_point_parity(spark):
         [(i, s) for i, s in enumerate(CODE_POINT_ROWS)], "i int, s string"
     )
     ks = (1, 3, 4)
-    bare = sq._freq_map(sq._tokens("s", "(?s)(?=(.{3}))"))
+    bare = F.expr(sq._freq_map_sql(sq._tokens_sql("s", "(?s)(?=(.{3}))")))
     rows = df.select(
         "i",
         sq.codon_usage("s").alias("codons"),

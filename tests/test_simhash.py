@@ -34,7 +34,8 @@ def test_simhash_md5_matches_python_reference(spark):
     texts = [
         " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 20)))
         for _ in range(60)
-    ] + ["single", "  padded   whitespace  runs "]
+    ] + ["single", "  padded   whitespace  runs ",
+         "tab\tseparated \t\t runs\nand  lines"]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
