@@ -10,9 +10,11 @@ whole central directory of its archive. A worker's path starts with
 every subpackage imported from them has its own importer, so one call re-reads
 about 16 directories, ~27k records. Inside a reused worker on a 4-vCPU VM
 that costs 0.1-0.2 s per call, and every Python round trip pays it:
-executor tasks (``mapInPandas``, pandas UDFs, a data source's ``read``)
-and the data source's planning calls (``schema``, ``partitions``,
-``pushFilters``) alike. One ``fasta_stats`` pass makes about four of them.
+executor tasks (``mapInArrow``, ``mapInPandas``, pandas UDFs) and a
+registered data source's planning calls (``schema``, ``partitions``,
+``pushFilters``) alike. One ``fasta_stats`` pass makes one of them: its
+scan is planned in the driver (``sources/splits.py``) and read in one
+``mapInArrow`` task per split.
 
 Fix. This module wraps the method so that an importer re-reads its
 archive only when the archive's ``(st_mtime_ns, st_size, st_ino)``

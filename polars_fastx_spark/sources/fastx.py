@@ -1,22 +1,31 @@
-"""FASTX scan — Python Data Source API (SURVEY.md §2.1 S1/S2).
+"""FASTX scan (SURVEY.md §2.1 S1/S2).
 
 The reference registers a Polars IO-plugin scan returning a LazyFrame
-(reference: src/polars_fastx/fastx_parsers.py:70-129). The Spark-native
-equivalent is a ``DataSource``:
+(reference: src/polars_fastx/fastx_parsers.py:70-129). Here one planner
+(``FastxReader``) and one record reader serve two entries:
 
-- **schema**: driver-side one-record sniff (FASTA → 2 string columns,
-  FASTQ → +quality), mirroring fastx_parsers.py:87-93.
-- **partitions**: one per file, and — the scale path the reference
-  cannot do — byte-range splits of large plain FASTA files, so a single
-  100 GB file parses on hundreds of cores instead of one. Default split
-  target 128 MB (``spark.sql.files.maxPartitionBytes``-like).
-- **pushFilters**: simple comparison/string predicates on the parsed
-  columns are accepted and applied inside the reader per record —
-  the exact analog of the reference applying the pushed-down Polars
-  predicate per batch (fastx_parsers.py:125-126). Unsupported filters
-  are returned to Spark, which re-applies them.
-- projection: Spark prunes columns above the scan; parse cost is
-  per-record anyway (same trade-off as the reference, SURVEY.md §4.1).
+- ``scan_fastx`` (and through it ``read_fastx``, ``fasta_stats`` and
+  the CLI) plans in the caller's own process (``sources/splits.py``):
+  it expands the paths, sniffs FASTA vs FASTQ from one record of the
+  first file (FASTA → 2 string columns, FASTQ → +quality, mirroring
+  fastx_parsers.py:87-93) or takes ``format=``, plans the splits, and
+  reads each split in one Spark task. No Python planner process is
+  started.
+- ``spark.read.format("fastx")`` after :func:`register` is the
+  engine-native ``DataSource``, for SQL and ``DataFrameReader`` users.
+  Only this entry has **pushFilters**: simple comparison/string
+  predicates on the parsed columns are applied inside the reader per
+  record — the exact analog of the reference applying the pushed-down
+  Polars predicate per batch (fastx_parsers.py:125-126). Unsupported
+  filters are returned to Spark, which re-applies them. On
+  ``scan_fastx`` Spark applies every filter above the scan.
+
+**Splits**: one per file, and — the scale path the reference cannot do
+— byte-range splits of large plain FASTA (and 4-line FASTQ, and BGZF)
+files, so a single 100 GB file parses on hundreds of cores instead of
+one. Default split target 128 MB (``spark.sql.files.maxPartitionBytes``
+-like). Projection: Spark prunes columns above the scan; parse cost is
+per-record anyway (same trade-off as the reference, SURVEY.md §4.1).
 
 Also here: the pure-relational fallback parser (S5) the reference
 author sketched in comments (fastx_parsers.py:227-263) — read lines,
@@ -52,6 +61,11 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from polars_fastx_spark.session import register_data_source
 from polars_fastx_spark.sources import parser
+from polars_fastx_spark.sources.splits import (
+    byte_ranges,
+    check_split_bytes,
+    scan_splits,
+)
 
 FASTX_EXTENSIONS = (
     ".fa", ".fasta", ".fna", ".ffn", ".faa", ".frn", ".fq", ".fastq",
@@ -111,6 +125,7 @@ class FastxReader(DataSourceReader):
     def partitions(self) -> Sequence[FastxPartition]:
         from polars_fastx_spark.sources import bgzf
 
+        check_split_bytes(self._split_bytes)
         parts: list[FastxPartition] = []
         for p in self._paths:
             size = os.path.getsize(p)
@@ -134,9 +149,8 @@ class FastxReader(DataSourceReader):
                 else:
                     parts.append(FastxPartition(p, 0, None))
             elif size > self._split_bytes and framing_ok:
-                step = self._split_bytes
-                for off in range(0, size, step):
-                    parts.append(FastxPartition(p, off, min(off + step, size)))
+                for s, e in byte_ranges(size, self._split_bytes):
+                    parts.append(FastxPartition(p, s, e))
             else:
                 parts.append(FastxPartition(p, 0, None))
         return parts
@@ -226,21 +240,8 @@ class FastxDataSource(DataSource):
             raise ValueError("fastx source requires a path")
         return _expand_paths(path)
 
-    def _is_fastq(self, paths: list[str]) -> bool:
-        fmt = self.options.get("format")
-        if fmt:
-            return fmt.lower() == "fastq"
-        return parser.sniff_is_fastq(paths[0])
-
     def schema(self) -> StructType:
-        paths = self._paths()
-        fields = [
-            StructField("header", StringType(), True),
-            StructField("sequence", StringType(), True),
-        ]
-        if self._is_fastq(paths):
-            fields.append(StructField("quality", StringType(), True))
-        return StructType(fields)
+        return _fastx_schema(_is_fastq(self._paths(), self.options.get("format")))
 
     def reader(self, schema: StructType) -> FastxReader:
         paths = self._paths()
@@ -248,8 +249,27 @@ class FastxDataSource(DataSource):
         return FastxReader(paths, "quality" in schema.fieldNames(), split)
 
 
+def _is_fastq(paths: list[str], format: str | None) -> bool:
+    """``format`` (fasta/fastq) if given, else a one-record sniff of the
+    first file."""
+    if format:
+        return format.lower() == "fastq"
+    return parser.sniff_is_fastq(paths[0])
+
+
+def _fastx_schema(is_fastq: bool) -> StructType:
+    fields = [
+        StructField("header", StringType(), True),
+        StructField("sequence", StringType(), True),
+    ]
+    if is_fastq:
+        fields.append(StructField("quality", StringType(), True))
+    return StructType(fields)
+
+
 def register(spark: SparkSession) -> None:
-    """Idempotently register the fastx data source on this session."""
+    """Idempotently register the fastx data source on this session, for
+    ``spark.read.format("fastx")``; :func:`scan_fastx` does not need it."""
     register_data_source(spark, FastxDataSource)
 
 
@@ -261,14 +281,17 @@ def scan_fastx(
 ) -> DataFrame:
     """Lazy FASTX scan → DataFrame (the reference's ``scan_fastx`` intent;
     its ``__init__`` imports the symbol that never existed — SURVEY.md §0.1).
+
+    Paths, format and splits are resolved here, in the caller's process
+    (see the module docstring); the records are read when an action runs.
     """
-    register(spark)
-    r = spark.read.format("fastx").option("path", path)
-    if format:
-        r = r.option("format", format)
-    if split_bytes:
-        r = r.option("split_bytes", str(split_bytes))
-    return r.load()
+    paths = _expand_paths(path)
+    is_fastq = _is_fastq(paths, format)
+    split = DEFAULT_SPLIT_BYTES if split_bytes is None else split_bytes
+    return scan_splits(
+        spark, FastxReader(paths, is_fastq, split), _fastx_schema(is_fastq),
+        FastxDataSource,
+    )
 
 
 def read_fastx(spark: SparkSession, path: str, **kwargs) -> DataFrame:

@@ -2,10 +2,13 @@
 
 Web-scale training pipelines START from WARC: crawl archives land as
 ``.warc.gz`` files whose records hold the HTTP responses the HTML/
-text/quality/dedup tiers consume. This is the same Python Data Source
-shape as the FASTX scan (``sources/fastx.py``) with the same 100 TB
-posture: one partition per byte range, records parsed where they
-live, nothing data-sized on the driver.
+text/quality/dedup tiers consume. It has the same two entries as the
+FASTX scan (``sources/fastx.py``): ``scan_warc`` plans the splits in
+the caller's process (``sources/splits.py``), and
+``spark.read.format("warc")`` after :func:`register` is the
+engine-native Python Data Source; both share ``WarcReader``. Same
+100 TB posture: one partition per byte range, records parsed where
+they live, nothing data-sized on the driver.
 
 Split strategy mirrors the FASTA/BGZF pair:
 
@@ -58,6 +61,11 @@ from pyspark.sql.types import (
 )
 
 from polars_fastx_spark.session import register_data_source
+from polars_fastx_spark.sources.splits import (
+    byte_ranges,
+    check_split_bytes,
+    scan_splits,
+)
 
 DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
 _GZ_MAGIC = b"\x1f\x8b\x08"
@@ -481,16 +489,13 @@ class WarcReader(DataSourceReader):
         self._split_bytes = split_bytes
 
     def partitions(self) -> Sequence[WarcPartition]:
+        check_split_bytes(self._split_bytes)
         parts: list[WarcPartition] = []
         for p in self._paths:
             size = os.path.getsize(p)
             if size > self._split_bytes:
-                for off in range(0, size, self._split_bytes):
-                    parts.append(
-                        WarcPartition(
-                            p, off, min(off + self._split_bytes, size)
-                        )
-                    )
+                for s, e in byte_ranges(size, self._split_bytes):
+                    parts.append(WarcPartition(p, s, e))
             else:
                 parts.append(WarcPartition(p, 0, None))
         return parts
@@ -530,7 +535,8 @@ class WarcDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    """Idempotently register the warc data source on this session."""
+    """Idempotently register the warc data source on this session, for
+    ``spark.read.format("warc")``; :func:`scan_warc` does not need it."""
     register_data_source(spark, WarcDataSource)
 
 
@@ -538,12 +544,14 @@ def scan_warc(
     spark: SparkSession, path: str, split_bytes: int | None = None
 ) -> DataFrame:
     """Lazy WARC scan → DataFrame (see module docstring for columns
-    and split semantics)."""
-    register(spark)
-    reader = spark.read.format("warc")
-    if split_bytes is not None:
-        reader = reader.option("split_bytes", split_bytes)
-    return reader.load(path)
+    and split semantics). Splits are planned here, in the caller's
+    process (``sources/splits.py``); records are read when an action
+    runs."""
+    split = DEFAULT_SPLIT_BYTES if split_bytes is None else split_bytes
+    return scan_splits(
+        spark, WarcReader(_expand_paths(path), split), WARC_SCHEMA,
+        WarcDataSource,
+    )
 
 
 def resolve_revisits(df: DataFrame, drop: bool = False) -> DataFrame:

@@ -11,6 +11,7 @@ from tests.conftest import FIXTURES
 from polars_fastx_spark.sources import parser
 from polars_fastx_spark.sources.fastx import (
     FastxDataSource,
+    FastxReader,
     parse_fasta_relational,
     read_fastx,
     register,
@@ -84,12 +85,105 @@ def test_range_parser_no_dup_no_loss():
 
 
 def test_filter_pushdown_applied(spark):
-    df = scan_fastx(spark, str(FIXTURES / "basic.fasta"))
+    """``format("fastx")`` is the entry that pushes filters into the
+    reader; ``scan_fastx`` leaves them to Spark and returns the same rows."""
+    path = str(FIXTURES / "basic.fasta")
+    register(spark)
+    df = spark.read.format("fastx").load(path)
     out = df.filter(df.header.startswith("seq_1"))
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Filter" not in plan, f"filter should be pushed into scan: {plan}"
     headers = [r["header"] for r in out.collect()]
     assert headers and all(h.startswith("seq_1") for h in headers)
+    scan = scan_fastx(spark, path)
+    assert sorted(_fasta_rows(scan.filter(scan.header.startswith("seq_1")))) == (
+        sorted(_fasta_rows(out))
+    )
+
+
+def test_scan_is_map_in_arrow_over_range(spark):
+    """The scan is planned in the driver: one ``mapInArrow`` over a
+    ``Range`` with one row per split, and no Python data-source scan."""
+    from polars_fastx_spark.pipeline import fasta_stats_frame
+
+    path = str(FIXTURES / "multiline.fasta")
+    df = scan_fastx(spark, path, split_bytes=256)
+    n = len(FastxReader([path], False, 256).partitions())
+    assert n > 1
+    for frame in (df, fasta_stats_frame(df, 2)):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        lines = [ln.strip(" +-:") for ln in plan.splitlines()]
+        assert lines[-2].startswith("MapInArrow"), plan
+        assert lines[-1].startswith(f"Range (0, {n}, step=1, splits=Some({n}))"), plan
+        assert "BatchScan" not in plan and "PythonDataSource" not in plan, plan
+    assert df.rdd.getNumPartitions() == n
+
+
+def test_scan_reads_all_rows_with_unlimited_arrow_batches(spark, golden):
+    """``maxRecordsPerBatch <= 0`` means no limit, not zero-row batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        df = scan_fastx(spark, str(FIXTURES / "multiline.fasta"))
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(_fasta_rows(df)) == sorted(golden)
+
+
+_DAEMON_PROBE = """
+import subprocess, sys
+from pyspark import SparkContext
+from polars_fastx_spark.pipeline import fasta_stats
+from polars_fastx_spark.session import builder
+
+spark = builder("daemon-probe", master="local[2]",
+                extra_conf={"spark.ui.enabled": "false"}).getOrCreate()
+fasta_stats(spark, sys.argv[1], sys.argv[2])
+jvm = SparkContext._gateway.proc.pid
+ps = subprocess.run(["ps", "--ppid", str(jvm), "-o", "args="],
+                    capture_output=True, text=True, check=True)
+print("CHILDREN", repr(ps.stdout))
+spark.stop()
+"""
+
+
+def test_fasta_stats_starts_only_the_worker_daemon(tmp_path):
+    """One ``fasta_stats`` in a fresh session leaves one Python daemon
+    under the JVM, the executors' ``pyspark.worker``: the scan is
+    planned in the driver, so no data-source planner daemon starts."""
+    import ast
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    proc = subprocess.run(
+        [sys.executable, "-c", _DAEMON_PROBE,
+         str(FIXTURES / "basic.fasta"), str(tmp_path / "out")],
+        capture_output=True, text=True, timeout=600, cwd=REPO,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("CHILDREN"))
+    children = ast.literal_eval(line.split(" ", 1)[1]).splitlines()
+    daemons = [c.split("pyspark.daemon", 1)[1].split() for c in children
+               if "pyspark.daemon" in c]
+    assert daemons == [["pyspark.worker"]], children
+
+
+@pytest.mark.parametrize("split", [0, -5])
+def test_non_positive_split_bytes_raises(spark, split):
+    """A split target <= 0 used to plan zero splits (an empty scan) or
+    fall back to the default; every entry now rejects it."""
+    path = str(FIXTURES / "basic.fasta")
+    with pytest.raises(ValueError, match="split_bytes must be > 0"):
+        FastxReader([path], False, split).partitions()
+    with pytest.raises(ValueError, match="split_bytes must be > 0"):
+        scan_fastx(spark, path, split_bytes=split)
+    register(spark)
+    reader = spark.read.format("fastx").option("split_bytes", str(split))
+    with pytest.raises(Exception, match="split_bytes must be > 0"):
+        reader.load(path).collect()
 
 
 def test_directory_and_glob(spark, tmp_path, golden):

@@ -75,6 +75,35 @@ def test_split_parity(spark, tmp_path, suffix):
     assert a == b and len(a) == 300
 
 
+@pytest.mark.parametrize("split", [0, -5])
+def test_non_positive_split_bytes_raises(spark, tmp_path, split):
+    """A split target <= 0 used to plan zero splits (an empty scan) or
+    fail with a bare ``range()`` error; every entry now rejects it."""
+    p = str(tmp_path / "t.warc")
+    warc.write_warc(p, _mk_records(2))
+    with pytest.raises(ValueError, match="split_bytes must be > 0"):
+        warc.WarcReader([p], split).partitions()
+    with pytest.raises(ValueError, match="split_bytes must be > 0"):
+        warc.scan_warc(spark, p, split_bytes=split)
+    warc.register(spark)
+    reader = spark.read.format("warc").option("split_bytes", str(split))
+    with pytest.raises(Exception, match="split_bytes must be > 0"):
+        reader.load(p).collect()
+
+
+def test_format_warc_matches_scan_warc(spark, tmp_path):
+    """The engine-native ``format("warc")`` entry and ``scan_warc`` share
+    one reader and return the same rows."""
+    p = str(tmp_path / "t.warc.gz")
+    warc.write_warc(p, _mk_records(40))
+    warc.register(spark)
+    native = spark.read.format("warc").option("split_bytes", "2048").load(p)
+    scan = warc.scan_warc(spark, p, split_bytes=2048)
+    assert scan.schema == native.schema
+    assert scan.rdd.getNumPartitions() == native.rdd.getNumPartitions() > 1
+    assert sorted(map(tuple, scan.collect())) == sorted(map(tuple, native.collect()))
+
+
 def _record_of_exact_length(total: int) -> bytes:
     """A resource record rendered to exactly ``total`` bytes (the
     Content-Length header's digit count shifts with the pad, so
