@@ -288,9 +288,11 @@ def scan_fastx(
     paths = _expand_paths(path)
     is_fastq = _is_fastq(paths, format)
     split = DEFAULT_SPLIT_BYTES if split_bytes is None else split_bytes
+    splits = FastxReader(paths, is_fastq, split).partitions()
+    # each task gets its split as row data: its reader needs no paths
     return scan_splits(
-        spark, FastxReader(paths, is_fastq, split), _fastx_schema(is_fastq),
-        FastxDataSource,
+        spark, splits, FastxReader([], is_fastq, split),
+        _fastx_schema(is_fastq), FastxDataSource,
     )
 
 

@@ -548,9 +548,10 @@ def scan_warc(
     process (``sources/splits.py``); records are read when an action
     runs."""
     split = DEFAULT_SPLIT_BYTES if split_bytes is None else split_bytes
+    splits = WarcReader(_expand_paths(path), split).partitions()
+    # each task gets its split as row data: its reader needs no paths
     return scan_splits(
-        spark, WarcReader(_expand_paths(path), split), WARC_SCHEMA,
-        WarcDataSource,
+        spark, splits, WarcReader([], split), WARC_SCHEMA, WarcDataSource
     )
 
 

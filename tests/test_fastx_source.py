@@ -101,9 +101,10 @@ def test_filter_pushdown_applied(spark):
     )
 
 
-def test_scan_is_map_in_arrow_over_range(spark):
-    """The scan is planned in the driver: one ``mapInArrow`` over a
-    ``Range`` with one row per split, and no Python data-source scan."""
+def test_scan_is_map_in_arrow_over_split_rows(spark):
+    """The scan is planned in the driver: one ``mapInArrow`` over an
+    RDD-backed relation with one split row per partition, and no Python
+    data-source scan."""
     from polars_fastx_spark.pipeline import fasta_stats_frame
 
     path = str(FIXTURES / "multiline.fasta")
@@ -114,9 +115,29 @@ def test_scan_is_map_in_arrow_over_range(spark):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
         lines = [ln.strip(" +-:") for ln in plan.splitlines()]
         assert lines[-2].startswith("MapInArrow"), plan
-        assert lines[-1].startswith(f"Range (0, {n}, step=1, splits=Some({n}))"), plan
+        assert lines[-1].startswith("LogicalRDD [split#"), plan
         assert "BatchScan" not in plan and "PythonDataSource" not in plan, plan
     assert df.rdd.getNumPartitions() == n
+
+
+def test_scan_is_never_planned_as_a_broadcast(spark):
+    """The scan reports no size, like a data-source scan, so a join of
+    two scans shuffles both sides instead of collecting one to the
+    driver, as it would over a small-estimate leaf such as ``Range``."""
+    from pyspark.sql import functions as F
+
+    path = str(FIXTURES / "multiline.fasta")
+    df = scan_fastx(spark, path, split_bytes=256)
+    stats = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    default = spark.conf.get("spark.sql.defaultSizeInBytes").rstrip("b")
+    assert str(stats) == default
+    lengths = scan_fastx(spark, path).select(
+        "header", F.length("sequence").alias("n")
+    )
+    joined = df.join(lengths, "header")
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan and "Broadcast" not in plan, plan
+    assert joined.count() == df.count()
 
 
 def test_scan_reads_all_rows_with_unlimited_arrow_batches(spark, golden):

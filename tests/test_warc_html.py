@@ -104,6 +104,17 @@ def test_format_warc_matches_scan_warc(spark, tmp_path):
     assert sorted(map(tuple, scan.collect())) == sorted(map(tuple, native.collect()))
 
 
+def test_resolve_revisits_never_broadcasts_the_scan(spark, tmp_path):
+    """The originals side of ``resolve_revisits`` is corpus-sized: it
+    must shuffle, never be collected to the driver for a broadcast."""
+    p = str(tmp_path / "t.warc.gz")
+    warc.write_warc(p, _mk_records(40))
+    resolved = warc.resolve_revisits(warc.scan_warc(spark, p))
+    plan = resolved._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan and "Broadcast" not in plan, plan
+    assert resolved.count() == 40
+
+
 def _record_of_exact_length(total: int) -> bytes:
     """A resource record rendered to exactly ``total`` bytes (the
     Content-Length header's digit count shifts with the pad, so
