@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polars_fastx_spark.operators import vectors
+from polars_fastx_spark.operators.diffing import change_counts, snapshot_diff
+from polars_fastx_spark.session import persisted
 
 #: meta table schema (one row per index)
 META_SCHEMA = (
@@ -124,12 +126,13 @@ def index_build(
     with_cent = assigned.join(F.broadcast(centroids), "cell")
     # persisted across the eager codebook-construction jobs (dim probe,
     # seed collect, training collects) — same lifecycle as ivfpq_topk
-    resid = with_cent.select(
-        "__id", "cell",
-        F.zip_with("__v", "centroid_vec", lambda a, b: a - b).alias("__r"),
-        _vec_fp(F.col("__v")).alias("__fp"),
-    ).persist()
-    try:
+    with persisted(
+        with_cent.select(
+            "__id", "cell",
+            F.zip_with("__v", "centroid_vec", lambda a, b: a - b).alias("__r"),
+            _vec_fp(F.col("__v")).alias("__fp"),
+        )
+    ) as resid:
         # dim comes free from the collected centroid rows — drops the
         # one-row dimensionality probe job from both training paths
         vdim = len(cent_rows[0]["centroid_vec"]) if cent_rows else None
@@ -156,8 +159,6 @@ def index_build(
             [(id_col, num_cells, m, pq_k, dim, pinned)], META_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
         coded.write.mode("overwrite").parquet(f"{path}/codes/epoch=0")
-    finally:
-        resid.unpersist()
 
 
 def index_build_if_absent(
@@ -343,8 +344,6 @@ def index_sync(
 
     Returns ``{"added": n, "removed": n, "changed": n}``.
     """
-    from polars_fastx_spark.operators.diffing import snapshot_diff
-
     spark = old_df.sparkSession
     if id_col is None:
         id_col = spark.read.parquet(f"{path}/meta").first()["id_col"]
@@ -353,48 +352,13 @@ def index_sync(
         new_df.select(id_col, vec_col),
         [id_col],
         [vec_col],
-    ).persist()
-    try:
-        counts = {
-            r["change_type"]: r["n"]
-            for r in d.groupBy("change_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # bounded: ≤3 rows
-        }
-        out = {
-            "added": int(counts.get("added", 0)),
-            "removed": int(counts.get("removed", 0)),
-            "changed": int(counts.get("changed", 0)),
-        }
-        dead = out["removed"] + out["changed"]
-        fresh = out["added"] + out["changed"]
-        if (dead or fresh) and epoch is None:
-            epoch = _next_index_epoch(spark, path)
-        if dead:
-            index_delete(
-                spark,
-                path,
-                d.filter(
-                    F.col("change_type").isin("removed", "changed")
-                ).select(id_col),
-                epoch=epoch,
-            )
-        if fresh:
-            index_add(
-                d.filter(
-                    F.col("change_type").isin("added", "changed")
-                ).select(
-                    F.col(id_col),
-                    F.col(f"new_{vec_col}").alias(vec_col),
-                ),
-                vec_col,
-                path,
-                id_col=id_col,
-                epoch=epoch + 1,
-            )
-    finally:
-        d.unpersist()
-    return out
+    )
+    return _apply_sync(
+        d, path, id_col, vec_col, epoch,
+        lambda fresh: fresh.select(
+            F.col(id_col), F.col(f"new_{vec_col}").alias(vec_col)
+        ),
+    )
 
 
 def index_sync_from_index(
@@ -418,8 +382,6 @@ def index_sync_from_index(
     clear message — rebuild once or use :func:`index_sync` with the
     old snapshot. Returns ``{"added", "removed", "changed"}`` counts.
     """
-    from polars_fastx_spark.operators.diffing import snapshot_diff
-
     spark = new_df.sparkSession
     if id_col is None:
         id_col = spark.read.parquet(f"{path}/meta").first()["id_col"]
@@ -435,19 +397,29 @@ def index_sync_from_index(
     new_fp = new_df.select(
         F.col(id_col), _vec_fp(F.col(vec_col)).alias("__fp")
     )
-    d = snapshot_diff(old_fp, new_fp, [id_col], ["__fp"]).persist()
-    try:
-        counts = {
-            r["change_type"]: r["n"]
-            for r in d.groupBy("change_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # bounded: ≤3 rows
-        }
-        out = {
-            "added": int(counts.get("added", 0)),
-            "removed": int(counts.get("removed", 0)),
-            "changed": int(counts.get("changed", 0)),
-        }
+    d = snapshot_diff(old_fp, new_fp, [id_col], ["__fp"])
+    return _apply_sync(
+        d, path, id_col, vec_col, epoch,
+        lambda fresh: fresh.select(id_col).join(
+            new_df.select(id_col, vec_col), id_col
+        ),
+    )
+
+
+def _apply_sync(
+    diff: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    epoch: int | None,
+    fresh_vectors,
+) -> dict[str, int]:
+    """Apply a ``snapshot_diff`` on ``id_col``: removed+changed ids
+    tombstone at epoch E, then ``fresh_vectors`` of the added+changed
+    diff rows, (``id_col``, ``vec_col``), encode at E+1."""
+    spark = diff.sparkSession
+    with persisted(diff) as d:
+        out = change_counts(d)
         dead = out["removed"] + out["changed"]
         fresh = out["added"] + out["changed"]
         if (dead or fresh) and epoch is None:
@@ -463,16 +435,14 @@ def index_sync_from_index(
             )
         if fresh:
             index_add(
-                d.filter(F.col("change_type").isin("added", "changed"))
-                .select(id_col)
-                .join(new_df.select(id_col, vec_col), id_col),
+                fresh_vectors(
+                    d.filter(F.col("change_type").isin("added", "changed"))
+                ),
                 vec_col,
                 path,
                 id_col=id_col,
                 epoch=epoch + 1,
             )
-    finally:
-        d.unpersist()
     return out
 
 

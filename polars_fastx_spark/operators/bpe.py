@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from polars_fastx_spark.session import cache_scope, persist
+
 
 def word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     """Corpus → (word, cnt) vocabulary: the ONE corpus-wide pass.
@@ -125,11 +127,13 @@ def _train(docs: DataFrame, text_col: str, num_merges: int):
     if num_merges < 1:
         raise ValueError("BPE training needs num_merges >= 1")
     vocab = word_counts(docs, text_col)
-    state = vocab.select(
-        "word",
-        F.expr("regexp_extract_all(word, '.', 0)").alias("syms"),
-        "cnt",
-    ).persist()
+    state = persist(
+        vocab.select(
+            "word",
+            F.expr("regexp_extract_all(word, '.', 0)").alias("syms"),
+            "cnt",
+        )
+    )
 
     rules = []
     for r in range(1, num_merges + 1):
@@ -169,7 +173,8 @@ def bpe_train(
     with the corpus-weighted frequency that won it, ties broken by
     (lhs, rhs) ascending so training is fully deterministic.
     """
-    rules, _ = _train(docs, text_col, num_merges)
+    with cache_scope():  # the vocabulary state dies with the rules
+        rules, _ = _train(docs, text_col, num_merges)
     return docs.sparkSession.createDataFrame(rules, _RULES_SCHEMA)
 
 

@@ -26,6 +26,7 @@ from functools import partial
 from pyspark.sql import DataFrame, functions as F
 
 from polars_fastx_spark.functions.exprs import let_sql, sql_ident, sql_str
+from polars_fastx_spark.session import persist, persisted
 
 
 # ---------------------------------------------------------------- exact (L1)
@@ -320,7 +321,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     family: str = "md5",
-    persist: bool = True,
     collapse_exact: bool = True,
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -330,13 +330,13 @@ def minhash_lsh_candidates(
     Two documents become a candidate pair iff all rows of at least one
     band agree — P(candidate) ≈ 1-(1-j^r)^b for Jaccard j.
 
-    ``persist``: the banded table is self-joined, so it is persisted
-    (memory-and-disk) by default. Without this, both join sides inline
-    the full shingle→signature expression tree — signatures compute
-    twice AND whole-stage codegen compiles 2× bands copies of the tree
-    (measured ~8 s one-time JIT at 16 hashes × 4 bands). Production
-    pipelines at corpus scale should write the signature table to
-    storage instead and join from there.
+    The banded table is self-joined, so it is persisted
+    (memory-and-disk; released with an enclosing ``cache_scope``).
+    Without this, both join sides inline the full shingle→signature
+    expression tree — signatures compute twice AND whole-stage codegen
+    compiles 2× bands copies of the tree (measured ~8 s one-time JIT at
+    16 hashes × 4 bands). Production pipelines at corpus scale should
+    write the signature table to storage instead and join from there.
 
     ``collapse_exact`` (default True — the standalone-safe posture):
     candidate pairing inside a band bucket is quadratic in bucket size,
@@ -403,8 +403,7 @@ def minhash_lsh_candidates(
             F.col("__cid").alias("__id")
         )
         with_bands = with_bands.join(rep_ids, "__id")
-    if persist:
-        with_bands = with_bands.persist()
+    with_bands = persist(with_bands)
     if bucket_cap is not None:
         # One extra agg on the SAME (band, band_key) key the self-join
         # shuffles on — co-partitioned, no new exchange regime. Small
@@ -829,10 +828,11 @@ def _containment_append(
         spark.createDataFrame(
             [(id_col, k, hash_shingles)], _CONTAIN_META_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    post = shingle_postings(
-        ensure_min_parallelism(batch), id_col, text_col, k, hash_shingles
-    ).persist()  # shingle once: sizes, dfreq, and the postings write
-    try:
+    with persisted(
+        shingle_postings(
+            ensure_min_parallelism(batch), id_col, text_col, k, hash_shingles
+        )
+    ) as post:  # shingle once: sizes, dfreq, and the postings write
         post.groupBy("__id").agg(F.count("*").alias("__sz")).write.mode(
             "overwrite"
         ).parquet(f"{path}/sizes/epoch={epoch}")
@@ -840,8 +840,6 @@ def _containment_append(
             "overwrite"
         ).parquet(f"{path}/dfreq/epoch={epoch}")
         post.write.mode("overwrite").parquet(f"{path}/postings/epoch={epoch}")
-    finally:
-        post.unpersist()
 
 
 def containment_index_build(
@@ -1342,8 +1340,7 @@ def _compact_containment_with_tombstones(
             & (posts["epoch"] < tomb["__t_e"]),
             "left_anti",
         )
-    live = posts.drop("epoch").persist()
-    try:
+    with persisted(posts.drop("epoch")) as live:
         live.write.mode("overwrite").parquet(f"{path}/{stage}/postings")
         live.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz")).write.mode(
             "overwrite"
@@ -1351,8 +1348,6 @@ def _compact_containment_with_tombstones(
         live.groupBy("shingle").agg(
             F.count(F.lit(1)).alias("__df")
         ).write.mode("overwrite").parquet(f"{path}/{stage}/dfreq")
-    finally:
-        live.unpersist()
     fs.create(_p(f"{stage}/_COMMIT"), True).close()
     _swap(stage, target, upto_epoch)
 

@@ -137,6 +137,13 @@ def snapshot_diff_summary(
     )
 
 
+def change_counts(diff: DataFrame) -> dict[str, int]:
+    """{added, removed, changed}: row counts of a ``snapshot_diff`` by
+    change class, in one bounded (≤3-row) collect."""
+    got = dict(diff.groupBy("change_type").count().collect())
+    return {c: int(got.get(c, 0)) for c in (ADDED, REMOVED, CHANGED)}
+
+
 def _diff_compare_cols(diff: DataFrame) -> list[str]:
     """Recover the compared columns from a diff's old_*/new_* pairs."""
     olds = {c[4:] for c in diff.columns if c.startswith("old_")}

@@ -23,33 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a ``localCheckpoint`` frame's materialized blocks.
-
-    ``DataFrame.unpersist()`` does NOT release them (verified: the
-    LogicalRDD's storage survives it), so an iterative loop that
-    checkpoints every round would pile one fully-materialized table
-    per round into executor storage. Reaches the internal RDD via the
-    analyzed plan; best-effort — if the internal surface moves, the
-    worst case is the old behavior (blocks held until session end),
-    never a wrong result. Only call when NOTHING live can recompute
-    through this frame (its lineage is cut, so evicted dependents
-    could not rebuild from it anyway)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
+from polars_fastx_spark import session
 
 
+@session.cache_scope()
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the minimum node id in the component.
@@ -66,33 +48,36 @@ def connected_components(
     rounds).
     Each round references the previous label table ~4 times
     (messages + union + the doubling self-join), so the logical plan
-    grows 4^rounds without lineage cuts; ``localCheckpoint`` every
-    round (``checkpoint_every=1``) keeps it bounded — cheap, since the
-    label table is materialized for the convergence check anyway and
-    pointer doubling keeps total rounds logarithmic. For integral node
-    ids the convergence check is a single exact Σcomponent scan (labels
-    only ever decrease); string ids fall back to a join-based count.
+    grows 4^rounds without lineage cuts; a ``localCheckpoint`` every
+    round keeps it bounded — cheap, since the label table is
+    materialized for the convergence check anyway and pointer doubling
+    keeps total rounds logarithmic. For integral node ids the
+    convergence check is a single exact Σcomponent scan (labels only
+    ever decrease); string ids fall back to a join-based count.
     """
+    from pyspark.sql.types import IntegralType
+
     # Persist the INPUT edge projection before symmetrizing: the union
     # references ``edges`` twice, and for LSH dedup callers that
     # lineage is the banded self-join — without this cache the
     # quadratic candidate join executed once PER UNION BRANCH (block-
     # level locking makes the racing branch wait for, then read, the
     # one computation). Released as soon as bidir's own cache is
-    # materialized (the first collect below) — bidir serves every
-    # later consumer, so holding ein past that point only adds heap
-    # pressure; the finally keeps a backstop for the string-id path.
-    ein = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    bidir = (
+    # materialized (the first collect or checkpoint below) — bidir
+    # serves every later consumer, so holding ein past that point only
+    # adds heap pressure.
+    ein = session.persist(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    )
+    bidir = session.persist(
         ein.union(ein.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .persist()
     )
-    labels = (
+    labels = session.persist(
         bidir.select("u").distinct().select(
             F.col("u").alias("node"), F.col("u").alias("component")
         )
-    ).persist()
+    )
     # Convergence detection: labels are monotonically non-increasing
     # (the min-propagation includes each node's own label, and pointer
     # doubling substitutes component ← label(component) ≤ component),
@@ -102,90 +87,71 @@ def connected_components(
     # full label tables into a join every round. decimal(38,0) keeps
     # the sum exact for any realistic table (10^38 ≫ max_long · rows).
     # Non-integral ids (strings) keep the join-based count.
-    from pyspark.sql.types import IntegralType
-
     sum_check = isinstance(
         labels.schema["component"].dataType, IntegralType
     )
     _label_sum = F.sum(
         F.col("component").cast("decimal(38,0)")
     ).alias("s")
-    prev_sum = (
-        labels.agg(_label_sum).collect()[0][0] if sum_check else None
-    )
+    prev_sum = labels.agg(_label_sum).collect()[0][0] if sum_check else None
     if sum_check:
         # that collect materialized labels ← bidir ← ein; bidir's own
         # blocks now serve every consumer, so ein's can go
-        ein.unpersist()
-    prev_ck: DataFrame | None = None
-    try:
-        for i in range(max_iterations):
-            # neighbor labels flow along edges; keep the minimum seen
-            msgs = bidir.join(
-                labels, bidir.v == labels.node, "inner"
-            ).select(F.col("u").alias("node"), F.col("component"))
-            propagated = (
-                labels.select("node", "component")
-                .union(msgs)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-            )
-            # pointer doubling (path compression): component ←
-            # label(component). One extra self-join per round turns
-            # O(diameter) convergence into O(log diameter) — a
-            # million-node near-dup chain converges in ~20 rounds
-            # instead of a million. Every component value is itself a
-            # node id, so the lookup is an equi-join on the label
-            # table; left+coalesce keeps already-minimal labels.
-            parent = propagated.select(
-                F.col("node").alias("__pn"), F.col("component").alias("__pc")
-            )
-            pre = (
-                propagated.join(
-                    parent, propagated.component == F.col("__pn"), "left"
-                )
-                .select(
-                    "node",
-                    F.coalesce(F.col("__pc"), F.col("component")).alias(
-                        "component"
-                    ),
-                )
-            ).persist()
-            ck_round = (i + 1) % checkpoint_every == 0
-            if ck_round:
-                new_labels = pre.localCheckpoint(eager=True)
-                pre.unpersist()  # checkpoint materialized; cache is dead
-            else:
-                new_labels = pre
-            if sum_check:
-                new_sum = new_labels.agg(_label_sum).collect()[0][0]
-                changed = int(new_sum != prev_sum)
-                prev_sum = new_sum
-            else:
-                changed = (
-                    new_labels.join(
-                        labels.withColumnRenamed("component", "old"),
-                        "node",
-                    )
-                    .filter(F.col("component") != F.col("old"))
-                    .count()
-                )
-            labels.unpersist()
-            if ck_round and prev_ck is not None:
-                # everything live now derives from new_labels' OWN
-                # blocks, so the previous checkpoint's can go
-                _release_checkpoint(prev_ck)
-            if ck_round:
-                prev_ck = new_labels
-            labels = new_labels
-            if changed == 0:
-                return labels
-        raise RuntimeError(
-            f"connected_components: no convergence in {max_iterations} iterations"
+        session.release(ein)
+    for i in range(max_iterations):
+        # neighbor labels flow along edges; keep the minimum seen
+        msgs = bidir.join(
+            labels, bidir.v == labels.node, "inner"
+        ).select(F.col("u").alias("node"), F.col("component"))
+        propagated = (
+            labels.select("node", "component")
+            .union(msgs)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
         )
-    finally:
-        bidir.unpersist()
-        ein.unpersist()
+        # pointer doubling (path compression): component ←
+        # label(component). One extra self-join per round turns
+        # O(diameter) convergence into O(log diameter) — a
+        # million-node near-dup chain converges in ~20 rounds
+        # instead of a million. Every component value is itself a
+        # node id, so the lookup is an equi-join on the label
+        # table; left+coalesce keeps already-minimal labels.
+        parent = propagated.select(
+            F.col("node").alias("__pn"), F.col("component").alias("__pc")
+        )
+        new_labels = session.local_checkpoint(
+            propagated.join(
+                parent, propagated.component == F.col("__pn"), "left"
+            ).select(
+                "node",
+                F.coalesce(F.col("__pc"), F.col("component")).alias(
+                    "component"
+                ),
+            )
+        )
+        if i == 0 and not sum_check:
+            session.release(ein)  # the string path's first materialization
+        if sum_check:
+            new_sum = new_labels.agg(_label_sum).collect()[0][0]
+            changed = int(new_sum != prev_sum)
+            prev_sum = new_sum
+        else:
+            changed = (
+                new_labels.join(
+                    labels.withColumnRenamed("component", "old"),
+                    "node",
+                )
+                .filter(F.col("component") != F.col("old"))
+                .count()
+            )
+        # everything live now derives from new_labels' OWN blocks
+        session.release(labels)
+        labels = new_labels
+        if changed == 0:
+            return session.keep(labels)
+    raise RuntimeError(
+        f"connected_components: no convergence in {max_iterations} iterations"
+    )
 
 
 def duplicate_groups_from_pairs(
@@ -202,13 +168,17 @@ def duplicate_groups_from_pairs(
     )
 
 
+#: pagerank's rounds between lineage cuts (the rounds between persist)
+_PAGERANK_CHECKPOINT_EVERY = 5
+
+
+@session.cache_scope()
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank by power iteration over a distributed edge list.
@@ -219,7 +189,7 @@ def pagerank(
     same layout. Dangling-node mass (out-degree 0) is redistributed
     uniformly, keeping ``sum(rank) == 1`` exactly — the invariant the
     tests pin. Ranks persist each round and the lineage is cut via
-    localCheckpoint every ``checkpoint_every`` iterations (an
+    localCheckpoint every ``_PAGERANK_CHECKPOINT_EVERY`` iterations (an
     unbounded iterative plan otherwise re-executes from the source and
     eventually overwhelms the planner). Only 1-row aggregates
     (dangling mass) reach the driver.
@@ -240,19 +210,17 @@ def pagerank(
     # separately (for l_crawl_rank that lineage is the whole
     # html_links → normalize_url extraction — measured 2 full
     # executions before this).
-    edges = edges.persist()
-    nodes = (
+    edges = session.persist(edges)
+    nodes = session.persist(
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-    ).persist()
+    )
     n = nodes.count()
     if n == 0:
         # empty subgraphs are a normal pipeline state (a filter stage
         # can drain the edge list) — return an empty ranks frame, don't
         # ZeroDivisionError on 1/n
-        nodes.unpersist()
-        edges.unpersist()
         return sc.createDataFrame([], "node long, rank double").select(
             F.col("node").cast(edges.schema[src].dataType), "rank"
         )
@@ -260,10 +228,9 @@ def pagerank(
         F.count("*").alias("out_deg")
     )
     # edge list annotated with the sender's out-degree, reused all rounds
-    ed = (
+    ed = session.persist(
         edges.select(F.col(src).alias("node"), F.col(dst).alias("to"))
         .join(deg, "node")
-        .persist()
     )
     # The DANGLING NODE SET (out-degree 0) is a property of the graph,
     # not of the rank vector — compute it once instead of rebuilding a
@@ -272,9 +239,9 @@ def pagerank(
     # dangling MASS changes per round. Same node set, so the summed
     # rank set per round is unchanged (sum order may differ; the
     # oracles' round(7) absorbs order noise by design).
-    dangling_nodes = nodes.join(
-        ed.select("node"), "node", "left_anti"
-    ).persist()
+    dangling_nodes = session.persist(
+        nodes.join(ed.select("node"), "node", "left_anti")
+    )
     if init_ranks is None:
         ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     else:
@@ -290,11 +257,12 @@ def pagerank(
         ranks = r0.select(
             "node", (F.col("rank") / F.lit(float(tot))).alias("rank")
         )
-    prev_ck: DataFrame | None = None
-    cur_cached: DataFrame | None = None  # persist handle behind `ranks`
-    parent_cached: DataFrame | None = None  # one generation back — must
-    # stay cached until `ranks` itself materializes, else every round
-    # recomputes the whole chain from source (O(rounds²) total work)
+    # the persisted frame one generation back must stay cached until
+    # `ranks` itself materializes, else every round recomputes the
+    # whole chain from source (O(rounds²) total work); the latest
+    # checkpoint stays until a newer one supersedes it
+    parent: DataFrame | None = None
+    last_ck: DataFrame | None = None
     for i in range(iterations):
         contribs = (
             ranks.join(ed, "node")
@@ -311,51 +279,31 @@ def pagerank(
         )
         # that collect materialized `ranks` into its own cache blocks,
         # so the frame it computes FROM is now redundant
-        if parent_cached is not None:
-            parent_cached.unpersist()
-            parent_cached = None
+        session.release(parent)
+        parent = None
         base = (1.0 - damping) / n + damping * dangling / n
-        pre = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
-            )
-        ).persist()
-        ck_round = (i + 1) % checkpoint_every == 0
-        if ck_round:
-            new_ranks = pre.localCheckpoint(eager=True)
-            pre.unpersist()  # checkpoint materialized; cache is dead
-            if cur_cached is not None:
-                # the checkpoint is self-contained — parent cache dead
-                cur_cached.unpersist()
-                cur_cached = None
-            if prev_ck is not None:
-                _release_checkpoint(prev_ck)  # see connected_components
-            prev_ck = new_ranks
+        new_ranks = nodes.join(contribs, "node", "left").select(
+            "node",
+            (
+                F.lit(base)
+                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+            ).alias("rank"),
+        )
+        if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0:
+            # self-contained: nothing live reads `ranks` any more
+            new_ranks = session.local_checkpoint(new_ranks)
+            session.release(ranks, last_ck)
+            last_ck = new_ranks
         else:
-            new_ranks = pre
-            parent_cached = cur_cached
-            cur_cached = pre
+            new_ranks = session.persist(new_ranks)
+            parent = ranks if ranks.is_cached else None
         ranks = new_ranks
-    if cur_cached is not None:
-        # final frame is still lazy: materialize it (one round of
-        # compute, from the warm parent cache) before dropping the
-        # helper tables its lineage would otherwise rebuild from source
-        ranks = ranks.localCheckpoint(eager=True)
-        cur_cached.unpersist()
-        if parent_cached is not None:
-            parent_cached.unpersist()
-        if prev_ck is not None:
-            _release_checkpoint(prev_ck)
-    nodes.unpersist()
-    ed.unpersist()
-    dangling_nodes.unpersist()
-    edges.unpersist()
-    return ranks
+    if ranks.is_cached:
+        # the final frame is still lazy: materialize it (one round
+        # of compute, from the warm parent cache) before the scope
+        # drops the tables its lineage would otherwise rebuild from
+        ranks = session.local_checkpoint(ranks)
+    return session.keep(ranks)
 
 
 def triangle_count(edges: DataFrame, u_col: str = "u", v_col: str = "v") -> DataFrame:

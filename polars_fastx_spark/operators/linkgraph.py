@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from polars_fastx_spark.operators.diffing import change_counts
+from polars_fastx_spark.session import persisted
 from polars_fastx_spark.sources.sinks import committed_epochs, hadoop_fs
 
 
@@ -133,22 +135,16 @@ def edge_index_sync(
     append at E+1. Both writes are delta-sized. Returns the page
     counts per change class (the release-note numbers)."""
     spark = diff.sparkSession
-    d = diff.persist()
-    try:
-        counts = {
-            r["change_type"]: r["n"]
-            for r in d.groupBy("change_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # bounded: ≤3 rows
-        }
+    with persisted(diff) as d:
+        counts = change_counts(d)
         dead = d.filter(
             F.col("change_type").isin("removed", "changed")
         ).select(F.col(key_col))
         fresh_keys = d.filter(
             F.col("change_type").isin("added", "changed")
         ).select(F.col(key_col))
-        n_dead = counts.get("removed", 0) + counts.get("changed", 0)
-        n_fresh = counts.get("added", 0) + counts.get("changed", 0)
+        n_dead = counts["removed"] + counts["changed"]
+        n_fresh = counts["added"] + counts["changed"]
         epoch = None
         if n_dead:
             epoch = edge_index_delete(spark, path, dead)
@@ -163,13 +159,7 @@ def edge_index_sync(
                 epoch=(epoch + 1) if epoch is not None
                 else _next_epoch(spark, path),
             )
-    finally:
-        d.unpersist()
-    return {
-        "added": int(counts.get("added", 0)),
-        "removed": int(counts.get("removed", 0)),
-        "changed": int(counts.get("changed", 0)),
-    }
+    return counts
 
 
 def live_edges(spark: SparkSession, path: str) -> DataFrame:

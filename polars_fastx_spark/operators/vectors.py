@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_fastx_spark.session import persisted
+
 
 def group_centroids(
     df: DataFrame,
@@ -431,8 +433,7 @@ def pq_train(
         dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
     assert dim % m == 0, f"dim {dim} not divisible by m={m}"
     sub = dim // m
-    subs = _subvectors(df, id_col, vec_col, m, sub).persist()
-    try:
+    with persisted(_subvectors(df, id_col, vec_col, m, sub)) as subs:
         books = _seed_books_from_subs(subs, id_col, m, k, sub)
         assigned = None
         for _ in range(iterations):
@@ -441,8 +442,6 @@ def pq_train(
             for r in new:  # empty clusters keep their previous centroid
                 books[r["j"]][r["c"]] = [float(x) for x in r["centroid"]]
         return _codes_frame(assigned, id_col), books
-    finally:
-        subs.unpersist()
 
 
 def pq_topk(
@@ -599,11 +598,12 @@ def ivfpq_topk(
     # each recompute the full vector-scan + centroid join; released
     # once the lazy result plan is built (its one action then evaluates
     # resid a single time)
-    resid = with_cent.select(
-        "__id", "cell",
-        F.zip_with("__v", "centroid_vec", lambda a, b: a - b).alias("__r"),
-    ).persist()
-    try:
+    with persisted(
+        with_cent.select(
+            "__id", "cell",
+            F.zip_with("__v", "centroid_vec", lambda a, b: a - b).alias("__r"),
+        )
+    ) as resid:
         if pinned_books:
             # zero-training md5-seeded books: fully SQL-replayable (the
             # pinned-oracle variant; also the frozen-codebook encode path)
@@ -617,5 +617,3 @@ def ivfpq_topk(
         return adc_search(
             coded, cent_rows, books, query, id_col, k=k, nprobe=nprobe
         )
-    finally:
-        resid.unpersist()

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from polars_fastx_spark.functions import seq as sq
 from polars_fastx_spark.functions.exprs import sql_ident
+from polars_fastx_spark import session
 from polars_fastx_spark.sources.fastx import scan_fastx
 from polars_fastx_spark.sources.sinks import write_tsv
 
@@ -140,6 +141,7 @@ def corpus_clean(
     return spark.read.parquet(out_path)
 
 
+@session.cache_scope()
 def crawl_to_corpus(
     spark: SparkSession,
     warc_path: str,
@@ -239,6 +241,9 @@ def crawl_to_corpus(
     ``timings[tier] = {"seconds", "rows"}`` (probe/observability
     mode; adds materialization barriers, so leave ``None`` in
     production where Catalyst should fuse the whole plan).
+
+    Every cache the call makes (tier barriers, the rows checkpoint, the
+    band table, the components' labels) is freed before it returns.
     """
     from pyspark.sql import Window, functions as F
 
@@ -262,13 +267,12 @@ def crawl_to_corpus(
             return df
         if t0 is None:
             t0 = _time.time()
-        df = df.persist()
+        df = session.persist(df)
         n = df.count()
         timings[name] = {
             "seconds": round(_time.time() - t0, 2), "rows": n,
         }
-        if _prev[0] is not None:
-            _prev[0].unpersist()
+        session.release(_prev[0])
         _prev[0] = df
         return df
 
@@ -342,7 +346,7 @@ def crawl_to_corpus(
     # scale, at the cost of materializing the extracted columns
     # (url/date/title/text — the small projection of the archive).
     # eager=False: nothing runs until the first downstream action.
-    rows = rows.localCheckpoint(eager=False)
+    rows = session.local_checkpoint(rows, eager=False)
     if robots is not None:
         from polars_fastx_spark.functions.robots import robots_gate
 
@@ -419,6 +423,4 @@ def crawl_to_corpus(
         timings["write"] = {
             "seconds": round(_time.time() - t_w, 2), "rows": None,
         }
-        if _prev[0] is not None:
-            _prev[0].unpersist()
     return spark.read.parquet(out_path)

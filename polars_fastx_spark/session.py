@@ -18,14 +18,27 @@ Defaults are chosen for oracle parity (SURVEY.md §4.4) and 100 TB posture
   hand-tuned partition counts.
 - Arrow enabled for pandas interchange — every Python-side operator in
   this engine uses Arrow-batched pandas UDFs, never row-at-a-time UDFs.
+
+Cache lifecycle: a cache an operator makes for its own use is released
+by construction, never by a hand-written ``unpersist``. One block holds
+a frame with ``persisted``; an eager operator runs in a ``cache_scope``,
+which releases every frame cached through ``persist`` /
+``local_checkpoint`` inside it (nested operators too), raised or not,
+except the one it hands out with ``keep``. Outside any scope those
+frames stay cached, which is how lazily returned frames (the MinHash
+band table) keep their cache. ``tests/test_cache_lifecycle.py`` lists
+the few direct ``persist``/``localCheckpoint`` calls left elsewhere.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import weakref
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS: dict[str, str] = {
     # events.parquet has INT64 TIMESTAMP(NANOS) — see SURVEY.md §4.4.1.
@@ -143,6 +156,104 @@ def register_data_source(spark: SparkSession, source: type) -> None:
     if source.name() not in names:
         spark.dataSource.register(source)
         names.add(source.name())
+
+
+#: per thread, as foreachBatch bodies run on their own: the open cache
+#: scopes, innermost last, each the frames it releases on exit
+_SCOPES = threading.local()
+#: frames made by ``local_checkpoint``: ``release`` frees the blocks of
+#: these only, never of a checkpoint the caller made
+_CHECKPOINTS: weakref.WeakSet[DataFrame] = weakref.WeakSet()
+
+
+def _open_scopes() -> list[list[DataFrame]]:
+    return _SCOPES.__dict__.setdefault("stack", [])
+
+
+def _hold(df: DataFrame) -> DataFrame:
+    scopes = _open_scopes()
+    if scopes:
+        scopes[-1].append(df)
+    return df
+
+
+def _forget(df: DataFrame) -> None:
+    for held in _open_scopes():
+        held[:] = [h for h in held if h is not df]
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, released when the enclosing scope closes."""
+    return _hold(df.persist())
+
+
+def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, released when the enclosing scope
+    closes. Eager ones go through a cache of ``df``, so the checkpoint
+    keeps its measured size, not an estimate, for join planning."""
+    if eager:
+        with persisted(df) as cached:
+            ck = cached.localCheckpoint(eager=True)
+    else:
+        ck = df.localCheckpoint(eager=False)
+    _CHECKPOINTS.add(ck)
+    return _hold(ck)
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Unpersist each frame (``None`` is skipped) and free a
+    ``local_checkpoint`` frame's blocks, which ``unpersist()`` leaves in
+    executor storage. Only once nothing live recomputes through it."""
+    for df in (d for d in dfs if d is not None):
+        _forget(df)
+        df.unpersist()
+        if df in _CHECKPOINTS:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """Hand ``df`` out of the innermost scope to the one around it, or
+    outside every scope to the caller, who then holds it cached."""
+    _forget(df)
+    scopes = _open_scopes()
+    if len(scopes) > 1:
+        scopes[-2].append(df)
+    return df
+
+
+@contextmanager
+def cache_scope():
+    """Release every frame cached through ``persist`` /
+    ``local_checkpoint`` in the block, and not kept, when it exits."""
+    held: list[DataFrame] = []
+    scopes = _open_scopes()
+    scopes.append(held)
+    try:
+        yield
+    finally:
+        scopes.pop()  # scopes nest, so the innermost is ours
+        release(*held)
+
+
+@contextmanager
+def persisted(df: DataFrame):
+    """Persist ``df`` for the ``with`` block; release it on exit."""
+    with cache_scope():
+        yield persist(df)
+
+
+def release_on_terminate(query, *dfs: DataFrame) -> None:
+    """Release ``dfs`` once the streaming ``query`` has ended (stopped,
+    finished or failed), also when it ended before this call."""
+    def _wait() -> None:
+        try:
+            query.awaitTermination()
+        except StreamingQueryException:
+            pass  # a failed query has ended too; its error is the caller's
+        finally:
+            release(*dfs)
+
+    threading.Thread(target=_wait, daemon=True).start()
 
 
 def stop_spark() -> None:

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from polars_fastx_spark.session import persist, persisted, release_on_terminate
 from polars_fastx_spark.streaming.epochs import (
     next_epoch_of,
     stream_epoch_base,
@@ -598,8 +599,7 @@ def _containment_gate_epoch(
         )
     else:  # first batch: no index yet
         kept = batch
-    kept = kept.persist()  # shingled once more below; keep the gate's work
-    try:
+    with persisted(kept) as kept:  # shingled again below: keep the work
         kept.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch}")
         if meta_ok:  # index params frozen in meta win over ours
             _dedup.containment_index_add(kept, index_path, text_col, epoch)
@@ -607,8 +607,6 @@ def _containment_gate_epoch(
             _dedup._containment_append(
                 kept, index_path, id_col, text_col, k, hash_shingles, epoch
             )
-    finally:
-        kept.unpersist()
 
 
 def stream_decontam_gate(
@@ -642,17 +640,13 @@ def stream_decontam_gate(
     benchmark a retry trivially sees the state the first attempt saw —
     no epoch-exclusion subtlety needed.
 
-    The benchmark is cached for the QUERY's lifetime only: a
-    StreamingQueryListener unpersists it (and deregisters itself) on
-    this query's terminated event, so repeated gate runs in a
-    long-lived session don't each pin a copy of the benchmark in
-    executor memory.
+    The benchmark is cached for the QUERY's lifetime only
+    (``release_on_terminate``), so repeated gate runs in a long-lived
+    session don't each pin a copy of the benchmark in executor memory.
 
     Returns the started StreamingQuery (availableNow trigger).
     """
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    bench = benchmark.persist()
+    bench = persist(benchmark)
 
     def _gate(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
@@ -672,27 +666,7 @@ def stream_decontam_gate(
         .start()
     )
 
-    spark = stream.sparkSession
-    qid = str(query.id)
-
-    class _UnpersistOnTerminate(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            pass
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            if str(event.id) == qid:
-                try:
-                    bench.unpersist()
-                finally:
-                    spark.streams.removeListener(self)
-
-    spark.streams.addListener(_UnpersistOnTerminate())
+    release_on_terminate(query, bench)
     return query
 
 
@@ -865,13 +839,11 @@ def _media_gate_epoch(
         signer = _mm.image_dhash
     if compact_every:
         _compact_index_epochs(spark, index_path, epoch, compact_every)
-    sig = (
+    with persisted(
         signer(batch)
         .filter(F.col("sig").isNotNull())
         .select(F.col("path").alias("__id"), F.col("sig").alias("__sig"))
-        .persist()  # decode once: hits AND the index append read it
-    )
-    try:
+    ) as sig:  # decode once: hits AND the index append read it
         try:
             index = (
                 spark.read.option("basePath", index_path)
@@ -895,8 +867,6 @@ def _media_gate_epoch(
         _dedup.hamming_band_table(kept_sig, max_distance).write.mode(
             "overwrite"
         ).parquet(f"{index_path}/epoch={epoch}")
-    finally:
-        sig.unpersist()
 
 
 def stream_index_add(
@@ -1053,15 +1023,16 @@ def stream_fetch_frontier(
     discipline).
 
     ``delays`` is a :func:`...robots.parse_crawl_delays` table —
-    static per query run (re-parse robots and restart the query to
-    pick up new delays; rows already scheduled keep their offsets).
+    static per query run and cached for its lifetime only (re-parse
+    robots and restart the query to pick up new delays; rows already
+    scheduled keep their offsets).
     Output columns: the input's, plus ``domain``,
     ``crawl_delay_s``, ``fetch_offset_s`` (seconds from the domain's
     first fetch — a simulated fetch loop sorts by it per domain).
 
     Returns the started StreamingQuery (availableNow trigger).
     """
-    delays = delays.persist()
+    delays = persist(delays)
 
     def _gate(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
@@ -1074,12 +1045,14 @@ def stream_fetch_frontier(
             cap, default_delay,
         )
 
-    return (
+    query = (
         stream.writeStream.foreachBatch(_gate)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
+    release_on_terminate(query, delays)
+    return query
 
 
 def _fetch_frontier_epoch(

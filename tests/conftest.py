@@ -40,6 +40,22 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def persistent_rdd_ids(spark):
+    """Callable returning the ids of the RDDs the session holds in
+    storage (``SparkContext.getPersistentRDDs``): every cache and every
+    local checkpoint not yet released."""
+
+    def _ids() -> set[int]:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+        out = set()
+        while it.hasNext():
+            out.add(it.next())
+        return out
+
+    return _ids
+
+
 @pytest.fixture(scope="session")
 def sf001(spark):
     """sf0.001 testdata views registered on the session."""
@@ -151,6 +167,7 @@ SLOW_TESTS = {
     "test_warc_encodings.py::test_crawl_quarantines_undecodable_bodies",
     "test_warc_html.py::test_crawl_to_corpus_containment_tier_and_timings",
     "test_warc_html.py::test_crawl_to_corpus_front_door",
+    "test_warc_html.py::test_crawl_to_corpus_holds_no_cache_after_it_returns",
     "test_warc_html.py::test_crawl_to_corpus_posthoc_robots_gate",
 }
 

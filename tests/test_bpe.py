@@ -27,6 +27,15 @@ def test_bpe_hand_computed_merges(spark):
     assert got == [(1, "a", "a", 6), (2, "a", "b", 3), (3, "aa", "ab", 3)]
 
 
+def test_bpe_train_releases_its_vocabulary_state(spark, persistent_rdd_ids):
+    # the rules are collected to the driver, so nothing of the training
+    # state may stay cached once bpe_train returns
+    d = _docs(spark, ["aaab aaab", "aaab"])
+    before = persistent_rdd_ids()
+    assert bpe.bpe_train(d, "text", 2).count() == 2
+    assert not persistent_rdd_ids() - before
+
+
 def test_bpe_merge_is_leftmost_greedy_nonoverlapping(spark):
     # 'aaaa': pair (a,a) counts 3 per word but merges to TWO tokens
     # ('aa aa'), never the overlapping three

@@ -122,16 +122,7 @@ def test_triangle_count_two_sharing_an_edge(spark):
     assert got == {0: 1, 1: 2, 2: 2, 3: 1}
 
 
-def _persistent_rdd_ids(spark):
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    it = m.keysIterator()
-    out = set()
-    while it.hasNext():
-        out.add(it.next())
-    return out
-
-
-def test_iterative_loops_do_not_leak_storage(spark):
+def test_iterative_loops_do_not_leak_storage(spark, persistent_rdd_ids):
     """Each checkpoint round must release the previous round's blocks:
     DataFrame.unpersist() does NOT free localCheckpoint storage, so
     without explicit release a 20-round run piles 20 materialized
@@ -147,16 +138,17 @@ def test_iterative_loops_do_not_leak_storage(spark):
     edges = spark.range(1999).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    before = _persistent_rdd_ids(spark)
-    cc = connected_components(edges, checkpoint_every=1)
+    before = persistent_rdd_ids()
+    cc = connected_components(edges)
     assert cc.filter(F.col("component") != 0).count() == 0
-    leaked = _persistent_rdd_ids(spark) - before
+    leaked = persistent_rdd_ids() - before
     assert len(leaked) <= 2, leaked  # returned checkpoint only
 
-    before = _persistent_rdd_ids(spark)
-    pr = pagerank(edges, "id_a", "id_b", iterations=8, checkpoint_every=2)
+    # 8 rounds: a checkpoint at round 5, then cached rounds 6-8
+    before = persistent_rdd_ids()
+    pr = pagerank(edges, "id_a", "id_b", iterations=8)
     assert abs(pr.agg(F.sum("rank")).first()[0] - 1.0) < 1e-9
-    leaked = _persistent_rdd_ids(spark) - before
+    leaked = persistent_rdd_ids() - before
     assert len(leaked) <= 2, leaked
 
 
@@ -188,9 +180,9 @@ def test_cc_string_ids_match_numeric_twin(spark):
 
 
 def test_pagerank_short_run_never_checkpoints_but_stays_linear(spark):
-    # iterations < checkpoint_every: no in-loop lineage cut ever fires,
-    # the regime where the old cache lifecycle recomputed the whole
-    # chain per round; values must still match the dense power
+    # iterations < the checkpoint period (5): no in-loop lineage cut
+    # ever fires, the regime where the old cache lifecycle recomputed
+    # the whole chain per round; values must still match the dense power
     # iteration and the returned frame must be materialized (collect
     # twice — second touch must not recompute from a dropped cache)
     from polars_fastx_spark.operators.graph import pagerank
@@ -198,7 +190,7 @@ def test_pagerank_short_run_never_checkpoints_but_stays_linear(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1)], ["src", "dst"]
     )
-    out = pagerank(edges, iterations=3, checkpoint_every=10)
+    out = pagerank(edges, iterations=3)
     first = {r["node"]: r["rank"] for r in out.collect()}
     second = {r["node"]: r["rank"] for r in out.collect()}
     assert first == second

@@ -1241,6 +1241,34 @@ def test_stream_decontam_gate_unpersists_benchmark_on_terminate(
     assert not benchmark.is_cached
 
 
+def test_stream_fetch_frontier_releases_delays_on_terminate(
+    spark, tmp_path
+):
+    """The frontier caches its crawl-delay table for the QUERY's
+    lifetime only: once the query terminates the table is released, as
+    the decontamination gate's benchmark is."""
+    from polars_fastx_spark.functions.robots import parse_crawl_delays
+
+    robots = spark.createDataFrame(
+        [("d.com", "User-agent: *\nCrawl-delay: 5\nDisallow:")],
+        "domain string, robots_txt string",
+    )
+    delays = parse_crawl_delays(robots, agent="mybot")
+    src = tmp_path / "cand"
+    src.mkdir()
+    (src / "b0.json").write_text(json.dumps({"url": "https://d.com/0"}) + "\n")
+    stream = spark.readStream.schema("url string").json(str(src))
+    q = sp.stream_fetch_frontier(
+        stream, delays, str(tmp_path / "sched"), str(tmp_path / "ck")
+    )
+    q.awaitTermination(120)
+    for _ in range(60):
+        if not delays.is_cached:
+            break
+        time.sleep(0.5)
+    assert not delays.is_cached
+
+
 def test_stream_index_add_monitors_drift_and_policy_retrains(
     spark, srcdir, tmp_path
 ):

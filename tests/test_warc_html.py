@@ -640,6 +640,43 @@ def test_crawl_to_corpus_containment_tier_and_timings(spark, tmp_path):
     )
 
 
+def test_crawl_to_corpus_holds_no_cache_after_it_returns(
+    spark, tmp_path, persistent_rdd_ids
+):
+    """Every cache the front door makes — the extracted-rows checkpoint,
+    the MinHash band table, the components' labels and, with
+    ``timings``, the per-tier barriers — is released before it returns,
+    also when a tier raises."""
+    from polars_fastx_spark.pipeline import crawl_to_corpus
+
+    def _page(i, uri, text):
+        body = f"<html><body><p>{text}</p></body></html>".encode()
+        return warc.render_warc_record(
+            f"<urn:uuid:k-{i}>", "response", uri,
+            "2026-08-01T00:00:00Z", warc.http_response_block(body),
+        )
+
+    shared = " ".join(f"w{i:03d}" for i in range(60))
+    src = tmp_path / "crawl"
+    src.mkdir()
+    warc.write_warc(str(src / "a.warc.gz"), [
+        _page(0, "https://a.com/x", shared + " alpha"),
+        _page(1, "https://b.org/y", shared + " alpha"),
+        _page(2, "https://c.net/z", "other words entirely " * 20),
+    ])
+    pat = str(src) + "/*.warc.gz"
+    before = persistent_rdd_ids()
+    assert crawl_to_corpus(spark, pat, str(tmp_path / "o1")).count() == 2
+    assert not persistent_rdd_ids() - before
+    crawl_to_corpus(spark, pat, str(tmp_path / "o2"), timings={})
+    assert not persistent_rdd_ids() - before
+    with pytest.raises(ValueError, match="extractor"):
+        crawl_to_corpus(
+            spark, pat, str(tmp_path / "o3"), extractor="bogus", timings={}
+        )
+    assert not persistent_rdd_ids() - before
+
+
 def test_crawl_to_corpus_posthoc_robots_gate(spark, tmp_path):
     """robots= drops pages the CURRENT robots.txt disallows — the
     retroactive compliance pass over an already-fetched archive."""
