@@ -2424,16 +2424,16 @@ def _containment_shared_index(spark, sf_dir):
     parquet exactly), so cached == fresh."""
     import tempfile
 
-    from polars_fastx_spark.sources.sinks import committed_epochs, hadoop_fs
+    from polars_fastx_spark import epochs
 
     path = _CONTAIN_SHARED.get(sf_dir)
     if path is None:
         path = tempfile.mkdtemp(prefix="pfs_contain_shared_")
         _CONTAIN_SHARED[sf_dir] = path
-    meta_ok = hadoop_fs(spark, f"{path}/meta/_SUCCESS")[1].exists(
-        hadoop_fs(spark, f"{path}/meta/_SUCCESS")[0]
-    )
-    if not (meta_ok and committed_epochs(spark, f"{path}/postings")):
+    if not (
+        epochs.committed(spark, f"{path}/meta")
+        and epochs.committed_epochs(spark, f"{path}/postings")
+    ):
         hist = _t(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 3 != 0
         )
@@ -12075,16 +12075,16 @@ _CONTAIN_PRIVATE: dict = {}
 def _containment_private_index(spark, sf_dir):
     import tempfile
 
-    from polars_fastx_spark.sources.sinks import committed_epochs, hadoop_fs
+    from polars_fastx_spark import epochs
 
     path = _CONTAIN_PRIVATE.get(sf_dir)
     if path is None:
         path = tempfile.mkdtemp(prefix="pfs_contain_del_")
         _CONTAIN_PRIVATE[sf_dir] = path
-    meta_ok = hadoop_fs(spark, f"{path}/meta/_SUCCESS")[1].exists(
-        hadoop_fs(spark, f"{path}/meta/_SUCCESS")[0]
-    )
-    if not (meta_ok and committed_epochs(spark, f"{path}/postings")):
+    if not (
+        epochs.committed(spark, f"{path}/meta")
+        and epochs.committed_epochs(spark, f"{path}/postings")
+    ):
         hist = _t(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 3 != 0
         )

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from polars_fastx_spark import epochs
 from polars_fastx_spark.operators import vectors
 from polars_fastx_spark.operators.diffing import change_counts, snapshot_diff
 from polars_fastx_spark.session import persisted
@@ -109,12 +110,11 @@ def index_build(
     # hides epoch < T), (b) extra code epochs whose per-id ADC
     # distances would SUM with the fresh ones, and (c) a stale
     # streaming base that misplaces the next streamed epoch. Delete
-    # all three before writing anything.
-    _, fs = _hfs(spark, path)
-    for stale in ("tombstones", "codes", "drift"):
-        sp = _hfs(spark, f"{path}/{stale}")[0]
-        if fs.exists(sp):
-            fs.delete(sp, True)
+    # all three (a pending compaction stage goes with codes/) before
+    # writing anything.
+    epochs.drop(
+        spark, f"{path}/tombstones", f"{path}/codes", f"{path}/drift"
+    )
     # collect the num_cells centroid rows ONCE and feed every consumer
     # a literal table — the cell assignment, the residual broadcast
     # join, and the centroids/ parquet write each re-executed the
@@ -188,10 +188,9 @@ def index_build_if_absent(
     path (same single-maintainer assumption as ``index_compact``).
     Returns True if this call built."""
     spark = df.sparkSession
-    meta_ok = _hfs(spark, f"{path}/meta/_SUCCESS")[1].exists(
-        _hfs(spark, f"{path}/meta/_SUCCESS")[0]
-    )
-    if meta_ok and _committed_epochs(spark, f"{path}/codes"):
+    if epochs.committed(spark, f"{path}/meta") and epochs.committed_epochs(
+        spark, f"{path}/codes"
+    ):
         return False
     index_build(df, id_col, vec_col, path, **build_kwargs)
     return True
@@ -238,7 +237,9 @@ def index_add(
     codes = vectors.pq_encode(resid, "__id", "__r", books)
     coded = codes.join(resid.select("__id", "cell", "__fp"), "__id")
     if epoch is None:
-        epoch = _next_index_epoch(spark, path)
+        epoch = epochs.next_epoch_of(
+            spark, f"{path}/codes", f"{path}/tombstones"
+        )
     coded.write.mode("overwrite").parquet(f"{path}/codes/epoch={epoch}")
     return epoch
 
@@ -253,7 +254,7 @@ def index_delete(
     (``tombstones/epoch=<next>`` on the shared add/delete counter, one
     ``__id`` row per deletion) — never a rewrite of the data-sized
     code table, so a takedown/opt-out batch costs what the batch
-    costs. Every read path (:func:`_live_codes`) hides code rows with
+    costs. Every read path (``epochs.live``) hides code rows with
     epoch below the tombstone's; a later :func:`index_add` of the same
     id lands above it and revives. :func:`index_compact` applies
     tombstones physically and drops them (LSM major compaction).
@@ -263,29 +264,10 @@ def index_delete(
     hide-join never misses on a type mismatch. Same pinned-``epoch``
     idempotence contract as :func:`index_add` for redelivered batches.
     Returns the epoch written."""
-    if isinstance(ids, DataFrame):
-        df = ids.select(F.col(ids.columns[0]).alias("__id")).distinct()
-    else:
-        if not ids:
-            raise ValueError(
-                "index_delete: empty id list (a schema-less empty "
-                "createDataFrame would fail below anyway; pass a typed "
-                "empty DataFrame if an empty tombstone epoch is intended)"
-            )
-        df = spark.createDataFrame([(i,) for i in ids], ["__id"]).distinct()
-    code_eps = _committed_epochs(spark, f"{path}/codes")
-    if code_eps:
-        id_type = (
-            spark.read.parquet(f"{path}/codes/epoch={code_eps[0]}")
-            .schema["__id"].dataType
-        )
-        df = df.select(F.col("__id").cast(id_type).alias("__id"))
-    if epoch is None:
-        epoch = _next_index_epoch(spark, path)
-    df.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/tombstones/epoch={epoch}"
+    return epochs.write_tombstones(
+        spark, f"{path}/codes", f"{path}/tombstones", ids, epoch,
+        caller="index_delete",
     )
-    return epoch
 
 
 def index_upsert(
@@ -306,7 +288,9 @@ def index_upsert(
     if id_col is None:
         id_col = spark.read.parquet(f"{path}/meta").first()["id_col"]
     if epoch is None:
-        epoch = _next_index_epoch(spark, path)
+        epoch = epochs.next_epoch_of(
+            spark, f"{path}/codes", f"{path}/tombstones"
+        )
     del_epoch = index_delete(spark, path, df.select(id_col), epoch=epoch)
     add_epoch = index_add(df, vec_col, path, id_col=id_col, epoch=epoch + 1)
     return del_epoch, add_epoch
@@ -385,7 +369,7 @@ def index_sync_from_index(
     spark = new_df.sparkSession
     if id_col is None:
         id_col = spark.read.parquet(f"{path}/meta").first()["id_col"]
-    live = _live_codes(spark, path)
+    live = epochs.live(spark, f"{path}/codes", f"{path}/tombstones")
     if "__fp" not in live.columns:
         raise ValueError(
             f"{path}: code table has no __fp fingerprints (written "
@@ -423,7 +407,9 @@ def _apply_sync(
         dead = out["removed"] + out["changed"]
         fresh = out["added"] + out["changed"]
         if (dead or fresh) and epoch is None:
-            epoch = _next_index_epoch(spark, path)
+            epoch = epochs.next_epoch_of(
+                spark, f"{path}/codes", f"{path}/tombstones"
+            )
         if dead:
             index_delete(
                 spark,
@@ -446,36 +432,6 @@ def _apply_sync(
     return out
 
 
-def _live_codes(spark: SparkSession, path: str) -> DataFrame:
-    """The index's effective code table: every epoch of ``codes/``
-    minus the rows hidden by tombstones (a tombstone at epoch T hides
-    that id's code rows with epoch < T — strictly below, so a re-add
-    AT or above the tombstone's epoch survives). The anti-join's build
-    side is the tombstone table — deletions, tiny next to the corpus —
-    so the filter broadcasts and costs one map-side probe per code
-    row. Keeps the ``epoch`` column; callers drop it if unneeded."""
-    coded = spark.read.option("basePath", f"{path}/codes").parquet(
-        f"{path}/codes/epoch=*"
-    )
-    tomb_eps = _committed_epochs(spark, f"{path}/tombstones")
-    if not tomb_eps:
-        return coded
-    tomb = (
-        spark.read.option("basePath", f"{path}/tombstones")
-        .parquet(*[f"{path}/tombstones/epoch={e}" for e in tomb_eps])
-        .select(
-            F.col("__id").alias("__tomb_id"),
-            F.col("epoch").alias("__tomb_epoch"),
-        )
-    )
-    return coded.join(
-        F.broadcast(tomb),
-        (coded["__id"] == tomb["__tomb_id"])
-        & (coded["epoch"] < tomb["__tomb_epoch"]),
-        "left_anti",
-    )
-
-
 def _filtered_codes(
     spark: SparkSession, path: str, id_filter
 ) -> DataFrame:
@@ -491,7 +447,9 @@ def _filtered_codes(
     semi-joins onto the code scan — broadcast when small, shuffle-hash
     when the predicate side is data-sized — so the ADC math never sees
     a disallowed candidate."""
-    coded = _live_codes(spark, path).drop("epoch")
+    coded = epochs.live(
+        spark, f"{path}/codes", f"{path}/tombstones"
+    ).drop("epoch")
     if id_filter is None:
         return coded
     if isinstance(id_filter, DataFrame):
@@ -524,7 +482,7 @@ def index_search(
 ) -> DataFrame:
     """Top-k ADC search over the persisted index: open centroids +
     books (bounded collects — KBs), stream the live code table across
-    all epochs (tombstone-filtered — :func:`_live_codes`), and rank
+    all epochs (tombstone-filtered — ``epochs.live``), and rank
     with :func:`vectors.adc_search` — the identical query path
     ``ivfpq_topk`` uses, so persisted == in-query search
     result-for-result. ``id_filter`` restricts candidates to an
@@ -642,156 +600,28 @@ def index_compact(
     upto_epoch: int | None = None,
 ) -> None:
     """Maintenance: fold the committed code epochs below ``upto_epoch``
-    (default: all of them) into one partition — the same crash-safe
-    staged swap the streaming band index uses
-    (``sinks.compact_epoch_partitions``), bounding file count after
-    many incremental adds. Search results are unaffected: the code
-    table's CONTENT is what ADC consumes, not its epoch layout. A
-    caller that may RE-WRITE an epoch (the streaming ingest's
-    redelivered batch) must pass that epoch as ``upto_epoch`` so its
-    codes are never folded into history and then written again.
+    (default: all of them) into one partition through the crash-safe
+    staged swap of :func:`polars_fastx_spark.epochs.compact`, bounding
+    file count after many incremental adds. Search results are
+    unaffected: the code table's CONTENT is what ADC consumes, not its
+    epoch layout. A caller that may RE-WRITE an epoch (the streaming
+    ingest's redelivered batch) must pass that epoch as ``upto_epoch``
+    so its codes are never folded into history and then written again.
 
     With tombstones present this is the LSM **major compaction**: the
     fold drops the hidden rows physically and deletes the applied
     tombstone epochs (only those ≤ ``upto_epoch`` — all of them by
-    default), in an order that survives a crash at any step (see
-    :func:`_compact_codes_with_tombstones`). Folding WITHOUT applying
-    tombstones would be wrong, not just wasteful: folded rows land at
-    the target epoch, above the tombstones that used to hide them."""
-    from polars_fastx_spark.sources.sinks import compact_epoch_partitions
-
-    codes = f"{path}/codes"
+    default). Folding WITHOUT applying tombstones would be wrong, not
+    just wasteful: folded rows land at the target epoch, above the
+    tombstones that used to hide them."""
     if upto_epoch is None:
-        upto_epoch = _next_index_epoch(spark, path)
-    tomb_eps = [
-        e
-        for e in _committed_epochs(spark, f"{path}/tombstones")
-        if e <= upto_epoch
-    ]
-    stale_stage = any(
-        "_t" in n for n in _stage_names(spark, codes)
+        upto_epoch = epochs.next_epoch_of(
+            spark, f"{path}/codes", f"{path}/tombstones"
+        )
+    epochs.compact(
+        spark, path, upto_epoch, min_epochs,
+        table="codes", tombstones="tombstones",
     )
-    if tomb_eps or stale_stage:
-        _compact_codes_with_tombstones(
-            spark, path, upto_epoch, min_epochs
-        )
-    else:
-        compact_epoch_partitions(
-            spark, codes, upto_epoch, min_epochs=min_epochs
-        )
-
-
-def _stage_names(spark: SparkSession, codes_path: str) -> list[str]:
-    p, fs = _hfs(spark, codes_path)
-    if not fs.exists(p):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(p)
-        if st.getPath().getName().startswith("_compact_tmp_e")
-    ]
-
-
-def _compact_codes_with_tombstones(
-    spark: SparkSession,
-    path: str,
-    upto_epoch: int,
-    min_epochs: int,
-) -> None:
-    """Tombstone-applying fold of ``codes/`` — the same crash-safe
-    staged swap as ``sinks.compact_epoch_partitions`` with one more
-    deletion class. Stage names carry BOTH the fold target and the
-    tombstone bound (``_compact_tmp_e<target>_t<upto>``), so recovery
-    after a crash knows exactly which tombstone epochs the committed
-    stage already applied — it never re-derives that from the
-    (possibly half-deleted) listing. The plain compactor int-parses
-    its stage suffix and skips ours, so the two never adopt each
-    other's stages.
-
-    Swap order: delete source code epochs, delete applied tombstones,
-    THEN rename the stage in. A crash before the rename leaves the
-    committed stage to resume from; tombstones are never deleted after
-    the rename, because a crash between those two steps would leave
-    tombstones re-hiding the folded rows (which now sit at the target
-    epoch) — silent resurrection of deletions."""
-    codes = f"{path}/codes"
-    tombs = f"{path}/tombstones"
-    _, fs = _hfs(spark, codes)
-
-    def _p(rel: str):
-        return _hfs(spark, f"{codes}/{rel}")[0]
-
-    def _swap(stage_name: str, target: int, tomb_upto: int) -> None:
-        for eid in _committed_epochs(spark, codes):
-            if eid <= target:
-                fs.delete(_p(f"epoch={eid}"), True)
-        for tid in _committed_epochs(spark, tombs):
-            if tid <= tomb_upto:
-                fs.delete(_hfs(spark, f"{tombs}/epoch={tid}")[0], True)
-        dst = _p(f"epoch={target}")
-        if fs.exists(dst):  # crashed between delete and rename last time
-            fs.delete(dst, True)
-        fs.rename(_p(stage_name), dst)
-
-    # recover interrupted swaps FIRST; an uncommitted stage is a
-    # crashed step-1 rebuild (sources intact) — drop the garbage
-    for sname in _stage_names(spark, codes):
-        body = sname[len("_compact_tmp_e"):]
-        if "_t" not in body:
-            continue  # the plain compactor's stage, not ours
-        try:
-            t_s, u_s = body.split("_t", 1)
-            target, t_upto = int(t_s), int(u_s)
-        except ValueError:
-            continue
-        if fs.exists(_p(f"{sname}/_SUCCESS")):
-            _swap(sname, target, t_upto)
-        else:
-            fs.delete(_p(sname), True)
-
-    committed = [
-        e for e in _committed_epochs(spark, codes) if e < upto_epoch
-    ]
-    tomb_eps = [
-        e for e in _committed_epochs(spark, tombs) if e <= upto_epoch
-    ]
-    if not committed:
-        # nothing to fold; every remaining code epoch is >= upto_epoch,
-        # above every tombstone <= upto_epoch — those hide nothing now
-        for tid in tomb_eps:
-            fs.delete(_hfs(spark, f"{tombs}/epoch={tid}")[0], True)
-        return
-    if len(committed) < min_epochs and not tomb_eps:
-        return
-    target = max(committed)
-    stage_name = f"_compact_tmp_e{target}_t{upto_epoch}"
-    coded = (
-        spark.read.option("basePath", codes)
-        .parquet(f"{codes}/epoch=*")
-        .filter(F.col("epoch") < F.lit(upto_epoch))
-    )
-    if tomb_eps:
-        tomb = (
-            spark.read.option("basePath", tombs)
-            .parquet(*[f"{tombs}/epoch={e}" for e in tomb_eps])
-            .select(
-                F.col("__id").alias("__tomb_id"),
-                F.col("epoch").alias("__tomb_epoch"),
-            )
-        )
-        coded = coded.join(
-            F.broadcast(tomb),
-            (coded["__id"] == tomb["__tomb_id"])
-            & (coded["epoch"] < tomb["__tomb_epoch"]),
-            "left_anti",
-        )
-    (
-        coded.drop("epoch")
-        .coalesce(max(1, len(committed) // max(1, min_epochs)))
-        .write.mode("overwrite")
-        .parquet(f"{codes}/{stage_name}")
-    )
-    _swap(stage_name, target, upto_epoch)
 
 
 def index_recall(
@@ -871,7 +701,7 @@ def index_stats(spark: SparkSession, path: str) -> DataFrame:
     and epoch span, so an operator can see skewed cells (one hot cell
     → one slow probe task) and ingest growth. Returns
     (cell, n_vectors, n_epochs) — ≤ num_cells rows."""
-    coded = _live_codes(spark, path)
+    coded = epochs.live(spark, f"{path}/codes", f"{path}/tombstones")
     return coded.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.count_distinct("epoch").alias("n_epochs"),
@@ -982,15 +812,12 @@ def index_drift_trend(spark: SparkSession, path: str) -> DataFrame:
     :func:`index_retrain` trigger (:func:`index_retrain_if_drifted`
     automates exactly that policy). Returns an empty frame when
     nothing is monitored yet."""
-    eps = _committed_epochs(spark, f"{path}/drift")
+    eps = epochs.committed_epochs(spark, f"{path}/drift")
     if not eps:
         return spark.createDataFrame(
             [], "epoch int, n_vectors bigint, mean_distortion double"
         )
-    rows = (
-        spark.read.option("basePath", f"{path}/drift")
-        .parquet(*[f"{path}/drift/epoch={e}" for e in eps])
-    )
+    rows = epochs.read_epochs(spark, f"{path}/drift", eps)
     return rows.groupBy("epoch").agg(
         F.sum("n_vectors").alias("n_vectors"),
         (
@@ -1066,20 +893,21 @@ def index_retrain(
     concurrent with the swap window are not supported."""
     spark = df.sparkSession
     stage = f"{path}/_retrain_stage"
-    _, fs = _hfs(spark, path)
-    _retrain_resume_if_committed(spark, path)
-    sp = _hfs(spark, stage)[0]
-    if fs.exists(sp):  # crashed pre-commit build: garbage, live intact
-        fs.delete(sp, True)
+    if epochs.committed(spark, stage, "_COMMIT"):
+        _retrain_swap(spark, path)
+    epochs.drop(spark, stage)  # crashed pre-commit build: garbage
     meta = spark.read.parquet(f"{path}/meta").first()
     id_col = id_col or meta["id_col"]
     # live tombstones (deleted, never re-added) must stay deleted
-    tomb_eps = _committed_epochs(spark, f"{path}/tombstones")
-    if tomb_eps:
-        live_ids = _live_codes(spark, path).select("__id").distinct()
+    tombs = f"{path}/tombstones"
+    if epochs.committed_epochs(spark, tombs):
+        live_ids = (
+            epochs.live(spark, f"{path}/codes", tombs)
+            .select("__id")
+            .distinct()
+        )
         tomb_ids = (
-            spark.read.option("basePath", f"{path}/tombstones")
-            .parquet(*[f"{path}/tombstones/epoch={e}" for e in tomb_eps])
+            epochs.read_epochs(spark, tombs)
             .select("__id")
             .distinct()
             .join(live_ids, "__id", "left_anti")
@@ -1097,46 +925,24 @@ def index_retrain(
         pinned=meta["pinned"], iterations=iterations,
     )
     # authorize: from here the stage, not the live index, is truth
-    fs.create(_hfs(spark, f"{stage}/_COMMIT")[0], True).close()
+    epochs.mark(spark, f"{stage}/_COMMIT")
     _retrain_swap(spark, path)
-
-
-def _retrain_resume_if_committed(spark: SparkSession, path: str) -> bool:
-    """Finish a crashed post-commit retrain swap. Returns True if a
-    committed stage was found (and is now swapped in)."""
-    _, fs = _hfs(spark, path)
-    marker = _hfs(spark, f"{path}/_retrain_stage/_COMMIT")[0]
-    if not fs.exists(marker):
-        return False
-    _retrain_swap(spark, path)
-    return True
 
 
 def _retrain_swap(spark: SparkSession, path: str) -> None:
     """Post-commit swap body, idempotent at every step: delete stale
-    tombstones, then for each table still in the stage delete the live
-    dir and rename the staged one in, then drop the stage. A crash
-    anywhere reruns cleanly — a table missing from the stage was
-    already renamed (its live copy is the new one), and the marker
-    survives until the final stage delete."""
+    tombstones, then swap each table still in the stage over its live
+    dir (``epochs.swap_in``: a table missing from the stage was already
+    renamed), then drop the stage. The marker survives until that final
+    delete, so a crash anywhere reruns cleanly."""
     stage = f"{path}/_retrain_stage"
-    _, fs = _hfs(spark, path)
     # tombstones are consumed by the rebuild; drift rows measured
     # against the OLD quantizers would poison the retrain trigger's
     # baseline — both reset with the swap
-    for stale in ("tombstones", "drift"):
-        tp = _hfs(spark, f"{path}/{stale}")[0]
-        if fs.exists(tp):
-            fs.delete(tp, True)
+    epochs.drop(spark, f"{path}/tombstones", f"{path}/drift")
     for sub in ("codes", "books", "centroids", "meta"):
-        src = _hfs(spark, f"{stage}/{sub}")[0]
-        if not fs.exists(src):
-            continue  # already renamed by the attempt that crashed
-        dst = _hfs(spark, f"{path}/{sub}")[0]
-        if fs.exists(dst):
-            fs.delete(dst, True)
-        fs.rename(src, dst)
-    fs.delete(_hfs(spark, stage)[0], True)
+        epochs.swap_in(spark, f"{stage}/{sub}", f"{path}/{sub}")
+    epochs.drop(spark, stage)
 
 
 def _load_books(
@@ -1150,36 +956,3 @@ def _load_books(
     if missing:
         raise ValueError(f"{path}/books: missing codebook entries {missing[:4]}")
     return books
-
-
-def _hfs(spark: SparkSession, path: str):
-    """(jvm Path, FileSystem) — shared helper, see ``sinks.hadoop_fs``."""
-    from polars_fastx_spark.sources.sinks import hadoop_fs
-
-    return hadoop_fs(spark, path)
-
-
-def _committed_epochs(spark: SparkSession, dir_path: str) -> list[int]:
-    """Committed ``epoch=<id>`` ids — see ``sinks.committed_epochs``."""
-    from polars_fastx_spark.sources.sinks import committed_epochs
-
-    return committed_epochs(spark, dir_path)
-
-
-def _next_epoch(spark: SparkSession, codes_path: str) -> int:
-    """Next epoch id over ONE epoch directory (see
-    :func:`_committed_epochs` for the committed-only contract)."""
-    eps = _committed_epochs(spark, codes_path)
-    return (eps[-1] + 1) if eps else 0
-
-
-def _next_index_epoch(spark: SparkSession, path: str) -> int:
-    """Next id on the index's SHARED add/delete epoch counter: the max
-    over ``codes/`` and ``tombstones/`` plus one. Sharing one counter
-    is what makes add/delete ordering durable — a tombstone hides
-    exactly the code epochs below it, so two writers can never land an
-    add and a delete at the same position."""
-    return max(
-        _next_epoch(spark, f"{path}/codes"),
-        _next_epoch(spark, f"{path}/tombstones"),
-    )

@@ -25,6 +25,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, functions as F
 
+from polars_fastx_spark import epochs
 from polars_fastx_spark.functions.exprs import let_sql, sql_ident, sql_str
 from polars_fastx_spark.session import persist, persisted
 
@@ -799,6 +800,16 @@ def shingle_df_profile(
 
 #: containment index meta schema (one row per index)
 _CONTAIN_META_SCHEMA = "id_col string, k int, hash_shingles boolean"
+#: the containment tables derived from its postings: per-doc distinct
+#: shingle counts and per-shingle document frequencies
+_CONTAIN_DERIVED = {
+    "sizes": lambda post: post.groupBy("__id").agg(
+        F.count(F.lit(1)).alias("__sz")
+    ),
+    "dfreq": lambda post: post.groupBy("shingle").agg(
+        F.count(F.lit(1)).alias("__df")
+    ),
+}
 
 
 def _containment_append(
@@ -820,11 +831,9 @@ def _containment_append(
     and the retry overwrites. Writes ``meta/`` first if absent, so the
     streaming wiring can initialize an index from its first batch."""
     from polars_fastx_spark.operators.partitioning import ensure_min_parallelism
-    from polars_fastx_spark.sources.sinks import hadoop_fs
 
     spark = batch.sparkSession
-    mp, fs = hadoop_fs(spark, f"{path}/meta/_SUCCESS")
-    if not fs.exists(mp):
+    if not epochs.committed(spark, f"{path}/meta"):
         spark.createDataFrame(
             [(id_col, k, hash_shingles)], _CONTAIN_META_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
@@ -833,12 +842,10 @@ def _containment_append(
             ensure_min_parallelism(batch), id_col, text_col, k, hash_shingles
         )
     ) as post:  # shingle once: sizes, dfreq, and the postings write
-        post.groupBy("__id").agg(F.count("*").alias("__sz")).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/sizes/epoch={epoch}")
-        post.groupBy("shingle").agg(F.count("*").alias("__df")).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/dfreq/epoch={epoch}")
+        for name, derive in _CONTAIN_DERIVED.items():
+            derive(post).write.mode("overwrite").parquet(
+                f"{path}/{name}/epoch={epoch}"
+            )
         post.write.mode("overwrite").parquet(f"{path}/postings/epoch={epoch}")
 
 
@@ -872,14 +879,11 @@ def containment_index_build(
     tombstones deleted first — the lesson of the ANN index's
     rebuild-hygiene fix: a stale tombstone would hide the fresh
     epoch-0 postings)."""
-    from polars_fastx_spark.sources.sinks import hadoop_fs
-
     spark = df.sparkSession
-    _, fs = hadoop_fs(spark, path)
-    for sub in ("meta", "postings", "sizes", "dfreq", "tombstones"):
-        sp = hadoop_fs(spark, f"{path}/{sub}")[0]
-        if fs.exists(sp):
-            fs.delete(sp, True)
+    epochs.drop(spark, *[
+        f"{path}/{sub}"
+        for sub in ("meta", "postings", "sizes", "dfreq", "tombstones")
+    ])
     _containment_append(df, path, id_col, text_col, k, hash_shingles, 0)
 
 
@@ -908,24 +912,14 @@ def containment_index_add(
     if epoch is None:
         # shared postings∪tombstones counter: a re-add must land AT or
         # ABOVE the deleting tombstone or it would stay hidden
-        epoch = _next_containment_epoch(spark, path)
+        epoch = epochs.next_epoch_of(
+            spark, f"{path}/postings", f"{path}/tombstones"
+        )
     _containment_append(
         batch, path, meta["id_col"], text_col, meta["k"],
         meta["hash_shingles"], epoch,
     )
     return epoch
-
-
-def _next_containment_epoch(spark: SparkSession, path: str) -> int:
-    """Next epoch id on the shared postings/tombstones counter — a
-    delete must land ABOVE every current postings epoch so the
-    ``epoch < tombstone_epoch`` hide rule covers them all."""
-    from polars_fastx_spark.sources.sinks import committed_epochs
-
-    eps = committed_epochs(spark, f"{path}/postings") + committed_epochs(
-        spark, f"{path}/tombstones"
-    )
-    return (max(eps) + 1) if eps else 0
 
 
 def containment_index_delete(
@@ -946,27 +940,10 @@ def containment_index_delete(
     applies tombstones physically and drops them. Same
     pinned-``epoch`` overwrite idempotence as the add lane. Returns
     the epoch written."""
-    if isinstance(ids, DataFrame):
-        df = ids.select(F.col(ids.columns[0]).alias("__id")).distinct()
-    else:
-        if not ids:
-            raise ValueError("containment_index_delete: empty id list")
-        df = spark.createDataFrame([(i,) for i in ids], ["__id"]).distinct()
-    from polars_fastx_spark.sources.sinks import committed_epochs
-
-    eps = committed_epochs(spark, f"{path}/postings")
-    if eps:
-        id_type = (
-            spark.read.parquet(f"{path}/postings/epoch={eps[0]}")
-            .schema["__id"].dataType
-        )
-        df = df.select(F.col("__id").cast(id_type).alias("__id"))
-    if epoch is None:
-        epoch = _next_containment_epoch(spark, path)
-    df.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/tombstones/epoch={epoch}"
+    return epochs.write_tombstones(
+        spark, f"{path}/postings", f"{path}/tombstones", ids, epoch,
+        caller="containment_index_delete",
     )
-    return epoch
 
 
 def _containment_history(
@@ -982,55 +959,36 @@ def _containment_history(
     NEGATIVE dfreq correction rows counted from the hidden postings,
     so ``sum(__df)`` per shingle stays the LIVE document frequency.
     Returns None when no history epoch qualifies (first batch)."""
-    from polars_fastx_spark.sources.sinks import committed_epochs
-
-    eps = committed_epochs(spark, f"{path}/postings")
-    if before_epoch is not None:
-        eps = [e for e in eps if e < before_epoch]
+    eps = [
+        e for e in epochs.committed_epochs(spark, f"{path}/postings")
+        if before_epoch is None or e < before_epoch
+    ]
     if not eps:
         return None
 
     def _tbl(name: str) -> DataFrame:
-        avail = set(committed_epochs(spark, f"{path}/{name}"))
-        use = [e for e in eps if e in avail]
-        return spark.read.option("basePath", f"{path}/{name}").parquet(
-            *[f"{path}/{name}/epoch={e}" for e in use]
+        avail = set(epochs.committed_epochs(spark, f"{path}/{name}"))
+        return epochs.read_epochs(
+            spark, f"{path}/{name}", [e for e in eps if e in avail]
+        )
+
+    def _live(df: DataFrame, how: str = "left_anti") -> DataFrame:
+        return epochs.live(
+            spark, df, f"{path}/tombstones",
+            before_epoch=before_epoch, how=how,
         )
 
     posts = _tbl("postings")
-    sizes = _tbl("sizes")
-    dfreq = _tbl("dfreq").drop("epoch")
-
-    tomb_eps = committed_epochs(spark, f"{path}/tombstones")
-    if before_epoch is not None:
-        tomb_eps = [e for e in tomb_eps if e < before_epoch]
-    if tomb_eps:
-        tomb = (
-            spark.read.option("basePath", f"{path}/tombstones")
-            .parquet(*[f"{path}/tombstones/epoch={e}" for e in tomb_eps])
-            .select(
-                F.col("__id").alias("__t_id"),
-                F.col("epoch").alias("__t_e"),
-            )
-        )
-
-        def _hide(df: DataFrame, how: str) -> DataFrame:
-            return df.join(
-                F.broadcast(tomb),
-                (df["__id"] == tomb["__t_id"])
-                & (df["epoch"] < tomb["__t_e"]),
-                how,
-            )
-
-        df_corr = (
-            _hide(posts, "left_semi")
-            .groupBy("shingle")
-            .agg((-F.count(F.lit(1))).alias("__df"))
-        )
-        dfreq = dfreq.unionByName(df_corr)
-        posts = _hide(posts, "left_anti")
-        sizes = _hide(sizes, "left_anti")
-    return posts.drop("epoch"), sizes.drop("epoch"), dfreq
+    df_corr = (
+        _live(posts, "left_semi")
+        .groupBy("shingle")
+        .agg((-F.count(F.lit(1))).alias("__df"))
+    )
+    return (
+        _live(posts).drop("epoch"),
+        _live(_tbl("sizes")).drop("epoch"),
+        _tbl("dfreq").drop("epoch").unionByName(df_corr),
+    )
 
 
 def containment_hits(
@@ -1175,181 +1133,23 @@ def containment_index_compact(
     upto_epoch: int | None = None,
     min_epochs: int = 2,
 ) -> None:
-    """Maintenance: fold each of the index's three epoch-partitioned
-    tables (postings / sizes / dfreq) below ``upto_epoch`` into one
-    partition via the shared crash-safe staged swap
-    (``sinks.compact_epoch_partitions``) — gate results are
+    """Maintenance: fold the index's committed postings epochs below
+    ``upto_epoch`` into one partition through the crash-safe staged swap
+    of :func:`polars_fastx_spark.epochs.compact` — gate results are
     unaffected (membership is what the joins consume, not epoch
-    layout; per-shingle df is a SUM across epochs, invariant under the
-    fold only per-table... dfreq rows are preserved as-is, so the sum
-    is unchanged). Postings fold LAST: it is the commit authority, so
-    a crash mid-compaction can only hide side-table epochs that
-    postings still lists — and those reads fall back to the folded
-    target, which compact names below ``upto_epoch`` by construction.
-
-    With live tombstones the per-table fold would be WRONG (folded
-    rows land at the target epoch, above the tombstones that used to
-    hide them — silent resurrection), so deletions dispatch to the
-    tombstone-applying fold (:func:`_compact_containment_with_tombstones`),
-    which filters the dead postings physically, REDERIVES sizes and
-    dfreq from the live fold (exact — the fold covers those epochs
-    entirely), and drops the applied tombstones."""
-    from polars_fastx_spark.sources.sinks import (
-        committed_epochs,
-        compact_epoch_partitions,
-    )
-
+    layout). The fold drops the postings the tombstones ``<=
+    upto_epoch`` hide, REDERIVES sizes and dfreq from the folded live
+    postings (exact: the fold covers those epochs entirely) and drops
+    the applied tombstones; all three tables swap in from one stage."""
     if upto_epoch is None:
-        eps = committed_epochs(spark, f"{path}/postings") + committed_epochs(
-            spark, f"{path}/tombstones"
+        upto_epoch = epochs.next_epoch_of(
+            spark, f"{path}/postings", f"{path}/tombstones"
         )
-        upto_epoch = (max(eps) + 1) if eps else 0
-    tomb_eps = committed_epochs(spark, f"{path}/tombstones")
-    stale_stage = any(
-        n.startswith("_ctmp_e")
-        for n in _containment_stage_names(spark, path)
+    epochs.compact(
+        spark, path, upto_epoch, min_epochs,
+        table="postings", tombstones="tombstones",
+        derived=_CONTAIN_DERIVED,
     )
-    if tomb_eps or stale_stage:
-        _compact_containment_with_tombstones(
-            spark, path, upto_epoch, min_epochs
-        )
-        return
-    for sub in ("sizes", "dfreq", "postings"):
-        compact_epoch_partitions(
-            spark, f"{path}/{sub}", upto_epoch, min_epochs=min_epochs
-        )
-
-
-def _containment_stage_names(spark: SparkSession, path: str) -> list[str]:
-    from polars_fastx_spark.sources.sinks import hadoop_fs
-
-    p, fs = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(p)
-        if st.getPath().getName().startswith("_ctmp_e")
-    ]
-
-
-def _compact_containment_with_tombstones(
-    spark: SparkSession,
-    path: str,
-    upto_epoch: int,
-    min_epochs: int,
-) -> None:
-    """Tombstone-applying fold of all three containment tables — the
-    ``ann_index._compact_codes_with_tombstones`` discipline adapted to
-    a multi-table index. The stage is ONE directory
-    (``_ctmp_e<target>_t<upto>``) holding folded postings plus sizes
-    and dfreq REDERIVED from the folded live postings (exact: the
-    fold covers those epochs entirely), authorized by a ``_COMMIT``
-    marker whose name carries both the fold target and the tombstone
-    bound — recovery never re-derives either from the (possibly
-    half-deleted) source listing.
-
-    Swap order after commit: delete each table's source epochs, delete
-    applied tombstones (``<= upto``), THEN rename the three staged
-    subdirs in. A crash before the marker → the stage is garbage,
-    sources intact, rebuild. After the marker → rerun finishes: a
-    staged subdir missing was already renamed; tombstones deleted
-    before the renames can never re-hide folded rows (folded rows sit
-    at the target epoch, below the dropped tombstones' ids' bound).
-    Single maintainer assumed, as everywhere in this family."""
-    from polars_fastx_spark.sources.sinks import committed_epochs, hadoop_fs
-
-    _, fs = hadoop_fs(spark, path)
-
-    def _p(rel: str):
-        return hadoop_fs(spark, f"{path}/{rel}")[0]
-
-    def _swap(stage_name: str, target: int, t_upto: int) -> None:
-        # applied tombstones drop FIRST: once any staged table lands
-        # at the target epoch, a surviving tombstone (T > target)
-        # would hide the folded live rows
-        for tid in committed_epochs(spark, f"{path}/tombstones"):
-            if tid <= t_upto:
-                fs.delete(_p(f"tombstones/epoch={tid}"), True)
-        tp = _p("tombstones")
-        if fs.exists(tp) and not fs.listStatus(tp):
-            fs.delete(tp, True)  # drained — drop the empty parent
-        # per-table: source deletion is GUARDED by that table's staged
-        # subdir still existing — a missing subdir means a crashed
-        # attempt already renamed it in, and deleting "sources ≤
-        # target" then would destroy the renamed fold itself (the
-        # multi-table trap the single-dir compactors never face)
-        for sub in ("postings", "sizes", "dfreq"):
-            src = _p(f"{stage_name}/{sub}")
-            if not fs.exists(src):
-                continue  # this table fully swapped already
-            for eid in committed_epochs(spark, f"{path}/{sub}"):
-                if eid <= target:
-                    fs.delete(_p(f"{sub}/epoch={eid}"), True)
-            dst = _p(f"{sub}/epoch={target}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            fs.rename(src, dst)
-        fs.delete(_p(stage_name), True)
-
-    # recover a committed stage FIRST; drop uncommitted garbage
-    for sname in _containment_stage_names(spark, path):
-        body = sname[len("_ctmp_e"):]
-        try:
-            t_s, u_s = body.split("_t", 1)
-            target, t_upto = int(t_s), int(u_s)
-        except ValueError:
-            continue
-        if fs.exists(_p(f"{sname}/_COMMIT")):
-            _swap(sname, target, t_upto)
-        else:
-            fs.delete(_p(sname), True)
-
-    eps = [
-        e
-        for e in committed_epochs(spark, f"{path}/postings")
-        if e < upto_epoch
-    ]
-    tomb_eps = committed_epochs(spark, f"{path}/tombstones")
-    applied = [e for e in tomb_eps if e <= upto_epoch]
-    if not eps:
-        # nothing to fold; tombstones <= upto hide only epochs < upto,
-        # of which none exist — safe to drop
-        for tid in applied:
-            fs.delete(_p(f"tombstones/epoch={tid}"), True)
-        return
-    if len(eps) < min_epochs and not tomb_eps:
-        return
-    target = max(eps)
-    stage = f"_ctmp_e{target}_t{upto_epoch}"
-    posts = spark.read.option("basePath", f"{path}/postings").parquet(
-        *[f"{path}/postings/epoch={e}" for e in eps]
-    )
-    if tomb_eps:
-        tomb = (
-            spark.read.option("basePath", f"{path}/tombstones")
-            .parquet(*[f"{path}/tombstones/epoch={e}" for e in tomb_eps])
-            .select(
-                F.col("__id").alias("__t_id"),
-                F.col("epoch").alias("__t_e"),
-            )
-        )
-        posts = posts.join(
-            F.broadcast(tomb),
-            (posts["__id"] == tomb["__t_id"])
-            & (posts["epoch"] < tomb["__t_e"]),
-            "left_anti",
-        )
-    with persisted(posts.drop("epoch")) as live:
-        live.write.mode("overwrite").parquet(f"{path}/{stage}/postings")
-        live.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz")).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/{stage}/sizes")
-        live.groupBy("shingle").agg(
-            F.count(F.lit(1)).alias("__df")
-        ).write.mode("overwrite").parquet(f"{path}/{stage}/dfreq")
-    fs.create(_p(f"{stage}/_COMMIT"), True).close()
-    _swap(stage, target, upto_epoch)
 
 
 # ------------------------------------------------------------- SimHash (L2)

@@ -11,8 +11,8 @@ then scales with the CRAWL DELTA, not the corpus; only the bounded
 domain-graph PageRank re-iterates (and can warm-start from the
 previous rank vector — ``graph.pagerank(init_ranks=...)``).
 
-Epoch discipline (shared family convention, see
-``operators/ann_index.py`` / ``streaming/epochs.py``):
+Epoch discipline (the epoch-table layout of ``polars_fastx_spark/epochs.py``,
+shared with the ANN and containment indexes):
 
 - ``edges/epoch=<id>`` rows are ``(page key, src, dst)``;
 - ``tombstones/epoch=<id>`` rows are page keys; a tombstone at epoch
@@ -40,17 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from polars_fastx_spark import epochs
 from polars_fastx_spark.operators.diffing import change_counts
 from polars_fastx_spark.session import persisted
-from polars_fastx_spark.sources.sinks import committed_epochs, hadoop_fs
-
-
-def _clean(spark: SparkSession, path: str) -> None:
-    _, fs = hadoop_fs(spark, path)
-    for stale in ("edges", "tombstones"):
-        sp = hadoop_fs(spark, f"{path}/{stale}")[0]
-        if fs.exists(sp):
-            fs.delete(sp, True)
 
 
 def edge_index_build(
@@ -66,19 +58,12 @@ def edge_index_build(
     the ann_index lesson: mode("overwrite") alone leaves history that
     hides or double-counts the fresh epoch)."""
     spark = edges.sparkSession
-    _clean(spark, path)
+    epochs.drop(spark, f"{path}/edges", f"{path}/tombstones")
     edges.select(
         F.col(key_col).alias("__key"),
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
     ).write.mode("overwrite").parquet(f"{path}/edges/epoch=0")
-
-
-def _next_epoch(spark: SparkSession, path: str) -> int:
-    eps = committed_epochs(spark, f"{path}/edges") + committed_epochs(
-        spark, f"{path}/tombstones"
-    )
-    return (max(eps) + 1) if eps else 0
 
 
 def edge_index_add(
@@ -92,7 +77,9 @@ def edge_index_add(
     """Append one release-delta of edges at a pinned epoch."""
     spark = edges.sparkSession
     if epoch is None:
-        epoch = _next_epoch(spark, path)
+        epoch = epochs.next_epoch_of(
+            spark, f"{path}/edges", f"{path}/tombstones"
+        )
     edges.select(
         F.col(key_col).alias("__key"),
         F.col(src).alias("src"),
@@ -108,16 +95,13 @@ def edge_index_delete(
     epoch: int | None = None,
 ) -> int:
     """Tombstone pages: their edges disappear from ``live_edges``
-    without touching the data-sized epochs (compaction applies them
-    physically, same trade as the ANN/containment lanes)."""
-    if epoch is None:
-        epoch = _next_epoch(spark, path)
-    keys.select(
-        F.col(keys.columns[0]).alias("__key")
-    ).distinct().coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/tombstones/epoch={epoch}"
+    without touching the data-sized epochs. The edge index has no
+    compaction, so tombstones accrete until the next
+    ``edge_index_build``."""
+    return epochs.write_tombstones(
+        spark, f"{path}/edges", f"{path}/tombstones", keys, epoch,
+        key="__key", caller="edge_index_delete",
     )
-    return epoch
 
 
 def edge_index_sync(
@@ -157,37 +141,18 @@ def edge_index_sync(
                 path,
                 key_col=key_col, src=src, dst=dst,
                 epoch=(epoch + 1) if epoch is not None
-                else _next_epoch(spark, path),
+                else epochs.next_epoch_of(
+                    spark, f"{path}/edges", f"{path}/tombstones"
+                ),
             )
     return counts
 
 
 def live_edges(spark: SparkSession, path: str) -> DataFrame:
     """The index's effective edge table: committed edge epochs minus
-    rows hidden by tombstones (tombstone at T hides epoch < T). The
-    tombstone side is deletions — tiny next to the graph — so AQE
-    broadcasts the anti-join probe; no forced hint (repo
-    discipline)."""
-    eps = committed_epochs(spark, f"{path}/edges")
-    if not eps:
-        raise ValueError(f"{path}: no committed edge epochs")
-    edges = spark.read.option("basePath", f"{path}/edges").parquet(
-        *[f"{path}/edges/epoch={e}" for e in eps]
-    )
-    tomb_eps = committed_epochs(spark, f"{path}/tombstones")
-    if not tomb_eps:
-        return edges
-    tomb = (
-        spark.read.option("basePath", f"{path}/tombstones")
-        .parquet(*[f"{path}/tombstones/epoch={e}" for e in tomb_eps])
-        .groupBy("__key")
-        .agg(F.max("epoch").alias("__tomb_epoch"))
-    )
-    return (
-        edges.join(tomb, "__key", "left")
-        .filter(
-            F.col("__tomb_epoch").isNull()
-            | (F.col("epoch") >= F.col("__tomb_epoch"))
-        )
-        .drop("__tomb_epoch")
+    rows hidden by tombstones (tombstone at T hides epoch < T), through
+    the shared tombstone filter ``epochs.live``. Raises ValueError when
+    the index has no committed edge epoch."""
+    return epochs.live(
+        spark, f"{path}/edges", f"{path}/tombstones", key="__key"
     )

@@ -51,10 +51,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from polars_fastx_spark.sources.sinks import hadoop_fs
-from polars_fastx_spark.streaming.epochs import (
+from polars_fastx_spark.epochs import (
     _read_small,
     _write_small_atomic,
+    hadoop_fs,
 )
 
 

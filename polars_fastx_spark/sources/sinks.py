@@ -17,6 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
+from polars_fastx_spark import epochs
+from polars_fastx_spark.epochs import committed_epochs, hadoop_fs  # noqa: F401
+
 
 def stringify_nested(df: DataFrame) -> DataFrame:
     """Cast array/map/struct columns to canonical JSON strings.
@@ -253,129 +256,8 @@ def compact_epoch_partitions(
 ) -> None:
     """Fold the committed ``epoch=<id>`` partitions with
     ``id < upto_epoch`` of an append-by-epoch parquet dataset into the
-    newest one, once at least ``min_epochs`` have accreted — the
-    maintenance move for every persisted-index surface that appends an
-    epoch dir per batch (the streaming near-dup band index, the ANN
-    code table): each tiny dir otherwise costs a list entry + a read
-    task forever, the 100 TB small-files failure mode.
-
-    Crash-safe staged swap, re-entrant under at-least-once retries:
-
-    1. stage the union of sources to ``_compact_tmp_e<target>``
-       (an already-COMMITTED stage is never rebuilt — a retry after
-       step 2 started must not re-derive the union from half-deleted
-       sources);
-    2. delete the source epoch dirs;
-    3. rename the stage to ``epoch=<target>`` (atomic on local/HDFS).
-
-    A crash in 1 → retry overwrites the stage. A crash in 2 → the
-    stage is committed, retry resumes deletion. A crash in 3 → retry
-    finds no sources but a committed stage and completes the rename.
-    The stage dir's NAME carries its target epoch, so recovery never
-    depends on the (possibly half-deleted) source listing.
-    """
-    from pyspark.sql import functions as F
-
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-
-    def _p(rel: str):
-        return jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
-
-    def _scan(bound: int | None = upto_epoch):
-        epochs, stages = [], []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("epoch="):
-                try:
-                    eid = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if (bound is None or eid < bound) and fs.exists(
-                    _p(f"{name}/_SUCCESS")
-                ):
-                    epochs.append(eid)
-            elif name.startswith("_compact_tmp_e"):
-                stages.append(name)
-        return epochs, stages
-
-    def _swap(stage_name: str, target: int, sources: list[int]) -> None:
-        for eid in sources:
-            if eid <= target:
-                fs.delete(_p(f"epoch={eid}"), True)
-        dst = _p(f"epoch={target}")
-        if fs.exists(dst):  # crashed between delete and rename last time
-            fs.delete(dst, True)
-        fs.rename(_p(stage_name), dst)
-
-    committed, stages = _scan()
-    # recover interrupted swaps FIRST. A COMMITTED stage is completed
-    # regardless of this call's upto_epoch: a prior call with a LARGER
-    # bound that crashed inside its swap may have already deleted some
-    # source epoch dirs, leaving the stage as the only surviving copy
-    # of those rows — deleting it because t >= our (smaller) bound
-    # would destroy data. Its sources are every committed epoch
-    # <= its target (target = max of its sources by construction), so
-    # the completion scans UNBOUNDED. Only a stage without _SUCCESS (a
-    # crashed step-1 rebuild, sources intact) is garbage to drop.
-    for sname in stages:
-        try:
-            t = int(sname[len("_compact_tmp_e"):])
-        except ValueError:
-            continue
-        if fs.exists(_p(f"{sname}/_SUCCESS")):
-            all_committed, _ = _scan(bound=None)
-            _swap(sname, t, all_committed)
-        else:
-            fs.delete(_p(sname), True)
-    if stages:
-        committed, _ = _scan()
-    if len(committed) < min_epochs:
-        return
-    target = max(committed)
-    stage_name = f"_compact_tmp_e{target}"
-    (
-        spark.read.option("basePath", path)
-        .parquet(f"{path}/epoch=*")
-        .filter(F.col("epoch") < F.lit(upto_epoch))
-        .drop("epoch")
-        .coalesce(max(1, len(committed) // min_epochs))
-        .write.mode("overwrite")
-        .parquet(f"{path}/{stage_name}")
-    )
-    _swap(stage_name, target, committed)
-
-
-def hadoop_fs(spark, path: str):
-    """(jvm Path, FileSystem) for ``path`` — Hadoop FS API so every
-    listing/existence check works on any supported filesystem (shared
-    by the persisted ANN index and the containment shingle index)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def committed_epochs(spark, dir_path: str) -> list[int]:
-    """Sorted ids of COMMITTED ``epoch=<id>`` children (dirs carrying
-    the ``_SUCCESS`` marker) — a filesystem listing, never a data scan.
-    Uncommitted dirs (a crashed write) are invisible, so a retry
-    landing on the same id with mode("overwrite") replaces the partial
-    output instead of stranding it beside a duplicate epoch."""
-    p, fs = hadoop_fs(spark, dir_path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if not name.startswith("epoch="):
-            continue
-        try:
-            eid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs.exists(hadoop_fs(spark, f"{dir_path}/{name}/_SUCCESS")[0]):
-            out.append(eid)
-    return sorted(out)
+    newest one, once at least ``min_epochs`` have accreted — each tiny
+    epoch dir otherwise costs a list entry and a read task forever.
+    Crash-safe and re-entrant: :func:`polars_fastx_spark.epochs.compact`
+    over one table."""
+    epochs.compact(spark, path, upto_epoch, min_epochs)

@@ -25,6 +25,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from polars_fastx_spark.session import register_data_source
 from polars_fastx_spark.sources import parser
 from polars_fastx_spark.sources.fastx import FASTX_EXTENSIONS
 
@@ -122,7 +123,7 @@ class FastxStreamDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    spark.dataSource.register(FastxStreamDataSource)
+    register_data_source(spark, FastxStreamDataSource)
 
 
 def stream_fastx(spark: SparkSession, path: str, format: str | None = None):

@@ -40,11 +40,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from polars_fastx_spark import epochs
+from polars_fastx_spark.epochs import next_epoch_of, stream_epoch_base
 from polars_fastx_spark.session import persist, persisted, release_on_terminate
-from polars_fastx_spark.streaming.epochs import (
-    next_epoch_of,
-    stream_epoch_base,
-)
 
 #: events-table schema for streaming reads (ts as µs-precision
 #: timestamp; the ns-parquet hazard of SURVEY.md §4.4.1 applies only to
@@ -476,19 +474,20 @@ def stream_neardup_gate(
     they are folded into the newest one before the batch gates (each
     tiny epoch dir otherwise costs a list entry + a read task forever —
     the 100 TB small-files failure mode). Compaction is crash-safe:
-    the union is staged to an epoch-stamped ``_compact_tmp_e<id>`` dir
-    first, sources are deleted only once the stage is COMMITTED
-    (_SUCCESS), and a retried batch resumes the swap from the stage
-    instead of rebuilding from half-deleted sources. ``None`` disables.
+    the union is staged to an epoch-stamped stage dir first, sources
+    are deleted only once the stage is COMMITTED, and a retried batch
+    resumes the swap from the stage instead of rebuilding from
+    half-deleted sources (``polars_fastx_spark.epochs``). ``None``
+    disables.
 
     Returns the started StreamingQuery (availableNow trigger).
     """
 
     def _gate(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        base = _stream_epoch_base(
+        base = stream_epoch_base(
             spark, index_path, checkpoint,
-            next_epoch=lambda: _next_epoch_of(spark, index_path, out_path),
+            next_epoch=lambda: next_epoch_of(spark, index_path, out_path),
         )
         _neardup_gate_epoch(
             batch, base + epoch, index_path, out_path,
@@ -541,14 +540,12 @@ def stream_containment_gate(
         # discipline): a stream restarted with a FRESH checkpoint
         # resets micro-batch ids to 0 and would otherwise overwrite
         # the previous stream's committed index/output epochs
-        from polars_fastx_spark.operators.dedup import (
-            _next_containment_epoch,
-        )
-
         spark = batch.sparkSession
-        base = _stream_epoch_base(
+        base = stream_epoch_base(
             spark, f"{index_path}/postings", checkpoint,
-            next_epoch=lambda: _next_containment_epoch(spark, index_path),
+            next_epoch=lambda: next_epoch_of(
+                spark, f"{index_path}/postings", f"{index_path}/tombstones"
+            ),
         )
         _containment_gate_epoch(
             batch, base + epoch, index_path, out_path, id_col, text_col,
@@ -582,16 +579,13 @@ def _containment_gate_epoch(
     excludes the current epoch's own partitions (``before_epoch``) and
     every write overwrites its epoch dir whole."""
     from polars_fastx_spark.operators import dedup as _dedup
-    from polars_fastx_spark.sources.sinks import hadoop_fs
 
     spark = batch.sparkSession
     if compact_every:
         _dedup.containment_index_compact(
             spark, index_path, upto_epoch=epoch, min_epochs=compact_every
         )
-    meta_ok = hadoop_fs(spark, f"{index_path}/meta/_SUCCESS")[1].exists(
-        hadoop_fs(spark, f"{index_path}/meta/_SUCCESS")[0]
-    )
+    meta_ok = epochs.committed(spark, f"{index_path}/meta")
     if meta_ok:
         kept = _dedup.containment_gate(
             batch, index_path, id_col, text_col, threshold,
@@ -650,9 +644,9 @@ def stream_decontam_gate(
 
     def _gate(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        base = _stream_epoch_base(
+        base = stream_epoch_base(
             spark, out_path, checkpoint,
-            next_epoch=lambda: _next_epoch_of(spark, out_path),
+            next_epoch=lambda: next_epoch_of(spark, out_path),
         )
         _decontam_gate_epoch(
             batch, base + epoch, bench, out_path, id_col, text_col,
@@ -726,7 +720,7 @@ def _neardup_gate_epoch(
 
     spark = batch.sparkSession
     if compact_every:
-        _compact_index_epochs(spark, index_path, epoch, compact_every)
+        epochs.compact(spark, index_path, epoch, compact_every)
     try:
         index = (
             spark.read.option("basePath", index_path)
@@ -748,25 +742,6 @@ def _neardup_gate_epoch(
     _dedup.minhash_band_table(
         kept, id_col, text_col, shingle_k, num_hashes, bands, family
     ).write.mode("overwrite").parquet(f"{index_path}/epoch={epoch}")
-
-
-def _compact_index_epochs(
-    spark, index_path: str, current_epoch: int, compact_every: int
-) -> None:
-    """Fold the committed ``epoch < current`` band-index partitions
-    into the newest one when ≥ ``compact_every`` have accreted,
-    bounding the stream's file count. Runs BEFORE the batch gates, so
-    the gate's ``epoch < current`` read sees the same band set either
-    way (membership is what the semi-join gate consumes; which epoch
-    dir a band sits in is irrelevant as long as its id stays below the
-    current epoch). Thin wrapper over the generic
-    :func:`polars_fastx_spark.sources.sinks.compact_epoch_partitions`
-    (shared with the persisted ANN index's ``index_compact``)."""
-    from polars_fastx_spark.sources.sinks import compact_epoch_partitions
-
-    compact_epoch_partitions(
-        spark, index_path, current_epoch, min_epochs=compact_every
-    )
 
 
 def stream_media_neardup_gate(
@@ -798,9 +773,9 @@ def stream_media_neardup_gate(
 
     def _gate(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        base = _stream_epoch_base(
+        base = stream_epoch_base(
             spark, index_path, checkpoint,
-            next_epoch=lambda: _next_epoch_of(spark, index_path, out_path),
+            next_epoch=lambda: next_epoch_of(spark, index_path, out_path),
         )
         _media_gate_epoch(
             batch, base + epoch, index_path, out_path,
@@ -838,7 +813,7 @@ def _media_gate_epoch(
     if signer is None:
         signer = _mm.image_dhash
     if compact_every:
-        _compact_index_epochs(spark, index_path, epoch, compact_every)
+        epochs.compact(spark, index_path, epoch, compact_every)
     with persisted(
         signer(batch)
         .filter(F.col("sig").isNotNull())
@@ -913,14 +888,12 @@ def stream_index_add(
     from polars_fastx_spark.operators import ann_index
 
     def _add(batch: DataFrame, epoch: int) -> None:
-        from polars_fastx_spark.operators.ann_index import (
-            _next_index_epoch,
-        )
-
         spark = batch.sparkSession
-        base = _stream_epoch_base(
+        base = stream_epoch_base(
             spark, f"{index_path}/codes", checkpoint,
-            next_epoch=lambda: _next_index_epoch(spark, index_path),
+            next_epoch=lambda: next_epoch_of(
+                spark, f"{index_path}/codes", f"{index_path}/tombstones"
+            ),
         )
         if compact_every:
             ann_index.index_compact(
@@ -943,14 +916,6 @@ def stream_index_add(
         .trigger(availableNow=True)
         .start()
     )
-
-
-# The epoch-base discipline lives in streaming/epochs.py (round-7
-# centralization: the per-lane copies of this bookkeeping diverged in
-# round 6 — see that module's docstring). These aliases keep the
-# historical in-module names every gate above uses.
-_stream_epoch_base = stream_epoch_base
-_next_epoch_of = next_epoch_of
 
 
 def stream_cms_counts(
@@ -1036,9 +1001,9 @@ def stream_fetch_frontier(
 
     def _gate(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
-        base = _stream_epoch_base(
+        base = stream_epoch_base(
             spark, out_path, checkpoint,
-            next_epoch=lambda: _next_epoch_of(spark, out_path),
+            next_epoch=lambda: next_epoch_of(spark, out_path),
         )
         _fetch_frontier_epoch(
             batch, base + epoch, delays, out_path, url_col,

@@ -87,6 +87,7 @@ SLOW_TESTS = {
     "test_containment_index.py::test_maintained_df_cap_cuts_hot_shingles",
     "test_containment_index.py::test_stream_containment_gate_end_to_end",
     "test_dedup_recall.py::test_containment_hashed_shingles_match_strings",
+    "test_epochs.py::test_compaction_converges_after_a_crash_at_every_mutation",
     "test_dedup_recall.py::test_lsh_collapse_preserves_components",
     "test_graph.py::test_iterative_loops_do_not_leak_storage",
     "test_multimodal.py::test_image_neardup_gate_grows_like_text_gate",

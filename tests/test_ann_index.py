@@ -9,6 +9,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from polars_fastx_spark import epochs
 from polars_fastx_spark.operators import ann_index
 from polars_fastx_spark.operators.vectors import ivfpq_topk
 
@@ -151,7 +152,7 @@ def test_crashed_add_epoch_is_reused_on_retry(spark, tmp_path):
     crash = tmp_path / "idx" / "codes" / "epoch=1"
     crash.mkdir(parents=True)
     (crash / "part-garbage.parquet").write_bytes(b"")
-    assert ann_index._next_epoch(spark, f"{path}/codes") == 1
+    assert epochs.next_epoch_of(spark, f"{path}/codes") == 1
     tail = _emb(spark).filter(
         (F.col("vec_id") >= 40) & (F.col("vec_id") < 60)
     )
@@ -287,7 +288,7 @@ def test_upsert_replaces_vector_without_doubling(spark, tmp_path):
     batch = _emb(spark).filter("vec_id >= 35 and vec_id < 45")
     del_ep, add_ep = ann_index.index_upsert(batch, "v", path)
     assert (del_ep, add_ep) == (1, 2)
-    live = ann_index._live_codes(spark, path)
+    live = epochs.live(spark, f"{path}/codes", f"{path}/tombstones")
     assert live.count() == 45
     assert live.select("__id").distinct().count() == 45
     qv = [float(x) for x in e.filter("vec_id = 36").first()["v"]]
@@ -320,8 +321,7 @@ def test_compact_applies_tombstones_and_drops_them(spark, tmp_path):
 
     assert [d for d in os.listdir(f"{path}/codes")
             if d.startswith("epoch=")] == ["epoch=1"]
-    tombs = f"{path}/tombstones"
-    assert not [d for d in os.listdir(tombs) if d.startswith("epoch=")]
+    assert not os.path.exists(f"{path}/tombstones")
     after = [
         (r["vec_id"], round(r["adc_dist"], 9))
         for r in ann_index.index_search(spark, path, q, k=20, nprobe=4)
@@ -486,6 +486,37 @@ def test_index_recall_report(spark, tmp_path):
         want = len(set(exact) & set(approx))
         assert rep[qid] == (want, want / 5), qid
         assert 0.0 <= rep[qid][1] <= 1.0
+
+
+def test_compact_completes_a_crashed_plain_stage(spark, tmp_path):
+    """A plain (tombstone-free) fold crashed after committing its stage
+    ``codes/_compact_tmp_e2`` and deleting source epoch 1: the next
+    ``index_compact`` must finish that swap, so every vector is live
+    again. The stage name contains ``_t``, which once sent it to the
+    tombstone compactor; that one skipped the plain stage and folded
+    the surviving epochs, losing epoch 1's vectors."""
+    import os
+    import shutil
+
+    e = _emb(spark).filter("vec_id < 60")
+    path = str(tmp_path / "idx")
+    ann_index.index_build(
+        e.filter("vec_id < 20"), "vec_id", "v", path, num_cells=4, m=4,
+        pinned=True,
+    )
+    ann_index.index_add(e.filter("vec_id >= 20 and vec_id < 40"), "v", path)
+    ann_index.index_add(e.filter("vec_id >= 40"), "v", path)
+    codes = f"{path}/codes"
+    (
+        spark.read.option("basePath", codes).parquet(f"{codes}/epoch=*")
+        .drop("epoch").coalesce(1).write.parquet(f"{codes}/_compact_tmp_e2")
+    )
+    shutil.rmtree(f"{codes}/epoch=1")
+    ann_index.index_compact(spark, path)
+    rows = spark.read.parquet(codes).select("__id").collect()
+    assert sorted(r["__id"] for r in rows) == list(range(60))
+    assert not [n for n in os.listdir(codes) if n.startswith("_compact")]
+    assert not [n for n in os.listdir(path) if n.startswith("_compact")]
 
 
 def test_empty_id_edge_cases(spark, tmp_path):
@@ -815,7 +846,8 @@ def test_index_sync_pays_only_for_changes(spark, tmp_path):
     assert a == b and len(a) == 15
     live = {
         r["__id"]
-        for r in ann_index._live_codes(spark, p_sync).select("__id").collect()
+        for r in epochs.live(spark, f"{p_sync}/codes", f"{p_sync}/tombstones")
+        .select("__id").collect()
     }
     assert live == set(range(10, 100))
     # idempotence: same pair again -> no-op, no new epochs

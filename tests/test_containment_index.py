@@ -381,6 +381,48 @@ def test_compact_applies_tombstones_physically(spark, tmp_path):
     assert live_df == stored_df
 
 
+def test_compact_completes_a_crashed_plain_fold_before_a_delete(
+    spark, tmp_path
+):
+    """A plain per-table fold crashed inside its postings swap: sizes
+    and dfreq were folded, ``postings/_compact_tmp_e2`` was committed
+    and source epoch 1 deleted. A delete, then two compactions: every
+    doc stays live except the deleted one. The tombstone fold once
+    ignored the plain stage (losing epoch 1's docs), and the next plain
+    compaction then swapped the stale stage over the fold, bringing
+    back both those docs and the deleted one."""
+    import shutil
+
+    from polars_fastx_spark.sources.sinks import compact_epoch_partitions
+
+    d = _docs(spark).filter("doc_id < 60")
+    path = str(tmp_path / "cidx")
+    dedup.containment_index_build(
+        d.filter("doc_id < 20"), "doc_id", "text", path, k=8
+    )
+    dedup.containment_index_add(d.filter("doc_id >= 20 and doc_id < 40"), path)
+    dedup.containment_index_add(d.filter("doc_id >= 40"), path)
+    for sub in ("sizes", "dfreq"):
+        compact_epoch_partitions(spark, f"{path}/{sub}", 3)
+    posts = f"{path}/postings"
+    (
+        spark.read.option("basePath", posts).parquet(f"{posts}/epoch=*")
+        .drop("epoch").coalesce(1).write.parquet(f"{posts}/_compact_tmp_e2")
+    )
+    shutil.rmtree(f"{posts}/epoch=1")
+    dedup.containment_index_delete(spark, path, [5])
+    dedup.containment_index_compact(spark, path)
+    dedup.containment_index_compact(spark, path)
+    for root in (path, posts):
+        assert not [
+            n for n in os.listdir(root) if n.startswith(("_compact", "_ctmp"))
+        ]
+    want = [i for i in range(60) if i != 5]
+    for sub in ("postings", "sizes"):
+        rows = spark.read.parquet(f"{path}/{sub}").select("__id").distinct()
+        assert sorted(r["__id"] for r in rows.collect()) == want, sub
+
+
 def test_compact_tombstone_midswap_crash_recovers(spark, tmp_path):
     """A crash between the _COMMIT marker and the renames converges on
     rerun to the same index a clean compaction produces."""
@@ -407,7 +449,9 @@ def test_compact_tombstone_midswap_crash_recovers(spark, tmp_path):
         dedup.containment_index_delete(spark, p, dead)
     dedup.containment_index_compact(spark, p_clean)
     # stage a committed fold on p_crash, swap only postings, "crash"
-    dedup._compact_containment_with_tombstones(spark, p_crash, 10, 1)
+    dedup.containment_index_compact(
+        spark, p_crash, upto_epoch=10, min_epochs=1
+    )
     want = _hits_tuples(batch, p_clean, max_shingle_df=0.2)
     # simulate the mid-swap state instead: rebuild, commit, part-swap
     p_mid = str(tmp_path / "mid")

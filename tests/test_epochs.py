@@ -1,4 +1,5 @@
-"""streaming/epochs.py — the centralized epoch-base discipline.
+"""polars_fastx_spark/epochs.py — the epoch-base discipline and the
+staged compaction of every epoch-table index.
 
 Regression tests for the round-6 ADVICE findings: the base map must
 key on checkpoint IDENTITY (the query id in the checkpoint's
@@ -13,7 +14,7 @@ import os
 
 import pytest
 
-from polars_fastx_spark.streaming.epochs import (
+from polars_fastx_spark.epochs import (
     checkpoint_identity,
     next_epoch_of,
     stream_epoch_base,
@@ -132,8 +133,8 @@ def test_pipelines_aliases_point_at_shared_module(spark):
     copy that diverged in round 6)."""
     from polars_fastx_spark.streaming import pipelines
 
-    assert pipelines._stream_epoch_base is stream_epoch_base
-    assert pipelines._next_epoch_of is next_epoch_of
+    assert pipelines.stream_epoch_base is stream_epoch_base
+    assert pipelines.next_epoch_of is next_epoch_of
 
 
 def test_identity_flip_claims_path_base(spark, tmp_path):
@@ -166,3 +167,184 @@ def test_identity_flip_claims_path_base(spark, tmp_path):
     assert stream_epoch_base(spark, base_dir, str(ck), lambda: 9) == 9
     (ck / "metadata").write_text(json.dumps({"id": "q-second"}))
     assert stream_epoch_base(spark, base_dir, str(ck), _boom) == 9
+
+
+# ------------------------------------------------ staged compaction crashes
+
+
+class _Crash(Exception):
+    pass
+
+
+def _write_epoch(spark, path, rows, schema):
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def _plain_shape(spark, root):
+    for e in range(4):
+        _write_epoch(
+            spark, f"{root}/epoch={e}", [(2 * e, "a"), (2 * e + 1, "b")],
+            "__id long, v string",
+        )
+    return {}
+
+
+def _tombstone_shape(spark, root):
+    rows = {0: [(0, "a"), (1, "b")], 1: [(2, "c")], 2: [(0, "d"), (3, "e")]}
+    for e, r in rows.items():
+        _write_epoch(spark, f"{root}/codes/epoch={e}", r, "__id long, v string")
+    # 1 hides id 0's epoch-0 row (its epoch-2 re-add stays); 3 hides id 2
+    for e, ids in ((1, [0]), (3, [2])):
+        _write_epoch(
+            spark, f"{root}/tombstones/epoch={e}", [(i,) for i in ids],
+            "__id long",
+        )
+    return {"table": "codes", "tombstones": "tombstones"}
+
+
+_DERIVED = {
+    "sizes": lambda p: p.groupBy("__id").count(),
+    "dfreq": lambda p: p.groupBy("shingle").count(),
+}
+
+
+def _derived_shape(spark, root):
+    for e in range(3):
+        post = spark.createDataFrame(
+            [(10 * e + i, s) for i in range(2) for s in ("x", f"s{i}")],
+            "__id long, shingle string",
+        )
+        _write_epoch(spark, f"{root}/postings/epoch={e}", post.collect(),
+                     post.schema)
+        for name, derive in _DERIVED.items():
+            part = derive(post)
+            _write_epoch(spark, f"{root}/{name}/epoch={e}", part.collect(),
+                         part.schema)
+    _write_epoch(spark, f"{root}/tombstones/epoch=3", [(1,), (20,)],
+                 "__id long")
+    return {"table": "postings", "tombstones": "tombstones",
+            "derived": _DERIVED}
+
+
+def _snapshot(spark, root):
+    """Every epoch table under ``root``: its rows with their epoch."""
+    tables = {}
+    for dirpath, dirs, _ in os.walk(root):
+        if any(d.startswith("epoch=") for d in dirs):
+            df = spark.read.option("basePath", dirpath).parquet(
+                f"{dirpath}/epoch=*"
+            )
+            tables[os.path.relpath(dirpath, root)] = sorted(
+                tuple(r) for r in df.collect()
+            )
+    return tables
+
+
+def _leftovers(root):
+    """Stage dirs, and the tombstone epochs a compaction to 4 applies."""
+    out = []
+    for dirpath, dirs, _ in os.walk(root):
+        out += [d for d in dirs if d.startswith(("_compact", "_ctmp"))]
+        if os.path.basename(dirpath) == "tombstones":
+            out += [d for d in dirs if int(d.split("=")[1]) <= 4]
+    return out
+
+
+@pytest.mark.parametrize(
+    "shape", [_plain_shape, _tombstone_shape, _derived_shape],
+    ids=["plain", "tombstones", "derived"],
+)
+def test_compaction_converges_after_a_crash_at_every_mutation(
+    spark, tmp_path, monkeypatch, shape
+):
+    """Crash the staged compaction at each of its N filesystem
+    mutations in turn, then rerun it: the tables end up exactly as a
+    clean compaction leaves them, with no stage and no applied
+    tombstone left."""
+    import shutil
+
+    from polars_fastx_spark import epochs
+
+    template = str(tmp_path / "template")
+    kwargs = shape(spark, template)
+    real = epochs._mutate
+
+    def _run(root, crash_at=None):
+        calls = []
+
+        def _mutate(fs, op, *paths):
+            calls.append(op)
+            if len(calls) == crash_at:
+                raise _Crash(op)
+            real(fs, op, *paths)
+
+        monkeypatch.setattr(epochs, "_mutate", _mutate)
+        try:
+            epochs.compact(spark, root, 4, 2, **kwargs)
+        finally:
+            monkeypatch.setattr(epochs, "_mutate", real)
+        return calls
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    n = len(_run(clean))
+    want = _snapshot(spark, clean)
+    assert not _leftovers(clean)
+    assert want != _snapshot(spark, template)  # the compaction did fold
+    for k in range(1, n + 1):
+        root = str(tmp_path / f"crash{k}")
+        shutil.copytree(template, root)
+        with pytest.raises(_Crash):
+            _run(root, crash_at=k)
+        epochs.compact(spark, root, 4, 2, **kwargs)
+        assert _snapshot(spark, root) == want, k
+        assert not _leftovers(root), k
+
+
+def test_a_write_after_a_crashed_swap_survives_its_recovery(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the swap deleted its sources leaves no committed
+    epoch behind; the next write must still land above the stage's
+    target, or the recovery's "delete sources <= target" deletes it."""
+    from polars_fastx_spark import epochs
+
+    root = str(tmp_path / "ds")
+    _plain_shape(spark, root)
+    real = epochs._mutate
+
+    def _crash_at_rename(fs, op, *paths):
+        if op == "rename":
+            raise _Crash(op)
+        real(fs, op, *paths)
+
+    monkeypatch.setattr(epochs, "_mutate", _crash_at_rename)
+    with pytest.raises(_Crash):
+        epochs.compact(spark, root, 4, 2)
+    monkeypatch.setattr(epochs, "_mutate", real)
+    assert epochs.committed_epochs(spark, root) == []
+    e = epochs.next_epoch_of(spark, root)
+    assert e == 5  # above the stage's target 3 and bound 4
+    _write_epoch(spark, f"{root}/epoch={e}", [(99, "z")], "__id long, v string")
+    epochs.compact(spark, root, e + 1, 2)
+    ids = sorted(r["__id"] for r in spark.read.parquet(root).collect())
+    assert ids == [*range(8), 99]
+
+
+def test_filesystem_mutations_go_through_the_epochs_module():
+    """Hadoop deletes, renames and listings live in ``epochs.py``, where
+    the crash tests above reach them; ``manifest.py`` keeps its own
+    versioned-manifest store."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "polars_fastx_spark"
+    pattern = re.compile(r"fs\.(?:delete|rename)\(|listStatus\(")
+    found = sorted(
+        path.relative_to(pkg).as_posix()
+        for path in pkg.rglob("*.py")
+        if pattern.search(path.read_text())
+    )
+    assert found == ["epochs.py", "operators/manifest.py"]

@@ -182,6 +182,31 @@ def test_fastx_stream_follows_directory(spark, tmp_path):
     assert headers == ["s1", "s2", "s3"]  # each record ingested exactly once
 
 
+def test_stream_fastx_registers_its_source_once(spark, tmp_path, monkeypatch):
+    """``stream_fastx`` registers ``fastx_stream`` on a session once, like
+    the other Python data sources, not again on every call."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from polars_fastx_spark import session
+    from polars_fastx_spark.streaming.fastx_stream import stream_fastx
+
+    d = tmp_path / "fa"
+    d.mkdir()
+    (d / "a.fasta").write_text(">s1\nACGT\n")
+    session._DATA_SOURCES.get(spark, set()).discard("fastx_stream")
+    calls = []
+    real = DataSourceRegistration.register
+
+    def _counting(self, source):
+        calls.append(source.name())
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", _counting)
+    stream_fastx(spark, str(d))
+    stream_fastx(spark, str(d))
+    assert calls.count("fastx_stream") == 1
+
+
 def test_applyinpandaswithstate_running_totals(spark, srcdir, tmp_path):
     """Custom stateful operator: per-user totals accumulate across
     micro-batches through the state store."""
@@ -879,10 +904,8 @@ def test_neardup_gate_compaction_recovers_interrupted_swap(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from polars_fastx_spark.streaming.pipelines import (
-        _compact_index_epochs,
-        _neardup_gate_epoch,
-    )
+    from polars_fastx_spark import epochs
+    from polars_fastx_spark.streaming.pipelines import _neardup_gate_epoch
 
     idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
     for e in range(6):
@@ -901,7 +924,7 @@ def test_neardup_gate_compaction_recovers_interrupted_swap(spark, tmp_path):
         .parquet(f"{idx}/_compact_tmp_e5")
     )
     shutil.rmtree(f"{idx}/epoch=3")
-    _compact_index_epochs(spark, idx, 6, compact_every=5)
+    epochs.compact(spark, idx, 6, min_epochs=5)
     assert {d for d in os.listdir(idx) if d.startswith("epoch=")} == {
         "epoch=5"
     }
@@ -1358,6 +1381,7 @@ def test_stream_index_add_fresh_checkpoint_never_overwrites(
     base this regression-tests against had exactly that overwrite)."""
     from pyspark.sql import functions as F
 
+    from polars_fastx_spark import epochs
     from polars_fastx_spark.operators import ann_index
     from polars_fastx_spark.streaming.pipelines import stream_index_add
 
@@ -1397,7 +1421,8 @@ def test_stream_index_add_fresh_checkpoint_never_overwrites(
     ).awaitTermination(120)
     live = {
         r["__id"]
-        for r in ann_index._live_codes(spark, idx).select("__id").collect()
+        for r in epochs.live(spark, f"{idx}/codes", f"{idx}/tombstones")
+        .select("__id").collect()
     }
     # all 140 present; the re-delivered b0 landed at NEW epochs (its
     # ids simply re-added) instead of clobbering ck1's history
