@@ -21,8 +21,10 @@ those capabilities Spark-first:
   pipeline (reference: src/polars_fastx/fastx_parsers.py:137-223).
 """
 
-# first: in a Spark Python worker this stops every later call re-reading
-# pyspark.zip and the spark-core jar (see _zipcache)
+# first, before anything imports pyspark: in the package's worker daemon
+# this swaps Spark's pyspark.zip for the matching installed pyspark, and in
+# every Spark Python worker it stops each call re-reading the zips on the
+# path (see _zipcache)
 import polars_fastx_spark._zipcache  # noqa: F401
 from polars_fastx_spark.session import get_spark, stop_spark
 from polars_fastx_spark.functions import seq

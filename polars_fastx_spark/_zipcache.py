@@ -1,5 +1,7 @@
-"""Skip re-reading unchanged zip archives when a Spark Python worker
-invalidates its import caches.
+"""Keep Spark Python workers off their zip path: skip re-reading
+unchanged zip archives when a worker invalidates its import caches, and
+in the package's worker daemon import pyspark and py4j from their
+installed copies instead of Spark's zips, where the two match.
 
 Cause. Before every call a Spark Python worker runs
 ``importlib.invalidate_caches()`` (``pyspark.worker_util.setup_spark_files``),
@@ -39,19 +41,31 @@ Where it applies. The wrapper is installed when this package is imported
 inside a Spark Python worker, recognised by ``PYTHON_WORKER_FACTORY_SECRET``
 in the environment (Spark sets it for the daemon and every worker it
 starts, executor and planner workers alike); the driver keeps the
-original method. A worker imports this package when it unpickles code
-from it, and keeps the wrapper for the rest of its reused life. The saving
-therefore does not apply to a worker's first call, whose invalidation runs
-before it unpickles anything, nor to workers that never import the
-package. On Python 3.13+, where ``invalidate_caches`` only drops the
-cached directory and later imports read it lazily, the wrapper records
-nothing and always calls the original.
+original method. The package's worker daemon (``_daemon``, the default
+for local sessions) imports the package and reads each archive once
+before it forks, so its workers skip the re-reads from their first call
+on. Under another daemon a worker imports the package when it unpickles
+code from it, which is after its first call's invalidation, and workers
+that never import the package keep the original. On Python 3.13+, where
+``invalidate_caches`` only drops the cached directory and later imports
+read it lazily, the wrapper records nothing and always calls the
+original.
+
+Installed copies over the zips. Before anything in the process has
+imported pyspark, which in a Spark Python process means this is the
+package daemon starting, :func:`use_installed_twins` drops ``pyspark.zip``
+and the py4j zip from ``sys.path`` where the copy the rest of the path
+imports is the same release with the same module sizes (see ``_daemon``
+for why only then). Installed copies carry compiled ``.pyc``; the zips
+make every daemon compile pyspark from source.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipimport
+from importlib.machinery import PathFinder
 
 _original = zipimport.zipimporter.invalidate_caches
 
@@ -80,5 +94,58 @@ def _invalidate_caches(self: zipimport.zipimporter) -> None:
         _read_at[archive] = (sig, files)
 
 
+def _zipped_package(entry: str) -> str | None:
+    """The package a ``sys.path`` entry of Spark's worker path zips."""
+    name = os.path.basename(entry)
+    if name == "pyspark.zip":
+        return "pyspark"
+    if name.startswith("py4j-") and name.endswith("-src.zip"):
+        return "py4j"
+    return None
+
+
+def _is_twin(archive: str, package: str, path: list[str]) -> bool:
+    """Whether the copy of ``package`` that ``path`` imports holds the
+    ``version.py`` of the one in ``archive``, byte for byte, and the same
+    size for every file both hold."""
+    import zipfile
+
+    spec = PathFinder.find_spec(package, path)
+    origin = spec.origin if spec is not None else None
+    if not origin or os.path.basename(origin) != "__init__.py":
+        return False
+    root = os.path.dirname(os.path.dirname(origin))
+    try:
+        with zipfile.ZipFile(archive) as zf:
+            version = zf.read(f"{package}/version.py")
+            sizes = {i.filename: i.file_size for i in zf.infolist()
+                     if not i.is_dir()}
+        with open(os.path.join(root, package, "version.py"), "rb") as fh:
+            if fh.read() != version:
+                return False
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return False
+    for name, size in sizes.items():
+        try:
+            if os.stat(os.path.join(root, name)).st_size != size:
+                return False
+        except FileNotFoundError:
+            pass  # zip only (its tests and benchmarks): no worker imports it
+    return True
+
+
+def use_installed_twins() -> None:
+    """Drop from ``sys.path`` (and the importer caches) each of Spark's
+    pyspark and py4j zips whose installed copy is its twin."""
+    for entry in [e for e in sys.path if _zipped_package(e)]:
+        rest = [e for e in sys.path if e != entry]
+        if _is_twin(entry, _zipped_package(entry), rest):
+            sys.path[:] = rest
+            sys.path_importer_cache.pop(entry, None)
+            zipimport._zip_directory_cache.pop(entry, None)
+
+
 if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    if "pyspark" not in sys.modules:
+        use_installed_twins()
     zipimport.zipimporter.invalidate_caches = _invalidate_caches

@@ -129,11 +129,40 @@ def builder(app_name: str = "polars_fastx_spark", master: str | None = None,
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
-    for k, v in _DEFAULTS.items():
-        b = b.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    conf = {**_DEFAULTS, **(extra_conf or {})}
+    if master and (master == "local" or master.startswith("local[")):
+        conf = _local_conf(conf)
+    for k, v in conf.items():
         b = b.config(k, v)
     return b
+
+
+#: the directory this package is imported from
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _local_conf(conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` with the local-mode worker settings: the package's worker
+    daemon (``_daemon``) unless the caller names one, and the package's
+    parent directory in front of the workers' ``PYTHONPATH``, so they
+    import the driver's copy whatever their working directory. A site
+    directory is not added: workers import from it anyway, and on
+    ``PYTHONPATH`` it would come before the standard library."""
+    import site
+
+    conf = {"spark.python.daemon.module": "polars_fastx_spark._daemon", **conf}
+    sites = [*site.getsitepackages(), site.getusersitepackages()]
+    caller = conf.get(_WORKER_PATH)
+    if (os.path.realpath(_PACKAGE_PARENT)
+            not in {os.path.realpath(p) for p in sites}
+            and _PACKAGE_PARENT not in (caller or "").split(os.pathsep)):
+        conf[_WORKER_PATH] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, caller) if p
+        )
+    return conf
 
 
 def get_spark(app_name: str = "polars_fastx_spark",

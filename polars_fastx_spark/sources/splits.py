@@ -6,12 +6,14 @@ SparkContext starts one ``python -m pyspark.daemon <module>`` per
 planner module it uses (``create_data_source`` for the schema at
 ``load()``, ``plan_data_source_read`` at optimize; the JVM also starts
 ``lookup_data_sources`` when a source is registered).
-None of them is the executor's ``pyspark.worker`` daemon, and on a
-4-vCPU VM each start costs 1.5-2.9 s. The caller's process already has
-the reader imported, so the scans plan their splits there and
-:func:`scan_splits` reads them through one ``mapInArrow``: one task per
-split, run by the ordinary worker daemon. Rows become Arrow through the
-converter PySpark's own data-source read uses, batched by
+None of them is the executors' worker daemon, and on a 4-vCPU VM each
+start costs 1.5-2.9 s. The caller's process already has the reader
+imported, so the scans plan their splits there and :func:`scan_splits`
+reads them through one ``mapInArrow``: one task per split, run by the
+executors' worker daemon (in a local session the package's own,
+``polars_fastx_spark._daemon``, which forks workers with the package
+loaded and ACKs each task's small writes at once). Rows become Arrow
+through the converter PySpark's own data-source read uses, batched by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``, so column types,
 nulls and batch sizes are those of ``spark.read.format(...)``.
 

@@ -139,6 +139,9 @@ SLOW_TESTS = {
     "test_driver_contract.py::test_ensure_conf_applies_engine_tuning_on_bare_session",
     "test_driver_contract.py::test_entry_and_queries_on_vanilla_session",
     "test_fastx_source.py::test_fasta_stats_starts_only_the_worker_daemon",
+    "test_daemon.py::test_fasta_stats_over_unix_domain_sockets",
+    "test_daemon.py::test_local_workers_import_the_package_from_any_cwd",
+    "test_zipcache.py::test_installed_before_a_workers_first_call",
     "test_gopher.py::test_crawl_to_corpus_quality_tier",
     "test_html_dom.py::test_crawl_to_corpus_dom_extractors",
     "test_linkgraph.py::test_pagerank_warm_start_same_fixed_point",

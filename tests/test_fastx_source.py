@@ -171,8 +171,9 @@ spark.stop()
 
 def test_fasta_stats_starts_only_the_worker_daemon(tmp_path):
     """One ``fasta_stats`` in a fresh session leaves one Python daemon
-    under the JVM, the executors' ``pyspark.worker``: the scan is
-    planned in the driver, so no data-source planner daemon starts."""
+    under the JVM, the package's daemon serving the executors'
+    ``pyspark.worker``: the scan is planned in the driver, so no
+    data-source planner daemon (``pyspark.sql.worker.*``) starts."""
     import ast
     import subprocess
     import sys
@@ -187,9 +188,9 @@ def test_fasta_stats_starts_only_the_worker_daemon(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("CHILDREN"))
     children = ast.literal_eval(line.split(" ", 1)[1]).splitlines()
-    daemons = [c.split("pyspark.daemon", 1)[1].split() for c in children
-               if "pyspark.daemon" in c]
-    assert daemons == [["pyspark.worker"]], children
+    daemons = [c.split(" -m ", 1)[1].split() for c in children if " -m " in c]
+    assert daemons == [["polars_fastx_spark._daemon", "pyspark.worker"]], children
+    assert not any("pyspark.sql.worker" in c for c in children), children
 
 
 @pytest.mark.parametrize("split", [0, -5])

@@ -101,8 +101,15 @@ def test_deleted_archive_behaves_as_unwrapped(archive):
     assert path not in zipimport._zip_directory_cache
 
 
-def test_installed_inside_spark_worker(spark):
+def _wrapped_probe():
+    """A ``mapInPandas`` function (nested, so it is pickled by value)
+    reporting whether the wrapper is installed, and whether it handled
+    the invalidation that ran before this call: every zip archive an
+    importer on the path reads is recorded at the directory zipimport
+    holds."""
+
     def probe(batches):
+        import sys
         import zipimport
 
         import pandas as pd
@@ -111,17 +118,56 @@ def test_installed_inside_spark_worker(spark):
 
         for _ in batches:
             pass
-        yield pd.DataFrame(
-            {"installed": [zipimport.zipimporter.invalidate_caches
-                           is zc._invalidate_caches]}
+        archives = {imp.archive for imp in sys.path_importer_cache.values()
+                    if isinstance(imp, zipimport.zipimporter)}
+        recorded = all(
+            a in zc._read_at
+            and zc._read_at[a][1] is zipimport._zip_directory_cache.get(a)
+            for a in archives
         )
+        yield pd.DataFrame({
+            "installed": [zipimport.zipimporter.invalidate_caches
+                          is zc._invalidate_caches],
+            "recorded": [recorded or sys.version_info >= (3, 13)],
+        })
 
+    return probe
+
+
+def test_installed_inside_spark_worker(spark):
+    """Forked from the package daemon, a worker has the wrapper before
+    its first call, so no call of it, first or later, re-reads an archive."""
     rows = (
-        spark.range(1).coalesce(1)
-        .mapInPandas(probe, "installed boolean")
+        spark.range(8, numPartitions=8)
+        .mapInPandas(_wrapped_probe(), "installed boolean, recorded boolean")
         .collect()
     )
-    assert [r.installed for r in rows] == [True]
+    assert [(r.installed, r.recorded) for r in rows] == [(True, True)] * 8
+
+
+_FIRST_CALL = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from polars_fastx_spark.session import builder
+from tests.test_zipcache import _wrapped_probe
+
+spark = builder("first-call", master="local[1]",
+                extra_conf={"spark.ui.enabled": "false"}).getOrCreate()
+rows = spark.range(1).mapInPandas(
+    _wrapped_probe(), "installed boolean, recorded boolean").collect()
+print("ROWS", [(r.installed, r.recorded) for r in rows])
+spark.stop()
+"""
+
+
+def test_installed_before_a_workers_first_call():
+    """The first Python task of a fresh session runs in a fresh worker."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _FIRST_CALL, str(REPO)], cwd=REPO,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS [(True, True)]" in proc.stdout.splitlines()
 
 
 _CHECK = (
