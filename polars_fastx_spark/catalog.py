@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from polars_fastx_spark import session
 from polars_fastx_spark.functions import psl as pslf
 from polars_fastx_spark.functions import seq as sq
 from polars_fastx_spark.functions import sketches
@@ -2128,10 +2129,10 @@ def l_novel_docs(spark, sf_dir):
 )
 def l_leakage_audit(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_candidates(
+    pairs = session.persist(dedup.minhash_lsh_candidates(
         d, "doc_id", "text", shingle_k=5, num_hashes=16, bands=4, family="md5",
         collapse_exact=False,  # the audit COUNTS pairs — all-pairs contract
-    ).persist()
+    ))
     plain = sampling.assign_splits(d.select("doc_id"), "doc_id").select(
         "doc_id", F.col("split").alias("ps")
     )

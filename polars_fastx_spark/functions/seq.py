@@ -10,8 +10,9 @@ higher-order functions over arrays/maps, so they scale with executor
 parallelism.
 
 The stats expressions (length, gc_content, n_count, generate_hash,
-codon_usage, kmer_frequencies) are each ONE Spark SQL text template
-(the ``*_sql`` functions), handed to the JVM in one parse through
+codon_usage, kmer_frequencies), translate_protein and longest_orf are
+each ONE Spark SQL text template (the ``*_sql`` functions), handed to
+the JVM in one parse through
 :func:`~polars_fastx_spark.functions.exprs.let_sql`. Polars builds its
 expressions in-process for free; here every ``Column`` node built
 through the Python API is 5-7 py4j round trips, and the node-by-node
@@ -38,6 +39,18 @@ Exact semantics preserved (SURVEY.md §2.8):
 - Both maps take their tokens from one regex pass per row (O(len)),
   each token uppercased on its own like the reference's
   ``seq[i:i+k].upper()``; positions are code points, as in Python.
+- ASCII rows skip Spark's ``upper``. The first ``upper`` in a JVM runs
+  ICU's case mapper (``spark.sql.icu.caseMappings.enabled``, on by
+  default), which initializes ``CollationAwareUTF8String``; that class
+  initializer fills ``codepointOneToManyTitleCaseLookupTable`` from all
+  1,114,112 code points, ~1.7 s, which was most of a one-shot
+  ``fasta_stats`` task. A row whose code points are all ASCII
+  (``octet_length = length``) is uppercased by ``translate`` instead,
+  which is exact there; any other row keeps ``upper``, exact where an
+  uppercase expands (``ß`` → ``SS``). The ICU conf stays on: off, the
+  non-ASCII rows would depend on the JVM's default locale.
+  :func:`_ascii_upper_sql` makes the choice for every ``seq`` function
+  that uppercases.
 - ``generate_hash``: md5 hexdigest of UTF-8 bytes truncated to the first
   ``length`` hex chars (fastx_parsers.py:47-48).
 
@@ -53,6 +66,8 @@ A ``pandas_udf`` transliteration of the reference's Python lives in
 
 from __future__ import annotations
 
+import string
+from collections.abc import Callable
 from functools import partial
 
 from pyspark.sql import Column
@@ -131,6 +146,13 @@ def generate_hash(c: Column | str, hash_length: int = 32) -> Column:
     return let_sql(c, partial(generate_hash_sql, hash_length=hash_length))
 
 
+def _let_sql(value: str, var: str, body: str) -> str:
+    """SQL text of ``let var = value in body``: ``value`` evaluates
+    once per row however often ``body`` reads ``var`` (see
+    :mod:`~polars_fastx_spark.functions.exprs`)."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
 def _freq_map_sql(tokens: str) -> str:
     """tokens array<string> → map<token, relative_frequency>.
 
@@ -163,24 +185,51 @@ def _freq_map_sql(tokens: str) -> str:
     accumulator array per element — O(n·d) — measured 2.4x slower on
     4-mers at sf0.1.)
     """
-    runs = (
-        "element_at(transform(array(filter(sequence(1, size(__srt)), "
+    runs = _let_sql(
+        "filter(sequence(1, size(__srt)), "
         "__i -> CASE WHEN __i = 1 THEN true "
-        "ELSE element_at(__srt, __i) != element_at(__srt, __i - 1) END)), "
-        "__st -> map_from_entries(zip_with(__st, "
+        "ELSE element_at(__srt, __i) != element_at(__srt, __i - 1) END)",
+        "__st",
+        "map_from_entries(zip_with(__st, "
         "concat(slice(__st, 2, greatest(size(__st) - 1, 0)), array(size(__srt) + 1)), "
         "(__s, __e) -> named_struct('key', element_at(__srt, __s), "
-        "'value', (__e - __s) / size(__srt))))), 1)"
+        "'value', (__e - __s) / size(__srt))))",
     )
     empty = (
         "map_from_arrays(CAST(array() AS ARRAY<STRING>), "
         "CAST(array() AS ARRAY<DOUBLE>))"
     )
-    return (
-        f"element_at(transform(array(sort_array(filter({tokens}, "
-        f"__x -> NOT contains(__x, 'N')))), "
-        f"__srt -> CASE WHEN size(__srt) > 0 THEN {runs} ELSE {empty} END), 1)"
+    return _let_sql(
+        f"sort_array(filter({tokens}, __x -> NOT contains(__x, 'N')))", "__srt",
+        f"CASE WHEN size(__srt) > 0 THEN {runs} ELSE {empty} END",
     )
+
+
+def _ascii_upper_sql(s: str, ascii_body: Callable[[str], str], other: str) -> str:
+    """``ascii_body(t)``, ``t`` the SQL text of ``s`` uppercased by
+    ``translate``, on a row whose code points are all ASCII (its byte
+    and code-point lengths are equal); ``other`` on any other row, null
+    included. ``s`` must be an identifier or a lambda variable: the
+    template reads it several times.
+
+    Every place the ``seq`` namespace uppercases goes through here, so
+    they all make the same choice; the module docstring says why ASCII
+    rows skip ``upper``.
+    """
+    upper = (
+        f"translate({s}, {sql_str(string.ascii_lowercase)}, "
+        f"{sql_str(string.ascii_uppercase)})"
+    )
+    return (
+        f"CASE WHEN octet_length({s}) = length({s}) "
+        f"THEN {ascii_body(upper)} ELSE {other} END"
+    )
+
+
+def _upper_sql(s: str) -> str:
+    """SQL text of ``upper(s)``, ICU-free on all-ASCII rows (see
+    :func:`_ascii_upper_sql`)."""
+    return _ascii_upper_sql(s, lambda t: t, f"upper({s})")
 
 
 def _tokens_sql(s: str, pattern: str) -> str:
@@ -194,10 +243,22 @@ def _tokens_sql(s: str, pattern: str) -> str:
     the whole string first, matches the reference's
     ``seq[i:i+k].upper()``: a character that grows when uppercased
     (``ß`` → ``SS``) would otherwise shift every later token.
+
+    An all-ASCII row is the exception: no ASCII character grows, so its
+    tokens come from one pass over the string uppercased once by
+    ``translate``, and it never calls ``upper``. Spark's first ``upper``
+    in a JVM initializes ``CollationAwareUTF8String``, whose class
+    initializer fills ``codepointOneToManyTitleCaseLookupTable`` from
+    all 1,114,112 code points: ~1.7 s, most of a one-shot
+    ``fasta_stats`` task. Other rows keep the per-token ``upper``, and
+    ``spark.sql.icu.caseMappings.enabled`` stays on: off, their case
+    mapping would follow the JVM's default locale.
     """
-    return (
-        f"transform(regexp_extract_all({s}, {sql_str(pattern)}, 1), "
-        f"__u -> upper(__u))"
+    pat = sql_str(pattern)
+    return _ascii_upper_sql(
+        s,
+        lambda t: f"regexp_extract_all({t}, {pat}, 1)",
+        f"transform(regexp_extract_all({s}, {pat}, 1), __u -> upper(__u))",
     )
 
 
@@ -243,6 +304,12 @@ def kmer_frequencies(c: Column | str, k: int = 3) -> Column:
     return let_sql(c, partial(kmer_frequencies_sql, k=k))
 
 
+#: ``translate`` pairs of :func:`reverse_complement`
+_COMPLEMENT = ("ACGTacgtRYKMrykmBVDHbvdh", "TGCAtgcaYRMKyrmkVBHDvbhd")
+#: an open reading frame in protein space: start, no stop, stop
+_ORF_PATTERN = r"M[^*]*\*"
+
+
 def reverse_complement(c: Column | str) -> Column:
     """Reverse complement of a DNA sequence — the strand flip every
     FASTX pipeline needs (the reference's seq namespace lacks it; a
@@ -252,8 +319,7 @@ def reverse_complement(c: Column | str) -> Column:
     e.g. N, gaps — map to themselves where undefined pairs exist) and
     ``reverse`` flips the order.
     """
-    fwd = "ACGTacgtRYKMrykmBVDHbvdh"
-    rev = "TGCAtgcaYRMKyrmkVBHDvbhd"
+    fwd, rev = _COMPLEMENT
     return F.reverse(F.translate(_col(c), fwd, rev))
 
 
@@ -266,90 +332,99 @@ def transcribe(c: Column | str) -> Column:
 CODON_TABLE: dict[str, str] = {"AAA": "K", "AAC": "N", "AAG": "K", "AAT": "N", "ACA": "T", "ACC": "T", "ACG": "T", "ACT": "T", "AGA": "R", "AGC": "S", "AGG": "R", "AGT": "S", "ATA": "I", "ATC": "I", "ATG": "M", "ATT": "I", "CAA": "Q", "CAC": "H", "CAG": "Q", "CAT": "H", "CCA": "P", "CCC": "P", "CCG": "P", "CCT": "P", "CGA": "R", "CGC": "R", "CGG": "R", "CGT": "R", "CTA": "L", "CTC": "L", "CTG": "L", "CTT": "L", "GAA": "E", "GAC": "D", "GAG": "E", "GAT": "D", "GCA": "A", "GCC": "A", "GCG": "A", "GCT": "A", "GGA": "G", "GGC": "G", "GGG": "G", "GGT": "G", "GTA": "V", "GTC": "V", "GTG": "V", "GTT": "V", "TAA": "*", "TAC": "Y", "TAG": "*", "TAT": "Y", "TCA": "S", "TCC": "S", "TCG": "S", "TCT": "S", "TGA": "*", "TGC": "C", "TGG": "W", "TGT": "C", "TTA": "L", "TTC": "F", "TTG": "L", "TTT": "F"}
 
 
+#: amino acids by base-4 codon value (A=0, C=1, G=2, T=3), then the 'X'
+#: of every codon with a base outside ACGT, as one SQL array literal
+_AA_BY_INDEX_SQL = "array({})".format(", ".join(
+    [sql_str(CODON_TABLE[b1 + b2 + b3])
+     for b1 in "ACGT" for b2 in "ACGT" for b3 in "ACGT"] + ["'X'"]
+))
+
+
+def _base4_sql(ch: str) -> str:
+    # a base outside ACGT (null included) maps to a sentinel that puts
+    # any codon holding it past 63, not to null: a null index reaching
+    # element_at inside a lambda hits a codegen NullPointerException
+    return (
+        f"CASE {ch} WHEN 'A' THEN 0 WHEN 'C' THEN 1 WHEN 'G' THEN 2 "
+        f"WHEN 'T' THEN 3 ELSE 1000 END"
+    )
+
+
+def translate_protein_sql(s: str) -> str:
+    """SQL text of :func:`translate_protein` over the identifier or
+    lambda variable ``s``."""
+    idx = " + ".join(
+        f"{_base4_sql(f'element_at(__ch, __i * 3 + {j})')} * {w}"
+        for j, w in ((1, 16), (2, 4), (3, 1))
+    )
+    n_codons = "CAST(floor(length(__s) / 3) AS INT)"
+    protein = (
+        f"CASE WHEN {n_codons} >= 1 THEN array_join(transform("
+        f"sequence(0, {n_codons} - 1), "
+        f"__i -> element_at({_AA_BY_INDEX_SQL}, least({idx}, 64) + 1)), '') "
+        f"ELSE '' END"
+    )
+    chars = _let_sql("split(__s, '')", "__ch", protein)
+    return _let_sql(
+        _upper_sql(s), "__s",
+        f"CASE WHEN __s IS NULL THEN CAST(NULL AS STRING) ELSE {chars} END",
+    )
+
+
 def translate_protein(c: Column | str) -> Column:
     """Frame-0 protein translation under the standard genetic code:
-    non-overlapping uppercase codons index a 64-element array literal
+    non-overlapping uppercase codons index a 65-element array literal
     by base-4 codon value (O(1) ``element_at`` — JVM codegen, no UDF);
     codons containing N/other ambiguity translate to 'X'; stops render
     '*' and translation does NOT halt at them (whole-frame translation
     — the caller slices ORFs first if stop-terminated products are
     wanted). Trailing 1-2 leftover bases are ignored, like
-    :func:`codon_usage`.
+    :func:`codon_usage`. NULL in → NULL out; '' for a non-null input
+    shorter than one codon.
+
+    The uppercased input and its char array are let-bound: read inside
+    the per-codon lambda, either would be re-evaluated once per codon,
+    O(len²) per row for a computed input such as :func:`longest_orf`'s
+    frames. Chars come from a split-once array, not
+    ``substring(s, i*3+1, 3)``: a UTF-8 substring walks the bytes up to
+    its offset (the cost :func:`_tokens_sql` avoids). Every codon with
+    a base outside ACGT lands past index 63, and ``least(…, 64)`` sends
+    it to the trailing 'X'.
     """
-    # Let-bind the (possibly expensive) input expression via a 1-element
-    # array + transform lambda so it evaluates ONCE per row: substring
-    # inside the per-codon transform would otherwise re-evaluate the
-    # whole input tree per codon — O(len²) per row when callers pass a
-    # computed chain (longest_orf feeds reverse-complement frames;
-    # measured 137 s → ~20 s for the 6-frame ORF scan at sf0.1).
-    # Amino acids indexed by base-4 codon value (A=0, C=1, G=2, T=3):
-    # one O(1) array lookup per codon instead of a linear scan through
-    # a 64-entry MAP literal, and O(1) char access through a split-once
-    # char array instead of substring(s, i*3+1, 3) — UTF8 substring
-    # walks bytes to the char offset, so per-codon substrings into the
-    # full sequence are O(position) each, O(len²) per row in total
-    # (the cost codon_usage/kmer_frequencies avoid with one regex pass,
-    # see _tokens).
-    aa_by_index = F.array(
-        *[
-            F.lit(CODON_TABLE[b1 + b2 + b3])
-            for b1 in "ACGT"
-            for b2 in "ACGT"
-            for b3 in "ACGT"
-        ]
-    )
+    return let_sql(c, translate_protein_sql)
 
-    # Ambiguity codes map to a large sentinel, NOT null: a null index
-    # reaching element_at inside a higher-order-function lambda hits a
-    # codegen NullPointerException (only constant folding saves the
-    # non-lambda case), so the invalid-codon branch must be selected by
-    # an ordinary comparison instead of null propagation.
-    def _base4(ch: Column) -> Column:
+
+def longest_orf_sql(s: str) -> str:
+    """SQL text of :func:`longest_orf` over the identifier or lambda
+    variable ``s``."""
+    fwd, rev = _COMPLEMENT
+
+    def frame_max(v: str, f: int) -> str:
+        frame = _let_sql(
+            f"substring({v}, {f}, length({v}) - {f} + 1)", "__fr",
+            translate_protein_sql("__fr"),
+        )
         return (
-            F.when(ch == "A", 0)
-            .when(ch == "C", 1)
-            .when(ch == "G", 2)
-            .when(ch == "T", 3)
-            .otherwise(1000)
+            f"coalesce(array_max(transform(regexp_extract_all({frame}, "
+            f"{sql_str(_ORF_PATTERN)}, 0), __m -> length(__m))), 0)"
         )
 
-    def body(s: Column) -> Column:
-        from polars_fastx_spark.functions.exprs import let
-
-        n_codons = F.floor(F.length(s) / 3).cast("int")
-
-        def with_chars(chars: Column) -> Column:
-            def codon_aa(i: Column) -> Column:
-                idx = (
-                    _base4(F.element_at(chars, i * 3 + 1)) * 16
-                    + _base4(F.element_at(chars, i * 3 + 2)) * 4
-                    + _base4(F.element_at(chars, i * 3 + 3))
-                )
-                # any non-ACGT base pushes idx past 63 via the sentinel
-                return F.when(
-                    idx <= 63, F.element_at(aa_by_index, idx + 1)
-                ).otherwise(F.lit("X"))
-
-            aa = F.transform(F.sequence(F.lit(0), n_codons - 1), codon_aa)
-            return F.when(n_codons >= 1, F.array_join(aa, "")).otherwise(
-                F.lit("")
-            )
-
-        # NULL in -> NULL out (Spark/Polars null semantics); '' only
-        # for non-null inputs shorter than one codon. Tested on the
-        # LET-BOUND s (upper() propagates NULL) — an outer
-        # _col(c).isNull() would re-evaluate the whole input tree per
-        # row, undoing the let for computed chains like longest_orf's
-        # per-frame substrings. The char array is let-bound for the
-        # same reason: a bare split(s,'') referenced inside the
-        # per-codon lambda would re-split once per codon.
-        return F.when(s.isNull(), F.lit(None).cast("string")).otherwise(
-            let(F.split(s, ""), with_chars)
-        )
-
-    from polars_fastx_spark.functions.exprs import let
-
-    return let(F.upper(_col(c)), body)
+    best = "greatest({})".format(", ".join(
+        [frame_max("__up", f) for f in (1, 2, 3)]
+        + [frame_max("__rc", f) for f in (1, 2, 3)]
+    ))
+    strands = _let_sql(
+        _upper_sql(s), "__up",
+        _let_sql(
+            f"reverse(translate(__up, {sql_str(fwd)}, {sql_str(rev)}))",
+            "__rc", best,
+        ),
+    )
+    # NULL in -> NULL out; 0 means "no ORF", not "no sequence"
+    return (
+        f"CASE WHEN {s} IS NULL THEN CAST(NULL AS BIGINT) "
+        f"ELSE CAST({strands} * 3 AS BIGINT) END"
+    )
 
 
 def longest_orf(c: Column | str) -> Column:
@@ -365,27 +440,10 @@ def longest_orf(c: Column | str) -> Column:
     cross-frame overlap is missed. Codons with ambiguity translate to
     'X' which [^*] happily spans — an ORF may contain unknown residues
     but start/stop must be certain. Pure codegen: 6 translate calls +
-    6 regexp scans, zero shuffles.
+    6 regexp scans, zero shuffles. The uppercased sequence and its
+    reverse complement are each let-bound once per row.
     """
-    up = F.upper(_col(c))
-    rc = reverse_complement(up)
-    pat = F.lit(r"M[^*]*\*")
-
-    def frame_max(seq_col: Column, f: int) -> Column:
-        prot = translate_protein(F.substring(seq_col, f, F.length(seq_col) - f + 1))
-        lens = F.transform(
-            F.regexp_extract_all(prot, pat, 0), lambda m: F.length(m)
-        )
-        return F.coalesce(F.array_max(lens), F.lit(0))
-
-    best_aa = F.greatest(
-        *[frame_max(up, f) for f in (1, 2, 3)],
-        *[frame_max(rc, f) for f in (1, 2, 3)],
-    )
-    # NULL in -> NULL out; 0 means "no ORF", not "no sequence"
-    return F.when(_col(c).isNull(), F.lit(None).cast("bigint")).otherwise(
-        (best_aa * 3).cast("bigint")
-    )
+    return let_sql(c, longest_orf_sql)
 
 
 def gc_skew(c: Column | str) -> Column:

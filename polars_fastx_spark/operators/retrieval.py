@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from polars_fastx_spark import session
+
 
 def rrf_fuse(
     sources: list[tuple[DataFrame, str]],
@@ -137,20 +139,21 @@ def mmr_rerank(
     # materialization boundary the iterative graph loops use. The pool
     # is <= queries x pool_n rows in EXECUTOR storage (never collected
     # to the driver), so the boundary is cheap at any query-batch size.
-    pool = (
+    pool = session.local_checkpoint(
         cand.withColumn("__rn", F.row_number().over(w_pool))
         .filter(F.col("__rn") <= pool_n)
         .drop("__rn")
-        .localCheckpoint()
     )
     # Each round's pick gets the same checkpoint boundary (a
     # <= len(query_ids)-row frame), keeping the plan linear in k.
-    sel = pool.withColumn("__rn", F.row_number().over(w_pool)).filter(
-        F.col("__rn") == 1
-    ).select(
-        "qid", "vec_id", "v", "rel",
-        F.lit(1).alias("rank"), F.col("rel").alias("mmr"),
-    ).localCheckpoint()
+    sel = session.local_checkpoint(
+        pool.withColumn("__rn", F.row_number().over(w_pool))
+        .filter(F.col("__rn") == 1)
+        .select(
+            "qid", "vec_id", "v", "rel",
+            F.lit(1).alias("rank"), F.col("rel").alias("mmr"),
+        )
+    )
     for r in range(2, k + 1):
         prev = sel.select("qid", F.col("vec_id").alias("svid"), F.col("v").alias("sv"))
         remaining = pool.join(
@@ -177,11 +180,10 @@ def mmr_rerank(
         w_pick = Window.partitionBy("qid").orderBy(
             F.col("mmr").desc(), F.col("vec_id").asc()
         )
-        pick = (
+        pick = session.local_checkpoint(
             scored.withColumn("__rn", F.row_number().over(w_pick))
             .filter(F.col("__rn") == 1)
             .select("qid", "vec_id", "v", "rel", F.lit(r).alias("rank"), "mmr")
-            .localCheckpoint()
         )
         sel = sel.unionByName(pick)
     return sel.select(

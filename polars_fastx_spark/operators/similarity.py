@@ -30,6 +30,8 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from polars_fastx_spark import session
+
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
     """Σ aᵢbᵢ via zip_with+aggregate — JVM higher-order, no UDF."""
@@ -356,7 +358,7 @@ def cosine_topk_numpy(
             return _self_topk_single_cell(df, id_col, vec_col, k, id_type)
     iblocks, inb = _hash_blocks(df, id_col, vec_col, block_rows, n=n)
     if self_pairs and inb > 1:
-        iblocks = iblocks.persist()  # self-join references it twice
+        iblocks = session.persist(iblocks)  # self-join references it twice
     qblocks, qnb = (
         (iblocks, inb)
         if self_pairs
@@ -475,7 +477,7 @@ def cosine_pairs_above_numpy(
     id_type = df.schema[id_col].dataType.simpleString()
     blocks, nb = _hash_blocks(df, id_col, vec_col, block_rows, n=n)
     if nb > 1:
-        blocks = blocks.persist()  # self-join references it twice
+        blocks = session.persist(blocks)  # self-join references it twice
     paired = _block_pairs(blocks, nb, blocks, nb, self_pairs=True)
 
     def cell_pairs(batches):

@@ -26,8 +26,9 @@ which releases every frame cached through ``persist`` /
 ``local_checkpoint`` inside it (nested operators too), raised or not,
 except the one it hands out with ``keep``. Outside any scope those
 frames stay cached, which is how lazily returned frames (the MinHash
-band table) keep their cache. ``tests/test_cache_lifecycle.py`` lists
-the few direct ``persist``/``localCheckpoint`` calls left elsewhere.
+band table, ``read_fastx``, the MMR picks) keep their cache.
+``tests/test_cache_lifecycle.py`` checks that no other module calls
+``persist``/``cache``/``localCheckpoint`` directly.
 """
 
 from __future__ import annotations

@@ -59,7 +59,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-from polars_fastx_spark.session import register_data_source
+from polars_fastx_spark.session import persist, register_data_source
 from polars_fastx_spark.sources import parser
 from polars_fastx_spark.sources.splits import (
     byte_ranges,
@@ -298,8 +298,10 @@ def scan_fastx(
 
 def read_fastx(spark: SparkSession, path: str, **kwargs) -> DataFrame:
     """Eager twin (reference: src/polars_fastx/fastx_parsers.py:132-134):
-    scan + materialize (cache + count forces the read)."""
-    df = scan_fastx(spark, path, **kwargs).cache()
+    scan + materialize (cache + count forces the read). The cache is
+    released with an enclosing ``session.cache_scope``; outside one it
+    stays until the caller releases it."""
+    df = persist(scan_fastx(spark, path, **kwargs))
     df.count()
     return df
 

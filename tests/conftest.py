@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import os
+import re
+import subprocess
 import sys
+import textwrap
 from pathlib import Path
 
 import pytest
@@ -11,6 +14,40 @@ sys.path.insert(0, str(REPO))
 
 FIXTURES = Path(__file__).parent / "fixtures"
 TESTDATA = Path(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"))
+
+
+#: one JVM class-initialization line of ``-Xlog:class+init=info``
+_CLASS_INIT = re.compile(r"Initializing '([^']+)'")
+
+
+def jvm_initialized_classes(snippet: str, workdir: Path) -> set[str]:
+    """Run ``snippet`` in a fresh Python process, with ``spark`` bound to
+    a new ``local[1]`` session from ``session.builder``, and return the
+    classes its JVM initialized (``org/apache/...`` names, as the JVM
+    logs them).
+
+    It counts instead of timing: a class whose static initializer is
+    expensive shows up here whatever the machine's load. The JVM writes
+    its ``-Xlog:class+init=info`` log under ``workdir``."""
+    log = Path(workdir) / "class-init.log"
+    conf = {
+        "spark.ui.enabled": "false",
+        "spark.driver.extraJavaOptions": f"-Xlog:class+init=info:file={log}",
+    }
+    program = (
+        "from polars_fastx_spark.session import builder\n"
+        f"spark = builder('class-init', master='local[1]', extra_conf={conf!r})"
+        ".getOrCreate()\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        f"{textwrap.dedent(snippet)}\n"
+        "spark.stop()\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", program], capture_output=True, text=True,
+        timeout=600, cwd=REPO,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return set(_CLASS_INIT.findall(log.read_text()))
 
 
 @pytest.fixture(scope="session")
@@ -139,6 +176,7 @@ SLOW_TESTS = {
     "test_driver_contract.py::test_ensure_conf_applies_engine_tuning_on_bare_session",
     "test_driver_contract.py::test_entry_and_queries_on_vanilla_session",
     "test_fastx_source.py::test_fasta_stats_starts_only_the_worker_daemon",
+    "test_seq_functions.py::test_fasta_stats_on_ascii_skips_the_icu_case_mapper",
     "test_daemon.py::test_fasta_stats_over_unix_domain_sockets",
     "test_daemon.py::test_local_workers_import_the_package_from_any_cwd",
     "test_zipcache.py::test_installed_before_a_workers_first_call",

@@ -12,16 +12,12 @@ from pyspark.sql import functions as F
 
 PKG = Path(__file__).resolve().parent.parent / "polars_fastx_spark"
 
-#: direct cache calls allowed outside session.py, per file: frames that
-#: are returned lazily and must stay cached for their caller (the
-#: blocked-kNN self-join blocks, the MMR pool and picks, read_fastx's
-#: documented cache, l_leakage_audit's pairs)
-_LAZY_RETURN_SITES = {
-    "operators/similarity.py": 2,
-    "operators/retrieval.py": 3,
-    "sources/fastx.py": 1,
-    "catalog.py": 1,
-}
+#: direct cache calls allowed outside session.py, per file. None are
+#: left: a frame returned lazily (the blocked-kNN self-join blocks, the
+#: MMR pool and picks, read_fastx's cache, l_leakage_audit's pairs) is
+#: cached through the helpers too, stays cached outside any scope, and
+#: is released with an enclosing ``cache_scope``.
+_LAZY_RETURN_SITES: dict[str, int] = {}
 #: a frame's own cache methods; ``session.persist(...)`` is the helper
 _DIRECT_CACHE_CALL = re.compile(
     r"(?<!session)\.(?:persist|unpersist|localCheckpoint)\("
@@ -74,6 +70,31 @@ def test_cache_scope_releases_on_raise_and_keep_hands_a_frame_out(
         # the inner scope handed it out: still readable here
         assert persistent_rdd_ids() - before
         assert kept.count() == 7
+    assert not persistent_rdd_ids() - before
+
+
+def test_lazily_returned_caches_follow_the_enclosing_scope(
+    spark, persistent_rdd_ids
+):
+    """``read_fastx``'s cache and ``mmr_rerank``'s checkpoints stay
+    while their scope is open and are freed when it closes."""
+    from polars_fastx_spark.operators.retrieval import mmr_rerank
+    from polars_fastx_spark.session import cache_scope
+    from polars_fastx_spark.sources.fastx import read_fastx
+    from tests.conftest import FIXTURES
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    before = persistent_rdd_ids()
+    with cache_scope():
+        reads = read_fastx(spark, str(FIXTURES / "basic.fasta"))
+        picks = mmr_rerank(emb, "vec_id", "embedding", [0, 1], k=3)
+        assert reads.is_cached
+        assert picks.count() == 6
+        assert persistent_rdd_ids() - before
+    assert not reads.is_cached
     assert not persistent_rdd_ids() - before
 
 

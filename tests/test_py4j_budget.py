@@ -31,6 +31,8 @@ BEFORE = {
     "q_agg_tpch1": 1059,
     "l_minhash_lsh": 2032,
     "l_simhash_neardup": 1730,
+    "k_translate_protein": 1215,
+    "k_longest_orf": 7527,
 }
 
 

@@ -312,23 +312,26 @@ def test_translate_and_orf_propagate_null(spark):
 
 
 #: rows whose code points and case mapping trip position arithmetic:
-#: null, shorter than k, lowercase with N, embedded newline, characters
-#: that grow when uppercased (ß -> SS, ﬁ -> FI) and non-BMP emoji
-#: (two UTF-16 units, one code point)
+#: null, shorter than k, lowercase with N, embedded newline, ASCII with
+#: one non-ASCII character, characters that grow when uppercased
+#: (ß -> SS, ﬁ -> FI) and non-BMP emoji (two UTF-16 units, one code
+#: point). The all-ASCII rows are uppercased by ``translate``, the
+#: others by ``upper``.
 CODE_POINT_ROWS = [None, "", "A", "AC", "acgtnNACGTacgn", "AC\nGT\nNAC",
-                   "straße straße", "ßßßß", "ﬁﬁﬁacg", "😀ACG😀T"]
+                   "ACGTacgtNé", "straße straße", "ßßßß", "ﬁﬁﬁacg", "😀ACG😀T"]
 
 
 def test_codon_kmer_code_point_parity(spark):
-    """codon_usage and kmer_frequencies (k = 1, 3, 4) equal the Python
-    reference exactly, code point for code point; null gives the empty
-    map. The k-mer regex must consume one code point per match: the
-    bare zero-width lookahead steps into the emoji's surrogate pair and
-    emits extra k-mers, which the last assertion pins."""
+    """codon_usage and kmer_frequencies (k = 1..4) equal the Python
+    reference exactly, code point for code point, on both sides of the
+    ASCII test; null gives the empty map. The k-mer regex must consume
+    one code point per match: the bare zero-width lookahead steps into
+    the emoji's surrogate pair and emits extra k-mers, which the last
+    assertion pins."""
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(CODE_POINT_ROWS)], "i int, s string"
     )
-    ks = (1, 3, 4)
+    ks = (1, 2, 3, 4)
     bare = F.expr(sq._freq_map_sql(sq._tokens_sql("s", "(?s)(?=(.{3}))")))
     rows = df.select(
         "i",
@@ -348,3 +351,76 @@ def test_codon_kmer_code_point_parity(spark):
 def test_kmer_frequencies_rejects_k_below_one():
     with pytest.raises(ValueError, match="k must be >= 1"):
         sq.kmer_frequencies("s", 0)
+
+
+def _py_translate(s: str | None) -> str | None:
+    """Frame-0 translation of ``s.upper()``, 'X' for any codon outside
+    the table."""
+    if s is None:
+        return None
+    u = s.upper()
+    return "".join(sq.CODON_TABLE.get(u[i:i + 3], "X")
+                   for i in range(0, len(u) - 2, 3))
+
+
+def _py_longest_orf(s: str | None) -> int | None:
+    import re
+
+    if s is None:
+        return None
+    up = s.upper()
+    rc = up.translate(str.maketrans(*sq._COMPLEMENT))[::-1]
+    prots = [_py_translate(strand[f:]) for strand in (up, rc) for f in range(3)]
+    return 3 * max([len(m) for p in prots for m in re.findall(sq._ORF_PATTERN, p)],
+                   default=0)
+
+
+def test_translate_and_orf_code_point_parity(spark):
+    """translate_protein and longest_orf uppercase through the same
+    ASCII-first helper as the maps, and equal Python twins on the same
+    rows."""
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(CODE_POINT_ROWS)], "i int, s string"
+    )
+    rows = df.select(
+        "i",
+        sq.translate_protein("s").alias("protein"),
+        sq.longest_orf("s").alias("orf"),
+    ).orderBy("i").collect()
+    for s, r in zip(CODE_POINT_ROWS, rows):
+        assert r["protein"] == _py_translate(s), repr(s)
+        assert r["orf"] == _py_longest_orf(s), repr(s)
+
+
+_FASTA_STATS_SNIPPET = """
+from polars_fastx_spark.pipeline import fasta_stats
+fasta_stats(spark, {fasta!r}, {out!r})
+"""
+
+#: soft-masked lowercase and N runs, as an assembly has them
+_ASCII_RECORDS = [">ctg1\nACGTACGTnnnnNNNNNNacgtacgtaATGAAATAA\n",
+                  ">ctg2 soft-masked\nacgtacgtacgtNNNNACGTTTTAGGGCCC\n"]
+
+
+@pytest.mark.parametrize("extra, initialized", [
+    ("", False),
+    (">odd\nACGßTAGGC\n", True),
+])
+def test_fasta_stats_on_ascii_skips_the_icu_case_mapper(
+    tmp_path, extra, initialized
+):
+    """A fresh session's ``fasta_stats`` over an all-ASCII FASTA never
+    initializes ``CollationAwareUTF8String``: its class initializer,
+    which ICU ``upper`` runs first, costs a JVM ~1.7 s. One non-ASCII
+    record still takes ``upper``, and initializes it."""
+    from tests.conftest import jvm_initialized_classes
+
+    fasta = tmp_path / "in.fasta"
+    fasta.write_text("".join(_ASCII_RECORDS) + extra)
+    snippet = _FASTA_STATS_SNIPPET.format(fasta=str(fasta), out=str(tmp_path / "out"))
+    classes = jvm_initialized_classes(snippet, tmp_path)
+    assert "org/apache/spark/unsafe/types/UTF8String" in classes
+    assert list((tmp_path / "out").glob("*.csv"))
+    assert (
+        "org/apache/spark/sql/catalyst/util/CollationAwareUTF8String" in classes
+    ) is initialized

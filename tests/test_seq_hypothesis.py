@@ -20,11 +20,26 @@ from polars_fastx_spark.functions import seq as sq
 
 # DNA-ish plus unicode and specials: multibyte chars pin char-vs-byte
 # semantics (length/translate/substring count characters, md5 hashes
-# UTF-8 bytes).
-ALPHABET = "ACGTNacgtn \t€ñ😀GC"
+# UTF-8 bytes), and ß, ﬁ, ŉ grow when uppercased (SS, FI, ʼN).
+ALPHABET = "ACGTNacgtn \t€ñ😀GCßﬁŉ"
+#: rows drawn from here are all ASCII, and take the seq maps'
+#: ``translate`` uppercase instead of ``upper``
+ASCII_ALPHABET = "ACGTNacgtn"
 
-texts = st.lists(
-    st.text(alphabet=ALPHABET, min_size=0, max_size=40), min_size=1, max_size=30
+# every batch mixes rows on both sides of the maps' ASCII test: at least
+# one pure-ASCII row and at least one holding a non-ASCII character
+_non_ascii = st.builds(
+    lambda head, ch, tail: head + ch + tail,
+    st.text(alphabet=ALPHABET, max_size=20),
+    st.sampled_from([ch for ch in ALPHABET if not ch.isascii()]),
+    st.text(alphabet=ALPHABET, max_size=20),
+)
+texts = st.builds(
+    lambda odd, rows, ascii_rows: [odd, *rows, *ascii_rows],
+    _non_ascii,
+    st.lists(st.text(alphabet=ALPHABET, max_size=40), max_size=14),
+    st.lists(st.text(alphabet=ASCII_ALPHABET, max_size=40),
+             min_size=1, max_size=15),
 )
 
 
