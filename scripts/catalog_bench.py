@@ -3,10 +3,14 @@
 artifact, so long-tail regressions are diffable round-over-round
 instead of only the 8-query headline in bench.py.
 
-Each query runs once after one warm-up of the session (JIT + codegen
-caches are shared across queries anyway; a per-query min-of-N at 175+
-queries would cost more wall-clock than it buys precision — the
-purpose is regression DIFFING, not absolute benchmarking).
+Each query runs once after one warm-up of the session (a per-query
+min-of-N at 240+ queries would cost more wall-clock than it buys
+precision — the purpose is regression DIFFING, not absolute
+benchmarking). So every query is timed cold for its own generated
+code: one sweep compiles ~3.1k distinct classes, each once, and they
+all fit the session's codegen class cache (``session.builder`` sizes
+it at 4096; Spark's default of 100 held only the last few queries'
+classes). The JIT is shared across queries.
 
 Usage: python scripts/catalog_bench.py [sf_dir] [out.json]
 Defaults: /root/testdata/sf0.1  BENCH_catalog_rN.json (N from env

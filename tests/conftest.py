@@ -20,23 +20,16 @@ TESTDATA = Path(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"))
 _CLASS_INIT = re.compile(r"Initializing '([^']+)'")
 
 
-def jvm_initialized_classes(snippet: str, workdir: Path) -> set[str]:
+def run_in_fresh_session(snippet: str, app: str,
+                         conf: dict[str, str] | None = None) -> str:
     """Run ``snippet`` in a fresh Python process, with ``spark`` bound to
-    a new ``local[1]`` session from ``session.builder``, and return the
-    classes its JVM initialized (``org/apache/...`` names, as the JVM
-    logs them).
-
-    It counts instead of timing: a class whose static initializer is
-    expensive shows up here whatever the machine's load. The JVM writes
-    its ``-Xlog:class+init=info`` log under ``workdir``."""
-    log = Path(workdir) / "class-init.log"
-    conf = {
-        "spark.ui.enabled": "false",
-        "spark.driver.extraJavaOptions": f"-Xlog:class+init=info:file={log}",
-    }
+    a new ``local[1]`` session from ``session.builder`` (UI off, plus
+    ``conf``), and return what it printed. Static confs such as the
+    codegen cache cap act only in a JVM launched this way."""
+    conf = {"spark.ui.enabled": "false", **(conf or {})}
     program = (
         "from polars_fastx_spark.session import builder\n"
-        f"spark = builder('class-init', master='local[1]', extra_conf={conf!r})"
+        f"spark = builder({app!r}, master='local[1]', extra_conf={conf!r})"
         ".getOrCreate()\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
         f"{textwrap.dedent(snippet)}\n"
@@ -47,7 +40,30 @@ def jvm_initialized_classes(snippet: str, workdir: Path) -> set[str]:
         timeout=600, cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    return proc.stdout
+
+
+def jvm_initialized_classes(snippet: str, workdir: Path) -> set[str]:
+    """Run ``snippet`` in a fresh session (``run_in_fresh_session``) and
+    return the classes its JVM initialized (``org/apache/...`` names, as
+    the JVM logs them).
+
+    It counts instead of timing: a class whose static initializer is
+    expensive shows up here whatever the machine's load. The JVM writes
+    its ``-Xlog:class+init=info`` log under ``workdir``."""
+    log = Path(workdir) / "class-init.log"
+    run_in_fresh_session(snippet, "class-init", {
+        "spark.driver.extraJavaOptions": f"-Xlog:class+init=info:file={log}",
+    })
     return set(_CLASS_INIT.findall(log.read_text()))
+
+
+def codegen_compiles(spark) -> int:
+    """Classes the session's JVM has compiled from generated code so far
+    (whole-stage, projection, ordering...): every compile that missed
+    Spark's codegen class cache. A count, so it holds under any load."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 @pytest.fixture(scope="session")
@@ -117,6 +133,7 @@ SLOW_TESTS = {
     "test_ann_index.py::test_redelivered_pinned_epoch_add_is_idempotent",
     "test_bgzf.py::test_bgzf_fasta_scan_splits_and_matches_whole",
     "test_charset.py::test_decode_payloads_on_streaming_warc",
+    "test_codegen_cache.py::test_warm_catalog_pass_compiles_nothing",
     "test_containment_index.py::test_add_extends_history_without_reshingling",
     "test_containment_index.py::test_compact_applies_tombstones_physically",
     "test_containment_index.py::test_compaction_preserves_gate_results",

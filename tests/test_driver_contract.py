@@ -67,14 +67,19 @@ import __spark_entry__ as E
 out = E.queries()["l_dedup_groups"](spark, "/root/testdata/sf0.001").collect()
 assert out is not None
 from polars_fastx_spark.session import _DEFAULTS
-for k in (
+# every key a live session can take was applied; the rest (the static
+# codegen cache cap, the executorEnv launch settings) were skipped
+modifiable = [k for k in _DEFAULTS if spark.conf.isModifiable(k)]
+assert set(modifiable).issuperset((
     "spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
     "spark.sql.adaptive.coalescePartitions.enabled",
     "spark.sql.adaptive.skewJoin.enabled",
     "spark.sql.execution.arrow.pyspark.enabled",
     "spark.sql.session.timeZone",
-):
+))
+assert not spark.conf.isModifiable("spark.sql.codegen.cache.maxEntries")
+for k in modifiable:
     got = spark.conf.get(k)
     assert got == _DEFAULTS[k], (k, got, _DEFAULTS[k])
 print("TUNED-OK")
