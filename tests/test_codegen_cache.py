@@ -3,7 +3,7 @@
 Spark keeps the classes it compiles from generated code in one JVM-wide
 cache of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.
 The benchmark's 11 catalog queries make ~142 classes a pass, so at 100 the
-cache evicts in a cycle and every warm pass compiled ~126 classes again.
+cache evicts in a cycle and every warm pass compiles ~126 classes again.
 ``session.builder`` sizes the cache for a whole catalog sweep. The cap is
 a static conf, so the pass counts run in a JVM of their own."""
 
